@@ -281,13 +281,12 @@ object Bench {
       if (only.nonEmpty) Seq.empty else {
         val staged = graft.tools.ThroughputBench.stageBatches(
           spark, sfDir, numBatches = 10)
-        // recognized_tws = the transformWithState/ListState UR engine;
         // recognized_variant = open props stored as Spark 4 VariantType;
         // conversations = the alignment-data mode (session-window SFT
         // assembly in-stream); preference_pairs = its DPO twin
         // (tumbling-day extremes in-stream); best_of_n = the
         // rejection-sampling twin (single-struct argmax state)
-        Seq("recognized", "recognized_tws", "recognized_variant", "dedup",
+        Seq("recognized", "recognized_variant", "dedup",
             "conversations", "preference_pairs", "best_of_n",
             "grpo_stats", "leaderboard")
           .map { mode =>

@@ -643,9 +643,9 @@ object Queries {
     * (userId + the context.traits object — lodash merge via dotted
     * setPath); a second identify in batch 2 finds an empty buffer and
     * emits only itself. All nine expected emissions are value-pinned.
-    * `engine`: "classic" (flatMapGroupsWithState) or "tws"
-    * (transformWithState / ListState — the O(1)-append scale twin). */
-  private def urGoldenRun(s: SparkSession, engine: String): DataFrame = {
+    * `rocksdb`: run the state on the RocksDB provider (the one
+    * production streams use) instead of the default HDFS-backed one. */
+  private def urGoldenRun(s: SparkSession, rocksdb: Boolean): DataFrame = {
     val in = Files.createTempDirectory("ur-gold-in").toString
     val traits = """{\"email\":\"test@example.com\",\"name\":\"Test User\"}"""
     def page(id: String, ts: String, ident: Boolean) =
@@ -670,7 +670,7 @@ object Queries {
     // session width (the statePartitions rule)
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "2")
-    if (engine == "tws")
+    if (rocksdb)
       s2.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
@@ -683,8 +683,7 @@ object Queries {
     val resolved = UserRecognition.streamingResolveConfigured(envStream,
       UserRecognition.URConfig(
         identifierFields = Seq("user_id", "context.traits"),
-        jsonObjectFields = Set("context.traits")),
-      engine = engine)
+        jsonObjectFields = Set("context.traits")))
     val out = Files.createTempDirectory("ur-gold-out").toString
     val cp = Files.createTempDirectory("ur-gold-cp").toString
     val q = resolved.toDF("payload").writeStream
@@ -1860,23 +1859,23 @@ object Queries {
     // itself. All nine expected emissions are value-pinned, including
     // the traits deep-merged into events that had none.
     ("j1d_ur_golden",
-      ((s, dir) => urGoldenRun(s, "classic")),
+      ((s, dir) => urGoldenRun(s, rocksdb = false)),
       urGoldenOracle),
-    // J1e: the SAME golden replay through the transformWithState twin
-    // (URGenProcessor: ListState buffer, O(1) appends — the engine the
-    // 100 TB deployment runs) — proves the scale path emits the
-    // reference's exact pinned sets, not just output-equality vs the
-    // classic operator on synthetic streams.
+    // J1e: the SAME golden replay with the state on the RocksDB
+    // provider (the one production streams run; j1d runs on the default
+    // HDFS-backed provider) — the state machine must emit the
+    // reference's exact pinned sets whichever store backs it. The id
+    // keeps its historical `_tws` suffix.
     ("j1e_ur_golden_tws",
-      ((s, dir) => urGoldenRun(s, "tws")),
+      ((s, dir) => urGoldenRun(s, rocksdb = true)),
       urGoldenOracle),
     // J1f (beyond-ref operational guard): maxBufferPerKey — a hot
     // anonymous key's buffer stops growing at the cap; capped events
     // still DELIVER unchanged but can never be back-filled with an
-    // identity (drop-newest, O(1) in both engines — see
-    // URConfig.maxBufferPerKey). Cap 3 spans two batches (2 buffered,
-    // then 1 more, then two over the cap), so the persisted counter —
-    // not an in-batch length — is what the oracle pins.
+    // identity (drop-newest — see URConfig.maxBufferPerKey). Cap 3
+    // spans two batches (2 buffered, then 1 more, then two over the
+    // cap), so the persisted counter — not an in-batch length — is what
+    // the oracle pins.
     ("j1f_ur_buffer_cap",
       ((s, dir) => {
       val in = Files.createTempDirectory("ur-cap-in").toString

@@ -28,9 +28,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * source is the FIRST identified event at-or-after each row within the
   * lookback window (exactly the event that would trigger eviction in the
   * streaming form). Single shuffle on the anonymous key (window
-  * functions), no join. [[streamingResolve]] is the production streaming
-  * form: `flatMapGroupsWithState` with event-time timeout as the TTL
-  * (RocksDB-backed state at scale, one shuffle on the key).
+  * functions), no join. The streaming form is ONE state machine,
+  * [[urGenTransition]] on `flatMapGroupsWithState` with event-time
+  * timeout as the TTL (RocksDB-backed state at scale, one shuffle on the
+  * key), reached through [[streamingResolveConfigured]] on a parsed
+  * stream or [[tagRawLines]] + [[resolveTagged]] on raw lines (the
+  * production path, [[graft.streaming.EventPipeline.startRecognized]]).
   *
   * Identifier fields may be dotted paths (`context.traits`), read AND
   * write side, matching the reference's `set(res, path, f)` (:66): the
@@ -54,10 +57,8 @@ object UserRecognition {
     * an unbounded eviction. With a cap, events past it still EMIT
     * unchanged (delivery is never affected) but are not buffered, so
     * they can never be back-filled with an identity — drop-NEWEST,
-    * chosen because it keeps the cap O(1) in BOTH engines (drop-oldest
-    * would need an O(buffer) list rewrite per event in the ListState
-    * engine, the exact cost that engine exists to avoid) and because
-    * capped keys are overwhelmingly never-identified bot traffic. */
+    * chosen because capped keys are overwhelmingly never-identified bot
+    * traffic, and it keeps a key's earliest history mergeable. */
   case class URConfig(
       anonymousIdFields: Seq[String] = Seq("anonymous_id"),
       identifierFields: Seq[String] = Seq("user_id"),
@@ -76,8 +77,12 @@ object UserRecognition {
     (col("timestamp").as("_ts") +:
       config.identifierFields.map(f => col(f).as(fieldAlias(f)))): _*)
 
-  private def isIdentCol(config: URConfig): Column = config.identifierFields
-    .map(f => nonEmpty(col(f), config.jsonObjectFields(f))).reduce(_ || _)
+  /** `field` resolves a config path to its column (`col` on a parsed
+    * frame, `e.<path>` on a [[tagRawLines]] narrow parse). */
+  private def isIdentCol(config: URConfig,
+                         field: String => Column = col(_)): Column =
+    config.identifierFields
+      .map(f => nonEmpty(field(f), config.jsonObjectFields(f))).reduce(_ || _)
 
   /** Batch resolution under a config. One window pass: the first
     * identified event's (timestamp + identifier fields) struct is
@@ -221,214 +226,7 @@ object UserRecognition {
       config)
   }
 
-  // ---- streaming form ------------------------------------------------
-
-  case class UREvent(message_id: String, anonymous_id: String,
-                     user_id: Option[String], timestamp: Timestamp)
-  case class URState(buffered: List[UREvent])
-
-  /** Grouping key for events WITHOUT an anonymous id: a second
-    * filter+union branch would re-scan and re-parse the whole source
-    * every micro-batch, so keyless events ride through the stateful
-    * operator under a NUL-prefixed key instead and the transitions pass
-    * them straight through (no buffering, no state). Collisions on the
-    * synthetic key are benign — the bypass branch emits every row it
-    * receives unconditionally.
-    *
-    * DOCUMENTED DEVIATION (late keyless rows): riding through the
-    * stateful operator subjects keyless events to its late-row filter —
-    * a keyless event older than the watermark is dropped, where the
-    * reference's `return event` for no-anon-id events
-    * (user-recognition.ts:48) always delivers and the replaced
-    * filter+union bypass did too. Accepted: one watermark now governs
-    * EVERY row at the recognition boundary (keyed rows were already
-    * subject to it), which is the uniform late-data contract the rest
-    * of the pipeline assumes, and it buys back a full second source
-    * scan + parse per micro-batch. Operators needing straggler-keyless
-    * parity can widen the watermark — it bounds state for KEYED rows
-    * only, keyless rows create none. */
-  private val NoKeyPrefix = "\u0000nokey:"
-  private def urKey(e: UREvent): String =
-    if (e.anonymous_id != null) e.anonymous_id
-    else NoKeyPrefix + e.message_id + ":" + String.valueOf(e.timestamp)
-
-  /** flatMapGroupsWithState transition, the reference's exact contract
-    * (user-recognition.ts:48-84, pinned by its own test's expected
-    * sets, gated by `j1d_ur_golden`): an anonymous event is EMITTED
-    * UNCHANGED immediately AND buffered (`return event` after
-    * addEvent); an identified event evicts the buffer and re-emits
-    * every buffered event with the identity merged (the sink's keyed
-    * MERGE then overwrites the originals); TTL expiry just drops state
-    * — nothing to flush, the events already flowed. */
-  def urTransition(lookbackMs: Long)(
-      key: String, rows: Iterator[UREvent], state: GroupState[URState]): Iterator[UREvent] = {
-    if (key.startsWith(NoKeyPrefix)) return rows // keyless bypass, stateless
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty // originals were emitted on arrival
-    }
-    // (timestamp, message_id) — the batch twin's total order (:68); a
-    // timestamp-only sort would leave tied events in partition order and
-    // make the identify-vs-anonymous interleave nondeterministic
-    val sorted = rows.toSeq.sortBy(e => (e.timestamp.getTime, e.message_id))
-    var buffered = state.getOption.map(_.buffered).getOrElse(Nil)
-    val out = scala.collection.mutable.ArrayBuffer[UREvent]()
-    // emissions of THIS WHOLE invocation, by slot: a same-batch identify
-    // REPLACES this batch's just-emitted originals in place instead of
-    // adding a second row — one micro-batch must never hand the sink
-    // both the original and the merged version of a message (the MERGE
-    // tie-break on equal (timestamp, batch) would pick arbitrarily);
-    // across batches the original landed earlier and the merged
-    // re-emission overwrites it. The map spans the whole invocation (it
-    // is never cleared): a redelivered original arriving AFTER the
-    // identify that merged it lands in the same slot and must not
-    // downgrade the merged row — emit() keeps the richer version.
-    val emittedIdx = scala.collection.mutable.Map.empty[String, Int]
-    def emit(e: UREvent): Unit = emittedIdx.get(e.message_id) match {
-      case Some(i) =>
-        if (out(i).user_id.isEmpty || e.user_id.isDefined) out(i) = e
-      case None =>
-        emittedIdx(e.message_id) = out.length
-        out += e
-    }
-    sorted.foreach { e =>
-      e.user_id match {
-        case Some(uid) =>
-          buffered.foreach(b => emit(b.copy(user_id = Some(uid))))
-          buffered = Nil
-          emit(e)
-        case None =>
-          emit(e) // pass through unchanged (ref: return event)
-          buffered = buffered :+ e
-      }
-    }
-    if (buffered.nonEmpty) {
-      state.update(URState(buffered))
-      val maxTs = buffered.map(_.timestamp.getTime).max
-      if (state.getCurrentWatermarkMs() < maxTs + lookbackMs)
-        state.setTimeoutTimestamp(maxTs + lookbackMs)
-    } else state.remove()
-    out.iterator
-  }
-
-  /** [[urTransition]] re-expressed on the Spark 4 `transformWithState`
-    * API — the operator this pipeline runs where it is available: typed
-    * state variables instead of one opaque case-class blob (the buffer
-    * is a `ListState`, so appending an anonymous event is an O(1)
-    * RocksDB write instead of a full deserialize/reserialize of the
-    * whole buffer — the exact cost that dominates hot anonymous keys at
-    * scale), explicit event-time timers instead of the single
-    * setTimeoutTimestamp slot, and per-variable TTL support. Semantics
-    * are identical to [[urTransition]] (StreamingSpec proves
-    * output-equality on the same input stream). Requires the RocksDB
-    * state store provider. */
-  class URProcessor(lookbackMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, UREvent, UREvent] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode, TimerValues}
-    import org.apache.spark.sql.{Encoders => E}
-    @transient private var buffered:
-      org.apache.spark.sql.streaming.ListState[UREvent] = _
-    @transient private var timerTs:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buffered = getHandle.getListState[UREvent](
-        "buffered", E.product[UREvent], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timerTs", E.scalaLong, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[UREvent],
-        timerValues: TimerValues): Iterator[UREvent] = {
-      if (key.startsWith(NoKeyPrefix)) return rows // keyless bypass
-      // (timestamp, message_id): the batch twin's total order — see
-      // urTransition
-      val sorted = rows.toSeq.sortBy(e => (e.timestamp.getTime, e.message_id))
-      var buf = buffered.get().toList
-      val out = scala.collection.mutable.ArrayBuffer[UREvent]()
-      // whole-invocation replacement map: see urTransition (a
-      // redelivered already-merged original must not append or
-      // downgrade — emit() keeps the richer version in its slot)
-      val emittedIdx = scala.collection.mutable.Map.empty[String, Int]
-      def emit(e: UREvent): Unit = emittedIdx.get(e.message_id) match {
-        case Some(i) =>
-          if (out(i).user_id.isEmpty || e.user_id.isDefined) out(i) = e
-        case None =>
-          emittedIdx(e.message_id) = out.length
-          out += e
-      }
-      sorted.foreach { e =>
-        e.user_id match {
-          case Some(uid) =>
-            buf.foreach(b => emit(b.copy(user_id = Some(uid))))
-            buf = Nil
-            emit(e)
-          case None =>
-            emit(e) // pass through unchanged (ref: return event)
-            buf = buf :+ e
-        }
-      }
-      if (buf.nonEmpty) {
-        buffered.put(buf.toArray)
-        val due = buf.map(_.timestamp.getTime).max + lookbackMs
-        if (timerValues.getCurrentWatermarkInMs() < due) {
-          if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-          getHandle.registerTimer(due)
-          timerTs.update(due)
-        }
-      } else {
-        buffered.clear()
-        if (timerTs.exists()) {
-          getHandle.deleteTimer(timerTs.get()); timerTs.clear()
-        }
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[UREvent] = {
-      buffered.clear(); timerTs.clear()
-      Iterator.empty // originals were emitted on arrival
-    }
-  }
-
-  /** [[streamingResolve]] on the transformWithState operator. The
-    * session must run the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
-  def streamingResolveTws(events: DataFrame, lookbackDays: Int = 30,
-                          watermark: String = "1 hour"): Dataset[UREvent] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("message_id"), col("anonymous_id"), col("user_id"),
-        col("timestamp"))
-      .withWatermark("timestamp", watermark)
-      .as[UREvent]
-      .groupByKey(urKey) // ONE source scan; keyless bypass inside
-      .transformWithState(new URProcessor(lookbackDays * 86400000L),
-        TimeMode.EventTime(), OutputMode.Append(),
-        org.apache.spark.sql.Encoders.product[UREvent])
-  }
-
-  /** Streaming user recognition over an envelope-shaped stream
-    * (hardcoded identity fields, kept for the simple common case). */
-  def streamingResolve(events: DataFrame, lookbackDays: Int = 30,
-                       watermark: String = "1 hour"): Dataset[UREvent] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("message_id"), col("anonymous_id"), col("user_id"),
-        col("timestamp"))
-      .withWatermark("timestamp", watermark)
-      .as[UREvent]
-      .groupByKey(urKey) // ONE source scan; keyless bypass inside
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        urTransition(lookbackDays * 86400000L))
-  }
-
-  // ---- configurable streaming form (full-event payloads) -------------
+  // ---- streaming form (full-event payloads) ---------------------------
 
   /** Streaming event: anonymous key + identified flag pre-computed as
     * columns, `mid` = the event's message_id (deterministically defaulted
@@ -506,6 +304,16 @@ object UserRecognition {
     mapper.writeValueAsString(t)
   }
 
+  /** The user-recognition state machine, run by `flatMapGroupsWithState`
+    * — the reference's exact contract (user-recognition.ts:48-84, pinned
+    * by its own test's expected sets, gated by `j1d_ur_golden`): an
+    * anonymous event is EMITTED UNCHANGED immediately AND buffered
+    * (`return event` after addEvent); an identified event evicts the
+    * buffer and re-emits every buffered event with the identity merged
+    * (the sink's keyed MERGE then overwrites the originals); TTL expiry
+    * just drops state — nothing to flush, the events already flowed.
+    * Keyless events arrive under a per-event synthetic key marked
+    * `ident`, so they emit themselves and never create state. */
   def urGenTransition(lookbackMs: Long, identifierFields: Seq[String],
       maxBufferPerKey: Int = 0)(
       key: String, rows: Iterator[URGenEvent],
@@ -516,7 +324,9 @@ object UserRecognition {
       state.remove()
       return Iterator.empty // originals were emitted on arrival
     }
-    // (ts, mid): the batch twin's total order — see urTransition
+    // (ts, mid): [[resolveConfigured]]'s window order; a timestamp-only
+    // sort would leave tied events in partition order and make the
+    // identify-vs-anonymous interleave nondeterministic
     val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.mid))
     var buffered = state.getOption.map(_.buffered).getOrElse(Nil)
     // counted once per invocation (the list was just deserialized
@@ -524,9 +334,14 @@ object UserRecognition {
     var bufCount = if (maxBufferPerKey > 0) buffered.length else 0
     val out = scala.collection.mutable.ArrayBuffer[String]()
     var lastTs = 0L
-    // whole-invocation replacement as urTransition: an identify replaces
-    // this batch's just-emitted originals in place, keyed by MESSAGE ID
-    // (a redelivered original may differ in bytes — a mutated field, a
+    // emissions of THIS WHOLE invocation, by slot: a same-batch identify
+    // REPLACES this batch's just-emitted originals in place instead of
+    // adding a second row — one micro-batch must never hand the sink
+    // both the original and the merged version of a message (the MERGE
+    // tie-break on equal (timestamp, batch) would pick arbitrarily);
+    // across batches the original landed earlier and the merged
+    // re-emission overwrites it. Slots are keyed by MESSAGE ID (a
+    // redelivered original may differ in bytes — a mutated field, a
     // re-serialization — but never in id, and the sink's MERGE key is
     // the id). `upgraded` marks slots holding a merged version, which a
     // redelivered original arriving after the identify must not
@@ -572,175 +387,30 @@ object UserRecognition {
     out.iterator
   }
 
-  /** [[urGenTransition]] re-expressed on `transformWithState` — the
-    * O(1)-append twin for the CONFIGURABLE path (the one
-    * [[graft.streaming.EventPipeline.startRecognized]] runs in
-    * production). Under `flatMapGroupsWithState` every anonymous event
-    * on a hot key pays a full deserialize/reserialize of the whole
-    * buffered-payload blob (`URGenState(List[...])` — O(buffer) per
-    * event, the cost that dominates hot anonymous keys at scale); here
-    * the buffer is a `ListState[URBufEntry]`, so an anonymous-only
-    * invocation is ONE `appendList` of just this batch's events and
-    * never reads the buffer at all. The buffer is read only when an
-    * identify drains it. Semantics are identical to [[urGenTransition]]
-    * (StreamingSpec proves output-equality on the same stream;
-    * `j1e_ur_golden_tws` replays the reference's own test through this
-    * operator). Requires the RocksDB state store provider. */
-  class URGenProcessor(lookbackMs: Long, identifierFields: Seq[String],
-                       maxBufferPerKey: Int = 0)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, URGenEvent, String] {
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimeMode, TimerValues}
-    import org.apache.spark.sql.{Encoders => E}
-    @transient private var buffered:
-      org.apache.spark.sql.streaming.ListState[URBufEntry] = _
-    @transient private var timerTs:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-    // buffer length, maintained ONLY when the cap is enabled (the
-    // ListState itself has no O(1) length; an uncapped run never
-    // touches this variable)
-    @transient private var bufN:
-      org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var mapper: ObjectMapper = _
+  /** Grouping-key prefix for events WITHOUT an anonymous id: NUL, so no
+    * real anonymous id can collide (see [[tagRawLines]]). */
+  private val NoKeyPrefix = "\u0000nokey:"
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buffered = getHandle.getListState[URBufEntry](
-        "buffered", E.product[URBufEntry], TTLConfig.NONE)
-      timerTs = getHandle.getValueState[Long](
-        "timerTs", E.scalaLong, TTLConfig.NONE)
-      bufN = getHandle.getValueState[Long](
-        "bufN", E.scalaLong, TTLConfig.NONE)
-      mapper = new ObjectMapper()
-    }
-
-    override def handleInputRows(key: String, rows: Iterator[URGenEvent],
-        timerValues: TimerValues): Iterator[String] = {
-      val merge = mergeIdentifiers(mapper, identifierFields) _
-      // (ts, mid): the batch twin's total order — see urTransition
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.mid))
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      // this batch's not-yet-persisted anonymous events: flushed as ONE
-      // appendList at the end (never a whole-buffer rewrite), or drained
-      // in place if an identify lands later in the same batch
-      val pending = scala.collection.mutable.ArrayBuffer[URBufEntry]()
-      var drained = false
-      var lastTs = 0L
-      // whole-invocation replacement map, keyed by message id — see
-      // urGenTransition
-      val slotOf = scala.collection.mutable.Map.empty[String, Int]
-      val upgraded = scala.collection.mutable.Set.empty[Int]
-      def emit(mid: String, value: String, isMerged: Boolean): Unit =
-        slotOf.get(mid) match {
-          case Some(i) =>
-            if (isMerged || !upgraded(i)) {
-              out(i) = value
-              if (isMerged) { upgraded += i; () }
-            }
-          case None =>
-            slotOf(mid) = out.length
-            if (isMerged) { upgraded += out.length; () }
-            out += value
-        }
-      // lazy persisted-buffer count, consulted only when the cap is on:
-      // one O(1) point read per invocation, reset by a drain
-      var count = -1L
-      def curCount: Long = {
-        if (count < 0) count = if (bufN.exists()) bufN.get() else 0L
-        count
-      }
-      sorted.foreach { e =>
-        if (e.ident) {
-          // drain: persisted buffer first (strictly older than this
-          // batch's pending appends), then pending — chronological, the
-          // order urGenTransition's single list preserves
-          if (!drained)
-            buffered.get().foreach(b =>
-              emit(b.mid, merge(b.payload, e.payload), isMerged = true))
-          pending.foreach(b =>
-            emit(b.mid, merge(b.payload, e.payload), isMerged = true))
-          pending.clear()
-          if (!drained) { buffered.clear(); drained = true }
-          count = 0
-          emit(e.mid, e.payload, isMerged = false)
-        } else {
-          emit(e.mid, e.payload, isMerged = false) // ref: return event
-          // cap guard (URConfig.maxBufferPerKey): emitted, not buffered
-          if (maxBufferPerKey <= 0 ||
-              curCount + pending.length < maxBufferPerKey)
-            pending += URBufEntry(e.mid, e.payload)
-        }
-        lastTs = e.ts.getTime
-      }
-      if (pending.nonEmpty) {
-        buffered.appendList(pending.toArray) // O(batch), not O(buffer)
-        if (maxBufferPerKey > 0) bufN.update(curCount + pending.length)
-        val due = lastTs + lookbackMs
-        if (timerValues.getCurrentWatermarkInMs() < due) {
-          if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-          getHandle.registerTimer(due)
-          timerTs.update(due)
-        }
-      } else if (drained) {
-        if (timerTs.exists()) {
-          // buffer emptied and nothing re-buffered: drop the TTL timer
-          getHandle.deleteTimer(timerTs.get()); timerTs.clear()
-        }
-        if (maxBufferPerKey > 0 && bufN.exists()) bufN.clear()
-      } else if (maxBufferPerKey > 0 && lastTs > 0 && curCount > 0) {
-        // every anonymous event this batch was over the cap (emitted,
-        // never buffered) — but the PERSISTED buffer is live, and the
-        // classic engine extends its timeout to lastTs+lookback
-        // whenever the buffer is non-empty after a batch. Mirror that
-        // refresh here, or the engines diverge on buffer expiry: an
-        // identify arriving in the extended window would back-fill
-        // under classic but find expired state under tws.
-        val due = lastTs + lookbackMs
-        if (timerValues.getCurrentWatermarkInMs() < due) {
-          if (timerTs.exists()) getHandle.deleteTimer(timerTs.get())
-          getHandle.registerTimer(due)
-          timerTs.update(due)
-        }
-      }
-      out.iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[String] = {
-      buffered.clear(); timerTs.clear()
-      if (maxBufferPerKey > 0) bufN.clear()
-      Iterator.empty // originals were emitted on arrival
-    }
-  }
-
-  /** Configurable streaming user recognition: buffers whole events (as
-    * JSON payloads) per anonymous key and deep-merges the identifying
-    * event's `identifierFields` into evicted events — the streaming twin
-    * of [[resolveConfigured]]. Returns merged event JSON strings. */
+  /** Streaming user recognition over a parsed stream: buffers whole
+    * events (as JSON payloads) per anonymous key and deep-merges the
+    * identifying event's `identifierFields` into evicted events — the
+    * streaming twin of [[resolveConfigured]]. Returns merged event JSON
+    * strings. The default `URConfig()` is the envelope contract
+    * (anonymous_id -> user_id). */
   def streamingResolveConfigured(events: DataFrame, config: URConfig = URConfig(),
-                                 watermark: String = "1 hour",
-                                 engine: String = "classic"): Dataset[String] = {
+                                 watermark: String = "1 hour"): Dataset[String] = {
     val anonKey = coalesce(config.anonymousIdFields.map(col): _*)
-    val isIdent = config.identifierFields
-      .map(f => nonEmpty(col(f), config.jsonObjectFields(f))).reduce(_ || _)
+    val isIdent = isIdentCol(config)
     // No anonymous key -> the event bypasses recognition with its
     // CONTENT untouched (ref getAnonId :87-95; a shared null key would
-    // cross-contaminate). The bypass is NOT a separate filter branch
-    // unioned back in — a second branch re-scans and re-parses the
-    // whole source every micro-batch (on Kafka, a second broker fetch
-    // of every byte). Instead keyless events ride through the stateful
-    // operator under a per-event synthetic key (NUL-prefixed, so no
-    // real anonymous id can collide) marked `ident`: the transition
-    // emits them immediately and never creates state for them — one
-    // source scan, the keyless surcharge is only their share of the
-    // groupBy shuffle. Late-data caveat: this places keyless rows
-    // under the operator's watermark late-row filter, a documented
-    // deviation from the reference's always-deliver — see [[urKey]].
+    // cross-contaminate), riding through the stateful operator under a
+    // synthetic key — the keyless bypass and its late-row deviation are
+    // described at [[tagRawLines]].
     val payload = to_json(struct(events.columns.map(col): _*))
     // deterministic id default (md5 of the serialized event) so a
     // redelivery of an id-less event lands in the same slot/MERGE key
     val mid = coalesce(col("message_id"), md5(payload))
-    val syntheticKey = concat(lit("\u0000nokey:"),
-      mid)
+    val syntheticKey = concat(lit(NoKeyPrefix), mid)
     val tagged = events
       .withWatermark("timestamp", watermark)
       .select(coalesce(anonKey, syntheticKey).as("key"),
@@ -748,12 +418,7 @@ object UserRecognition {
         col("timestamp").as("ts"),
         mid.as("mid"),
         payload.as("payload"))
-    engine match {
-      case "classic" => resolveTagged(tagged, config)
-      case "tws" => resolveTaggedTws(tagged, config)
-      case other => throw new IllegalArgumentException(
-        s"unknown UR engine '$other' (classic | tws)")
-    }
+    resolveTagged(tagged, config)
   }
 
   /** Tag a raw-line stream for [[resolveTagged]]: input columns
@@ -762,13 +427,32 @@ object UserRecognition {
     * type/message_id/timestamp/received_at). The raw line rides through
     * recognition as the payload, so neither a full-envelope from_json
     * nor a to_json re-serialization is paid in-stream; the one full
-    * parse happens downstream, after recognition. */
+    * parse happens downstream, after recognition.
+    *
+    * Events WITHOUT an anonymous id are keyed `NoKeyPrefix` + their
+    * message id and tagged `ident`: a second filter+union branch would
+    * re-scan and re-parse the whole source every micro-batch, so keyless
+    * events ride through the stateful operator instead and emit
+    * themselves (no buffering, no state). Two keyless events share a key
+    * only when they share a message id, which the sink's MERGE collapses
+    * anyway.
+    *
+    * DOCUMENTED DEVIATION (late keyless rows): riding through the
+    * stateful operator subjects keyless events to its late-row filter —
+    * a keyless event older than the watermark is dropped, where the
+    * reference's `return event` for no-anon-id events
+    * (user-recognition.ts:48) always delivers and the replaced
+    * filter+union bypass did too. Accepted: one watermark now governs
+    * EVERY row at the recognition boundary (keyed rows were already
+    * subject to it), which is the uniform late-data contract the rest
+    * of the pipeline assumes, and it buys back a full second source
+    * scan + parse per micro-batch. Operators needing straggler-keyless
+    * parity can widen the watermark — it bounds state for KEYED rows
+    * only, keyless rows create none. */
   def tagRawLines(df: DataFrame, config: URConfig = URConfig(),
                   watermark: String = "1 hour"): DataFrame = {
     val anonKey = coalesce(config.anonymousIdFields.map(f => col(s"e.$f")): _*)
-    val isIdent = config.identifierFields
-      .map(f => nonEmpty(col(s"e.$f"), config.jsonObjectFields(f)))
-      .reduce(_ || _)
+    val isIdent = isIdentCol(config, f => col(s"e.$f"))
     // A line lacking message_id gets one defaulted DETERMINISTICALLY --
     // a hash of the raw bytes -- and injected INTO THE PAYLOAD ITSELF
     // here in the tag stage, so every later parse of this event (its
@@ -808,7 +492,7 @@ object UserRecognition {
     val payload = when(col("e.message_id").isNull &&
         instr(col("payload"), "{") > 0, injected)
       .otherwise(col("payload"))
-    val syntheticKey = concat(lit("\u0000nokey:"),
+    val syntheticKey = concat(lit(NoKeyPrefix),
       coalesce(col("e.message_id"), defaultMid))
     df.withColumn("ts", coalesce(col("e.timestamp"),
         col("e.received_at"), current_timestamp()))
@@ -847,26 +531,6 @@ object UserRecognition {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         urGenTransition(config.lookbackDays * 86400000L,
           config.identifierFields, config.maxBufferPerKey))
-  }
-
-  /** [[resolveTagged]] on the `transformWithState` operator
-    * ([[URGenProcessor]]: `ListState` buffer, O(1) appends on hot
-    * anonymous keys). Output-identical to [[resolveTagged]]; requires
-    * the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
-  def resolveTaggedTws(tagged: DataFrame,
-                       config: URConfig = URConfig()): Dataset[String] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    tagged
-      .as[URGenEvent]
-      .groupByKey(_.key)
-      .transformWithState(
-        new URGenProcessor(config.lookbackDays * 86400000L,
-          config.identifierFields, config.maxBufferPerKey),
-        TimeMode.EventTime(), OutputMode.Append(),
-        org.apache.spark.sql.Encoders.STRING)
   }
 
   /** Identity-graph stitching — the GRAPH-scale generalization of the

@@ -147,6 +147,12 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
   private def tablePath(table: String) = s"$warehouseDir/$table"
 
+  /** Whether writes to `table` MERGE on `primaryKey`. The quarantine
+    * table is a dead-letter log of rejected lines with no key, so it is
+    * append-only even under `deduplicate`. */
+  private def merges(table: String) =
+    options.deduplicate && table != SinkRouter.QuarantineTable
+
   /** Table names become DIRECTORY names under the warehouse root, and
     * they originate from user-controlled event data (the `$table` /
     * `table_name` override every layout honors) — so they must be
@@ -245,7 +251,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
         writeTable(spark, t, rows, dates)
         recordCommit(t,
           if (created) "create"
-          else if (options.deduplicate) "merge" else "append",
+          else if (merges(t)) "merge" else "append",
           Map("rows" -> n))
       }
       if (bad.nonEmpty) {
@@ -262,7 +268,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
             .map(c => col(s"`$c`")): _*)).as("raw_event"),
             concat(lit("invalid_table_name:"),
               coalesce(col("_table"), lit("null"))).as("error"),
-            lit("quarantine").as("_table")))
+            lit(SinkRouter.QuarantineTable).as("_table")))
       }
     } finally cached.unpersist(false)
   }
@@ -559,7 +565,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
       persistSchema(path, nullable(incoming.schema))
     } else {
       val (aligned, evolved) = alignToTable(spark, path, incoming)
-      if (!options.deduplicate)
+      if (!merges(table))
         writePartitioned(aligned, path, SaveMode.Append, batchDates.length)
       else mergeInto(spark, path, evolved, aligned, batchDates)
     }
@@ -1244,6 +1250,9 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 }
 
 object SinkRouter {
+
+  /** Dead-letter table for lines the pipelines cannot land. */
+  val QuarantineTable = "quarantine"
 
   // (historyDir, table) -> (dir mtime at scan, version). A new commit
   // creates a file, which bumps the directory's mtime — so a matching

@@ -86,7 +86,7 @@ object EventPipeline {
       val bad = parsedRaw.filter(isCorrupt).select(
         col("value").as("raw_event"),
         lit("parse_error").as("error"),
-        lit("quarantine").as("_table"))
+        lit(SinkRouter.QuarantineTable).as("_table"))
       applyLayout(dedup(parsed)).unionByName(bad, allowMissingColumns = true)
     }
   }
@@ -464,7 +464,7 @@ object EventPipeline {
             })
             val bad = cached.filter(isQ)
               .select(col("payload").as("raw_event"), col("error"),
-                lit("quarantine").as("_table"))
+                lit(SinkRouter.QuarantineTable).as("_table"))
             if (!bad.isEmpty) router.write(bad)
           } finally { cached.unpersist(false); () }
         }
@@ -506,12 +506,6 @@ object EventPipeline {
             stateStore: String = "hdfs",
             compactEvery: Int = 16,
             compactMaxFiles: Int = 8,
-            // "classic" = flatMapGroupsWithState (whole-buffer blob per
-            // state write); "tws" = transformWithState with a ListState
-            // buffer — O(batch) appends instead of O(buffer) rewrites on
-            // hot anonymous keys, the 100 TB shape. Requires
-            // stateStore = "rocksdb".
-            urEngine: String = "classic",
             // as [[start]]: "variant" parses open props into Spark 4
             // VariantType once, after recognition, before the layout
             openProps: String = "json",
@@ -521,8 +515,6 @@ object EventPipeline {
             onBatch: Long => Unit = _ => ()): StreamingQuery = {
     require(Seq("json", "variant").contains(openProps),
       s"unsupported openProps: $openProps")
-    require(urEngine == "classic" || stateStore == "rocksdb",
-      s"urEngine=$urEngine requires stateStore=rocksdb")
     val session = tunedSession(spark, statePartitions, stateStore)
     val raw = session.readStream
       .format("text")
@@ -542,14 +534,8 @@ object EventPipeline {
       from_json(value, tagSchema).as("e"))
     val tagged = graft.operators.UserRecognition.tagRawLines(
       parsed.filter(!isCorruptStruct(col("e"))), urConfig, urWatermark)
-    val resolved = (urEngine match {
-        case "classic" =>
-          graft.operators.UserRecognition.resolveTagged(tagged, urConfig)
-        case "tws" =>
-          graft.operators.UserRecognition.resolveTaggedTws(tagged, urConfig)
-        case other => throw new IllegalArgumentException(
-          s"unknown urEngine '$other' (classic | tws)")
-      })
+    val resolved = graft.operators.UserRecognition
+      .resolveTagged(tagged, urConfig)
       .toDF("payload")
       .withColumn("error", lit(null).cast("string"))
     val bad = raw
@@ -583,7 +569,7 @@ object EventPipeline {
             router.write(applyLayout(env, layout))
             val badRows = cached.filter(col("error").isNotNull)
               .select(col("payload").as("raw_event"), col("error"),
-                lit("quarantine").as("_table"))
+                lit(SinkRouter.QuarantineTable).as("_table"))
             if (!badRows.isEmpty) router.write(badRows)
           } finally { cached.unpersist(false); () }
         }

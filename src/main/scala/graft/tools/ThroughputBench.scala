@@ -111,13 +111,6 @@ object ThroughputBench {
           maxFilesPerTrigger = 1, statePartitions = statePartitions,
           stateStore = stateStore, urWatermark = "10 minutes",
           compactEvery = compactEvery)
-      case "recognized_tws" =>
-        // the transformWithState engine (URGenProcessor: ListState
-        // buffer, O(1) appends) — the scale path's streaming number
-        EventPipeline.startRecognized(spark, input.dir, wh, cp,
-          maxFilesPerTrigger = 1, statePartitions = statePartitions,
-          stateStore = "rocksdb", urWatermark = "10 minutes",
-          compactEvery = compactEvery, urEngine = "tws")
       case "recognized_variant" =>
         // open props parsed ONCE into Spark 4 VariantType after
         // recognition — the storage-path streaming number (VariantProbe
@@ -171,7 +164,7 @@ object ThroughputBench {
           watermark = "10 minutes", maxFilesPerTrigger = 1,
           statePartitions = statePartitions, stateStore = stateStore)
       case other => throw new IllegalArgumentException(
-        s"unknown mode '$other' (recognized | recognized_tws | " +
+        s"unknown mode '$other' (recognized | " +
           "recognized_variant | dedup | conversations | " +
           "preference_pairs | best_of_n | grpo_stats | leaderboard)")
     }

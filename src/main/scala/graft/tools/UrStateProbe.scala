@@ -35,12 +35,11 @@ object UrStateProbe {
   def run(spark: SparkSession, numBatches: Int, eventsPerBatch: Int,
           hoursPerBatch: Int, lookbackDays: Int,
           statePartitions: Int = 4,
-          stateStore: String = "rocksdb",
-          engine: String = "classic"): Seq[Sample] = {
+          stateStore: String = "rocksdb"): Seq[Sample] = {
     val in = Files.createTempDirectory("ur-probe-in").toString
     val base = 1700000000000L
     // skewed anonymous keys: 20% of keys take 80% of events (hot keys
-    // grow long per-key buffers — the ListState worst case); keys are
+    // grow long per-key buffers); keys are
     // batch-scoped so every batch adds NEW state
     (0 until numBatches).foreach { b =>
       val lines = (0 until eventsPerBatch).map { i =>
@@ -75,8 +74,7 @@ object UrStateProbe {
     val cp = Files.createTempDirectory("ur-probe-cp").toString
     val q = UserRecognition
       .streamingResolveConfigured(env,
-        URConfig(lookbackDays = lookbackDays), watermark = "1 hour",
-        engine = engine)
+        URConfig(lookbackDays = lookbackDays), watermark = "1 hour")
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", cp)
@@ -96,86 +94,17 @@ object UrStateProbe {
       .sortBy(_.batchId)
   }
 
-  /** Hot-key engine comparison — the exact asymmetry the
-    * `transformWithState` twin exists for: ONE anonymous key
-    * accumulating a deep buffer (nothing identifies, nothing evicts
-    * inside the run). The classic `flatMapGroupsWithState` form
-    * rewrites the whole payload-list state blob once per invocation —
-    * O(cumulative buffer) per batch, so per-batch time grows linearly
-    * with stream age on a hot key; the ListState form appends O(batch)
-    * and never reads the buffer, so per-batch time stays flat.
-    * Returns (batchId, triggerMs, stateRows) per batch. */
-  def hotKey(spark: SparkSession, numBatches: Int, eventsPerBatch: Int,
-             engine: String,
-             statePartitions: Int = 2): Seq[(Long, Long, Long)] = {
-    val in = Files.createTempDirectory("ur-hot-in").toString
-    val base = 1700000000000L
-    (0 until numBatches).foreach { b =>
-      val lines = (0 until eventsPerBatch).map { i =>
-        val ts = java.time.Instant.ofEpochMilli(
-          base + b.toLong * 60000L + i.toLong)
-        s"""{"message_id":"m$b-$i","type":"track","timestamp":"$ts","anonymous_id":"hot"}"""
-      }
-      val f = new java.io.File(in, f"b$b%04d.txt")
-      Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(base + b * 60000L); ()
-    }
-    val session = spark.newSession()
-    session.conf.set("spark.sql.shuffle.partitions",
-      statePartitions.toString)
-    session.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    session.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled", "true")
-    val raw = session.readStream.format("text")
-      .option("maxFilesPerTrigger", "1").load(in)
-    val env = raw.select(
-      get_json_object(col("value"), "$.message_id").as("message_id"),
-      get_json_object(col("value"), "$.anonymous_id").as("anonymous_id"),
-      get_json_object(col("value"), "$.user_id").as("user_id"),
-      to_timestamp(get_json_object(col("value"), "$.timestamp"))
-        .as("timestamp"))
-    val out = Files.createTempDirectory("ur-hot-out").toString
-    val cp = Files.createTempDirectory("ur-hot-cp").toString
-    val q = UserRecognition
-      .streamingResolveConfigured(env, URConfig(lookbackDays = 30),
-        watermark = "1 hour", engine = engine)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("parquet")
-      .option("path", out)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    q.recentProgress.toSeq
-      .filter(_.numInputRows > 0)
-      .map { p =>
-        (p.batchId,
-          Option(p.durationMs.get("triggerExecution")).map(_.toLong)
-            .getOrElse(0L),
-          p.stateOperators.headOption.map(_.numRowsTotal).getOrElse(0L))
-      }
-      .sortBy(_._1)
-  }
-
   /** `args`: [numBatches] [eventsPerBatch] [hoursPerBatch]
-    * [lookbackDays], OR `hotkey [numBatches] [eventsPerBatch]` for the
-    * classic-vs-tws hot-key comparison. Defaults model 16 six-hour
-    * batches against a 1-day lookback: state must plateau after ~batch
-    * 5. */
+    * [lookbackDays]. Defaults model 16 six-hour batches against a 1-day
+    * lookback: state must plateau after ~batch 5. */
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("hotkey")) { hotKeyMain(args); return }
     val numBatches = args.lift(0).map(_.toInt).getOrElse(16)
     val perBatch = args.lift(1).map(_.toInt).getOrElse(20000)
     val hours = args.lift(2).map(_.toInt).getOrElse(6)
     val lookback = args.lift(3).map(_.toInt).getOrElse(1)
-    val engine = args.lift(4).getOrElse("classic")
     val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val samples = run(spark, numBatches, perBatch, hours, lookback,
-      engine = engine)
+    val samples = run(spark, numBatches, perBatch, hours, lookback)
     println(f"# ${"batch"}%6s ${"stateRows"}%10s ${"stateMB"}%8s ${"input"}%8s")
     samples.foreach { s =>
       println(f"# ${s.batchId}%6d ${s.stateRows}%10d " +
@@ -186,34 +115,6 @@ object UrStateProbe {
     if (post.nonEmpty)
       println(s"PLATEAU max=${post.max} min=${post.min} " +
         s"ratio=${if (post.min > 0) f"${post.max.toDouble / post.min}%.2f" else "inf"}")
-    spark.stop()
-  }
-
-  private def hotKeyMain(args: Array[String]): Unit = {
-    val numBatches = args.lift(1).map(_.toInt).getOrElse(12)
-    val perBatch = args.lift(2).map(_.toInt).getOrElse(5000)
-    val spark = graft.GraftSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val byEngine = Seq("classic", "tws").map { e =>
-      e -> hotKey(spark, numBatches, perBatch, e)
-    }.toMap
-    println(f"# ${"batch"}%6s ${"classicMs"}%10s ${"twsMs"}%8s ${"bufferedRows"}%12s")
-    byEngine("classic").zip(byEngine("tws")).foreach {
-      case ((b, cMs, _), (_, tMs, _)) =>
-        println(f"# $b%6d $cMs%10d $tMs%8d ${(b + 1) * perBatch}%12d")
-    }
-    // growth factor: mean of last 3 batches over mean of batches 1-3
-    // (batch 0 carries init); classic should grow with buffer depth,
-    // tws should hold ~1x
-    def growth(xs: Seq[(Long, Long, Long)]): Double = {
-      val ms = xs.sortBy(_._1).map(_._2.toDouble)
-      if (ms.length < 6) return 1.0
-      val head = ms.slice(1, 4).sum / 3
-      val tail = ms.takeRight(3).sum / 3
-      if (head > 0) tail / head else 1.0
-    }
-    println(f"GROWTH classic=${growth(byEngine("classic"))}%.2fx " +
-      f"tws=${growth(byEngine("tws"))}%.2fx")
     spark.stop()
   }
 }

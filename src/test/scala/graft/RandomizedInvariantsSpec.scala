@@ -787,22 +787,35 @@ class RandomizedInvariantsSpec extends GraftSpec {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
     import org.apache.spark.api.java.Optional
     import graft.operators.UserRecognition
-    import graft.operators.UserRecognition.{UREvent, URState}
+    import graft.operators.UserRecognition.{URGenEvent, URGenState}
     val rnd = new scala.util.Random(4242)
     val ts = (0 until 5).map(m =>
       java.sql.Timestamp.valueOf(f"2024-01-01 10:0$m%d:00"))
+    // (message_id, anonymous_id, user_id, timestamp)
     val events = (0 until 200).map { i =>
-      UREvent(f"m$i%03d", s"a${rnd.nextInt(3)}",
+      (f"m$i%03d", s"a${rnd.nextInt(3)}",
         if (rnd.nextInt(100) < 15) Some(s"u${rnd.nextInt(4)}") else None,
         ts(rnd.nextInt(ts.size)))
     }
-    def streamed(order: Seq[UREvent]): Map[String, Option[String]] =
-      order.groupBy(_.anonymous_id).flatMap { case (key, evs) =>
-        val state = TestGroupState.create[URState](Optional.empty(),
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def streamed(order: Seq[(String, String, Option[String], java.sql.Timestamp)])
+        : Map[String, Option[String]] =
+      order.groupBy(_._2).flatMap { case (key, evs) =>
+        val state = TestGroupState.create[URGenState](Optional.empty(),
           GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L),
           hasTimedOut = false)
-        UserRecognition.urTransition(30L * 86400000L)(
-          key, evs.iterator, state).map(e => e.message_id -> e.user_id)
+        val rows = evs.iterator.map { case (mid, anon, uid, t) =>
+          val payload = mapper.createObjectNode()
+            .put("message_id", mid).put("anonymous_id", anon)
+          uid.foreach(payload.put("user_id", _))
+          URGenEvent(anon, uid.isDefined, t, mid, payload.toString)
+        }
+        UserRecognition.urGenTransition(30L * 86400000L, Seq("user_id"))(
+          key, rows, state).map { j =>
+          val n = mapper.readTree(j)
+          n.get("message_id").asText() ->
+            Option(n.get("user_id")).map(_.asText())
+        }
       }
     val arrivalA = rnd.shuffle(events)
     val arrivalB = rnd.shuffle(events)
@@ -810,7 +823,7 @@ class RandomizedInvariantsSpec extends GraftSpec {
     val gotB = streamed(arrivalB)
     assert(gotA == gotB, "resolution depends on arrival order")
     // batch twin on the same events (single batch, same lookback)
-    val df = events.toDF()
+    val df = events.toDF("message_id", "anonymous_id", "user_id", "timestamp")
     val batch = UserRecognition.resolveBatch(df, lookbackDays = 30)
       .select("message_id", "user_id")
       .as[(String, Option[String])].collect()

@@ -15,6 +15,54 @@ class StreamingSpec extends GraftSpec {
   private def tmp(prefix: String) =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
+  /** Write `lines` as json-lines file `name` in `dir` with mtime
+    * `mtime` — a file source with maxFilesPerTrigger=1 reads one file
+    * per micro-batch in mtime order. */
+  private def stage(dir: String, name: String, mtime: Long,
+                    lines: Seq[String]): Unit = {
+    val f = new java.io.File(dir, name)
+    Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
+    f.setLastModified(mtime); ()
+  }
+
+  /** (message_id, user_id or "") of each UR output payload, sorted. */
+  private def idUser(payloads: Seq[String]): Seq[(String, String)] = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    payloads.map { j =>
+      val n = mapper.readTree(j)
+      n.get("message_id").asText() ->
+        Option(n.get("user_id")).filterNot(_.isNull)
+          .map(_.asText()).getOrElse("")
+    }.sorted
+  }
+
+  /** [[UserRecognition.tagRawLines]] + [[UserRecognition.resolveTagged]]
+    * (the startRecognized path) over the json-lines files in `in`, one
+    * file per micro-batch, into memory table `name`; returns the emitted
+    * payloads, sorted. */
+  private def resolveLines(in: String, name: String,
+                           cfg: UserRecognition.URConfig,
+                           watermark: String = "1 hour"): Seq[String] = {
+    val tagNames = UserRecognition.tagFields(cfg)
+    val tagSchema = org.apache.spark.sql.types.StructType(
+      graft.schema.EventSchema.envelope.fields.filter(f =>
+        tagNames.contains(f.name)))
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "2")
+    val raw = s2.readStream.format("text")
+      .option("maxFilesPerTrigger", "1").load(in)
+    val tagged = UserRecognition.tagRawLines(
+      raw.select(col("value").cast("string").as("payload"))
+        .withColumn("e", from_json(col("payload"), tagSchema)),
+      cfg, watermark)
+    val q = UserRecognition.resolveTagged(tagged, cfg).writeStream
+      .format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    StreamTest.processAll(q)
+    s2.table(name).as[String](org.apache.spark.sql.Encoders.STRING)
+      .collect().toSeq.sorted
+  }
+
   private def writeJsonEvents(dir: String): Long = {
     val env = DriverEventsAdapter.load(spark, sf)
     val json = env.select(to_json(struct(env.columns.map(col): _*)).as("value"))
@@ -46,21 +94,16 @@ class StreamingSpec extends GraftSpec {
     val in = tmp("graft-vrst-in")
     val wh = tmp("graft-vrst-wh")
     val cp = tmp("graft-vrst-cp")
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
     val a1 = """{"message_id":"va1","type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonV","properties":{"k":7,"tag":"pre"}}"""
     val i1 = """{"message_id":"vi1","type":"identify","timestamp":"2024-01-01T00:05:00Z","anonymous_id":"anonV","user_id":"u9","properties":{"k":8,"tag":"post"}}"""
-    stage("b0.txt", 1700000000000L, Seq(a1))
+    stage(in, "b0.txt", 1700000000000L, Seq(a1))
     val q1 = EventPipeline.startRecognized(spark, in, wh, cp,
       maxFilesPerTrigger = 1, statePartitions = 2,
       openProps = "variant")
     StreamTest.drain(q1)
     // run 2: a NEW query on the same checkpoint parses more variants
     // and the restored UR buffer still evicts merged
-    stage("b1.txt", 1700000060000L, Seq(i1))
+    stage(in, "b1.txt", 1700000060000L, Seq(i1))
     val q2 = EventPipeline.startRecognized(spark, in, wh, cp,
       maxFilesPerTrigger = 1, statePartitions = 2,
       openProps = "variant")
@@ -328,17 +371,12 @@ class StreamingSpec extends GraftSpec {
   test("startRecognized: UR in-stream (rotor shape) — anonymous events buffered across micro-batches surface merged; sink MERGE collapses redeliveries; quarantine intact; ONE stateful operator") {
     val in = tmp("graft-rec-in"); val wh = tmp("graft-rec-wh")
     val cp = tmp("graft-rec-cp")
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
     val a1 = """{"message_id":"a1","type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonA"}"""
     val a2 = """{"message_id":"a2","type":"track","timestamp":"2024-01-01T00:01:00Z","anonymous_id":"anonA"}"""
     val k1 = """{"message_id":"k1","type":"track","timestamp":"2024-01-01T00:01:30Z"}"""
     val i1 = """{"message_id":"i1","type":"identify","timestamp":"2024-01-01T00:02:00Z","anonymous_id":"anonA","user_id":"u9"}"""
-    stage("b0.txt", 1700000000000L, Seq(a1, a2, k1, "not json at all"))
-    stage("b1.txt", 1700000060000L, Seq(i1, a2)) // a2 redelivered
+    stage(in, "b0.txt", 1700000000000L, Seq(a1, a2, k1, "not json at all"))
+    stage(in, "b1.txt", 1700000060000L, Seq(i1, a2)) // a2 redelivered
     val q = EventPipeline.startRecognized(spark, in, wh, cp,
       maxFilesPerTrigger = 1, statePartitions = 2)
     StreamTest.drain(q)
@@ -373,15 +411,10 @@ class StreamingSpec extends GraftSpec {
     // recognition; original and merged re-emission share that id.
     val in = tmp("graft-nomid-in"); val wh = tmp("graft-nomid-wh")
     val cp = tmp("graft-nomid-cp")
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
     val a1 = """{"type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonD"}""" // NO message_id
     val i1 = """{"message_id":"i1","type":"identify","timestamp":"2024-01-01T00:02:00Z","anonymous_id":"anonD","user_id":"u5"}"""
-    stage("b0.txt", 1700000000000L, Seq(a1))
-    stage("b1.txt", 1700000060000L, Seq(i1))
+    stage(in, "b0.txt", 1700000000000L, Seq(a1))
+    stage(in, "b1.txt", 1700000060000L, Seq(i1))
     val q = EventPipeline.startRecognized(spark, in, wh, cp,
       maxFilesPerTrigger = 1, statePartitions = 2)
     StreamTest.drain(q)
@@ -398,48 +431,42 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("startRecognized survives a stream RESTART: buffered anonymous state restores from the checkpoint and later identify still evicts it") {
-    // both engines: the classic fMGWS blob AND the TWS ListState must
-    // restore from their checkpoints across a process restart
-    Seq(("classic", "hdfs"), ("tws", "rocksdb")).foreach {
-      case (engine, store) =>
-        val in = tmp(s"graft-rst-$engine-in")
-        val wh = tmp(s"graft-rst-$engine-wh")
-        val cp = tmp(s"graft-rst-$engine-cp")
-        def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-          val f = new java.io.File(in, name)
-          Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
-          f.setLastModified(mtime); ()
-        }
-        val a1 = """{"message_id":"a1","type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonR"}"""
-        val i1 = """{"message_id":"i1","type":"identify","timestamp":"2024-01-01T00:05:00Z","anonymous_id":"anonR","user_id":"u7"}"""
-        // run 1: only the anonymous event arrives, buffered, stream stops
-        stage("b0.txt", 1700000000000L, Seq(a1))
-        val q1 = EventPipeline.startRecognized(spark, in, wh, cp,
-          maxFilesPerTrigger = 1, statePartitions = 2,
-          stateStore = store, urEngine = engine)
-        StreamTest.drain(q1)
-        // reference semantics: the anonymous event lands IMMEDIATELY,
-        // unidentified — the later identify must OVERWRITE it via MERGE
-        val landed1 = spark.read.parquet(s"$wh/events")
-          .select(col("message_id"), col("user_id")).collect()
-          .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-        assert(landed1.get("a1").contains(None),
-          s"[$engine] anonymous event must land unidentified first: $landed1")
-        // run 2: a NEW query instance on the same checkpoint; the
-        // identify arrives and must evict the RESTORED buffer merged
-        stage("b1.txt", 1700000060000L, Seq(i1))
-        val q2 = EventPipeline.startRecognized(spark, in, wh, cp,
-          maxFilesPerTrigger = 1, statePartitions = 2,
-          stateStore = store, urEngine = engine)
-        StreamTest.drain(q2)
-        val landed = spark.read.parquet(s"$wh/events")
-          .select(col("message_id"), col("user_id")).collect()
-          .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-        assert(landed.keySet == Set("a1", "i1"), s"[$engine] $landed")
-        assert(landed("a1").contains("u7"),
-          s"[$engine] state lost across restart: buffered event " +
-            "missing its merged identity")
-        assert(landed("i1").contains("u7"), s"[$engine] $landed")
+    // both state store providers must restore the buffer from their
+    // checkpoints across a process restart
+    Seq("hdfs", "rocksdb").foreach { store =>
+      val in = tmp(s"graft-rst-$store-in")
+      val wh = tmp(s"graft-rst-$store-wh")
+      val cp = tmp(s"graft-rst-$store-cp")
+      val a1 = """{"message_id":"a1","type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonR"}"""
+      val i1 = """{"message_id":"i1","type":"identify","timestamp":"2024-01-01T00:05:00Z","anonymous_id":"anonR","user_id":"u7"}"""
+      // run 1: only the anonymous event arrives, buffered, stream stops
+      stage(in, "b0.txt", 1700000000000L, Seq(a1))
+      val q1 = EventPipeline.startRecognized(spark, in, wh, cp,
+        maxFilesPerTrigger = 1, statePartitions = 2,
+        stateStore = store)
+      StreamTest.drain(q1)
+      // reference semantics: the anonymous event lands IMMEDIATELY,
+      // unidentified — the later identify must OVERWRITE it via MERGE
+      val landed1 = spark.read.parquet(s"$wh/events")
+        .select(col("message_id"), col("user_id")).collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(landed1.get("a1").contains(None),
+        s"[$store] anonymous event must land unidentified first: $landed1")
+      // run 2: a NEW query instance on the same checkpoint; the
+      // identify arrives and must evict the RESTORED buffer merged
+      stage(in, "b1.txt", 1700000060000L, Seq(i1))
+      val q2 = EventPipeline.startRecognized(spark, in, wh, cp,
+        maxFilesPerTrigger = 1, statePartitions = 2,
+        stateStore = store)
+      StreamTest.drain(q2)
+      val landed = spark.read.parquet(s"$wh/events")
+        .select(col("message_id"), col("user_id")).collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(landed.keySet == Set("a1", "i1"), s"[$store] $landed")
+      assert(landed("a1").contains("u7"),
+        s"[$store] state lost across restart: buffered event " +
+          "missing its merged identity")
+      assert(landed("i1").contains("u7"), s"[$store] $landed")
     }
   }
 
@@ -556,6 +583,28 @@ class StreamingSpec extends GraftSpec {
     assert(quarantined.count() == 1)
     assert(quarantined.filter(col("error") === "parse_error").count() == 1)
     assert(quarantined.filter(col("raw_event").contains("not json")).count() == 1)
+  }
+
+  test("startRecognized quarantines corrupt lines from every micro-batch under the dedup sink") {
+    // quarantine rows carry no message_id: under the default
+    // deduplicate=true sink, a LATER batch's corrupt line must append
+    // to the quarantine table, not MERGE it on the primary key
+    val in = tmp("graft-rq-in"); val wh = tmp("graft-rq-wh"); val cp = tmp("graft-rq-cp")
+    stage(in, "b0.txt", 1700000000000L, Seq(
+      """{"message_id":"g1","type":"track","timestamp":"2024-01-01T00:00:00Z","anonymous_id":"anonQ"}""",
+      "corrupt line one"))
+    stage(in, "b1.txt", 1700000060000L, Seq(
+      """{"message_id":"g2","type":"track","timestamp":"2024-01-01T00:01:00Z","anonymous_id":"anonQ"}""",
+      "corrupt line two"))
+    val q = EventPipeline.startRecognized(spark, in, wh, cp,
+      maxFilesPerTrigger = 1, statePartitions = 2)
+    StreamTest.drain(q)
+    val quarantined = spark.read.parquet(s"$wh/quarantine")
+      .select("raw_event", "error").as[(String, String)].collect().toSeq.sorted
+    assert(quarantined == Seq(("corrupt line one", "parse_error"),
+      ("corrupt line two", "parse_error")), s"got $quarantined")
+    assert(spark.read.parquet(s"$wh/events").select("message_id")
+      .as[String].collect().toSet == Set("g1", "g2"))
   }
 
   test("S9: write-key auth routes rejects to quarantine with the hint, never the secret") {
@@ -764,6 +813,22 @@ class StreamingSpec extends GraftSpec {
     assert(got("a2").map(_._2).toSeq == Seq(1L))
   }
 
+  /** [[UserRecognition.streamingResolveConfigured]] under the default
+    * `URConfig()` (anonymous_id -> user_id) over the json-lines in `in`,
+    * into memory table `name`; returns (message_id, user_id or "") per
+    * emission, sorted. */
+  private def resolveEnvelope(in: String, name: String): Seq[(String, String)] = {
+    val schema = "message_id STRING, anonymous_id STRING, user_id STRING, timestamp TIMESTAMP"
+    val stream = spark.readStream.schema(
+      org.apache.spark.sql.types.StructType.fromDDL(schema)).json(in)
+    val q = UserRecognition.streamingResolveConfigured(stream,
+        UserRecognition.URConfig())
+      .writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Append).start()
+    StreamTest.processAll(q)
+    idUser(spark.table(name).as[String].collect().toSeq)
+  }
+
   test("streaming user recognition recovers buffered anonymous events") {
     val in = tmp("graft-ur-in")
     Seq(
@@ -772,16 +837,7 @@ class StreamingSpec extends GraftSpec {
       """{"message_id":"m3","anonymous_id":"a1","user_id":"u42","timestamp":"2024-01-01T10:10:00.000Z"}""",
       """{"message_id":"m4","anonymous_id":"a2","user_id":null,"timestamp":"2024-01-01T10:15:00.000Z"}"""
     ).toDF("value").coalesce(1).write.mode("overwrite").text(in)
-    val schema = "message_id STRING, anonymous_id STRING, user_id STRING, timestamp TIMESTAMP"
-    val stream = spark.readStream.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(schema)).json(in)
-    val resolved = UserRecognition.streamingResolve(stream)
-    val q = resolved.writeStream.format("memory").queryName("ur_out")
-      .outputMode(OutputMode.Append).start()
-    StreamTest.processAll(q)
-    val got = spark.table("ur_out")
-      .select("message_id", "user_id").as[(String, Option[String])]
-      .collect().toSeq.map { case (m, u) => (m, u.getOrElse("")) }.sorted
+    val got = resolveEnvelope(in, "ur_out")
     // reference semantics (user-recognition.ts, pinned by its test):
     // anonymous events EMIT IMMEDIATELY unchanged and buffer; an
     // identify re-emits them merged. All four events here share ONE
@@ -793,8 +849,8 @@ class StreamingSpec extends GraftSpec {
       ("m4", "")).sorted, s"got $got")
   }
 
-  test("transformWithState UR emits exactly what flatMapGroupsWithState does") {
-    val in = tmp("graft-tws-in")
+  test("streaming UR re-identifies per message: keyless passthrough and a second identify on one key") {
+    val in = tmp("graft-urk-in")
     Seq(
       """{"message_id":"m1","anonymous_id":"a1","user_id":null,"timestamp":"2024-01-01T10:00:00.000Z"}""",
       """{"message_id":"m2","anonymous_id":"a1","user_id":null,"timestamp":"2024-01-01T10:05:00.000Z"}""",
@@ -804,38 +860,36 @@ class StreamingSpec extends GraftSpec {
       """{"message_id":"m6","anonymous_id":"a1","user_id":null,"timestamp":"2024-01-01T10:20:00.000Z"}""",
       """{"message_id":"m7","anonymous_id":"a1","user_id":"u43","timestamp":"2024-01-01T10:25:00.000Z"}"""
     ).toDF("value").coalesce(1).write.mode("overwrite").text(in)
-    val schema = "message_id STRING, anonymous_id STRING, user_id STRING, timestamp TIMESTAMP"
-    // transformWithState requires the RocksDB provider; scope it to a
-    // cloned session so the suite's other queries keep the default
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def run(name: String, tws: Boolean): Seq[(String, String)] = {
-      val sess = if (tws) s2 else spark
-      val stream = sess.readStream.schema(
-        org.apache.spark.sql.types.StructType.fromDDL(schema)).json(in)
-      val resolved =
-        if (tws) UserRecognition.streamingResolveTws(stream)
-        else UserRecognition.streamingResolve(stream)
-      val q = resolved.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      StreamTest.processAll(q)
-      sess.table(name).select("message_id", "user_id")
-        .as[(String, Option[String])](
-          org.apache.spark.sql.Encoders.product[(String, Option[String])])
-        .collect().toSeq.map { case (m, u) => (m, u.getOrElse("")) }.sorted
-    }
-    val classic = run("ur_classic", tws = false)
-    val modern = run("ur_tws", tws = true)
-    assert(modern == classic)
+    val got = resolveEnvelope(in, "ur_chain")
     // pass-through emissions + the re-identification chain: m1/m2
     // re-emit under u42, m6 under u43; m5 is the keyless passthrough;
     // m4 emits unidentified and stays buffered in state
-    assert(modern.count(_ == ("m1", "u42")) == 1)
-    assert(modern.count(_ == ("m6", "u43")) == 1)
-    assert(modern.count(_ == ("m5", "u7")) == 1)
-    assert(modern.count(_ == ("m4", "")) == 1)
-    assert(modern.count(_._1 == "m4") == 1) // never re-identified
+    assert(got.count(_ == ("m1", "u42")) == 1)
+    assert(got.count(_ == ("m6", "u43")) == 1)
+    assert(got.count(_ == ("m5", "u7")) == 1)
+    assert(got.count(_ == ("m4", "")) == 1)
+    assert(got.count(_._1 == "m4") == 1) // never re-identified
+  }
+
+  test("UR late keyless rows: dropped behind the watermark, delivered once within it") {
+    // the documented deviation at UserRecognition.tagRawLines: keyless
+    // events ride through the stateful operator, so its late-row filter
+    // governs them like keyed rows. Batch 0's keyed event moves the
+    // watermark to 11:00 (12:00 minus the 1 hour delay). Spark filters
+    // late rows against the PREVIOUS batch's watermark, so batch 1 only
+    // carries a filler keyed event and batch 2 tests: its 10:00 keyless
+    // event is late, its 11:30 one is not.
+    val in = tmp("graft-lk-in")
+    stage(in, "b0.txt", 1700000000000L, Seq(
+      """{"message_id":"k0","type":"page","anonymous_id":"a1","timestamp":"2024-01-01T12:00:00Z"}"""))
+    stage(in, "b1.txt", 1700000060000L, Seq(
+      """{"message_id":"k1","type":"page","anonymous_id":"a2","timestamp":"2024-01-01T12:00:00Z"}"""))
+    stage(in, "b2.txt", 1700000120000L, Seq(
+      """{"message_id":"late","type":"track","timestamp":"2024-01-01T10:00:00Z"}""",
+      """{"message_id":"ok","type":"track","timestamp":"2024-01-01T11:30:00Z"}"""))
+    val got = idUser(resolveLines(in, "ur_late_keyless",
+      UserRecognition.URConfig()))
+    assert(got == Seq(("k0", ""), ("k1", ""), ("ok", "")), s"got $got")
   }
 
   test("configurable streaming UR merges identifier fields (traits email)") {
@@ -1024,33 +1078,6 @@ class StreamingSpec extends GraftSpec {
       s"quota 4 must admit exactly 4: $landed")
   }
 
-  test("UR transition: intra-batch redelivery of an already-merged original never emits two versions") {
-    // ADVICE r9: anon a1 -> identify -> a1 REDELIVERED in one batch.
-    // The deterministic (timestamp, message_id) sort places the
-    // re-stamped redelivery AFTER the identify that merged it; it must
-    // land in the merged row's slot (kept richer), never as a second
-    // unmerged row for the same message_id -- one micro-batch must
-    // never hand the sink both versions of a message.
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    import org.apache.spark.api.java.Optional
-    import graft.operators.UserRecognition.{UREvent, URState}
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    val t1 = java.sql.Timestamp.valueOf("2024-01-01 10:01:00")
-    val t2 = java.sql.Timestamp.valueOf("2024-01-01 10:02:00")
-    val anon = UREvent("m1", "a1", None, t0)
-    val ident = UREvent("m3", "a1", Some("u42"), t1)
-    val state = TestGroupState.create[URState](Optional.empty(),
-      GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(0L),
-      hasTimedOut = false)
-    val out = UserRecognition.urTransition(86400000L)(
-      "a1", Iterator(anon, ident, anon.copy(timestamp = t2)), state).toList
-    assert(out.map(_.message_id) == List("m1", "m3"), s"got $out")
-    assert(out.head.user_id.contains("u42"),
-      s"redelivery downgraded the merged row: $out")
-    // the redelivered original re-buffers (ref addEvent always buffers)
-    assert(state.get.buffered.map(_.message_id) == List("m1"))
-  }
-
   test("UR gen transition: redelivered payload after identify keeps the merged row") {
     // ADVICE r10: the replacement slot is keyed by MESSAGE ID, not
     // payload bytes — the redelivery here is byte-DIFFERENT (re-stamped
@@ -1187,75 +1214,36 @@ class StreamingSpec extends GraftSpec {
     assert(got.sorted == lines.sorted, s"got $got")
   }
 
-  test("generic transformWithState UR emits exactly what flatMapGroupsWithState does") {
-    // the CONFIGURABLE twin pair (the path startRecognized runs):
-    // resolveTagged (fMGWS, whole-blob state) vs resolveTaggedTws
-    // (ListState, O(1) appends) over the SAME tagRawLines stream —
-    // covering buffering across batches, a cross-batch identify with a
-    // traits deep-merge, an id-less line, a keyless line, and a
-    // never-identified key left in state.
-    import graft.operators.UserRecognition
-    val in = tmp("graft-gtws-in")
+  test("tagged-stream UR: cross-batch identify deep-merges traits, re-identification chain, id-less and keyless lines") {
+    // the configurable path startRecognized runs (tagRawLines +
+    // resolveTagged) — covering buffering across batches, a cross-batch
+    // identify with a traits deep-merge, an id-less line, a keyless
+    // line, and a never-identified key left in state.
+    val in = tmp("graft-gur-in")
     val traits = """{\"email\":\"t@x.io\"}"""
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      java.nio.file.Files.write(f.toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
-    stage("b0.txt", 1700000000000L, Seq(
+    stage(in, "b0.txt", 1700000000000L, Seq(
       """{"message_id":"m1","type":"page","anonymous_id":"a1","timestamp":"2024-01-01T10:00:00Z"}""",
       """{"type":"page","anonymous_id":"a1","timestamp":"2024-01-01T10:01:00Z"}""", // id-less
       """{"message_id":"m2","type":"page","anonymous_id":"a2","timestamp":"2024-01-01T10:02:00Z"}""",
       """{"message_id":"m3","type":"track","timestamp":"2024-01-01T10:03:00Z"}""")) // keyless
-    stage("b1.txt", 1700000060000L, Seq(
+    stage(in, "b1.txt", 1700000060000L, Seq(
       s"""{"message_id":"m4","type":"identify","anonymous_id":"a1","user_id":"u1","context":{"traits":"$traits"},"timestamp":"2024-01-01T10:04:00Z"}"""))
-    stage("b2.txt", 1700000120000L, Seq(
+    stage(in, "b2.txt", 1700000120000L, Seq(
       """{"message_id":"m5","type":"page","anonymous_id":"a1","timestamp":"2024-01-01T10:05:00Z"}"""))
     // re-identification chain: a SECOND identify under a different
     // user drains the re-buffered m5 — the drain→rebuffer→drain cycle
-    // across batches (the ListState engine must clear and re-append)
-    stage("b3.txt", 1700000180000L, Seq(
+    // across batches
+    stage(in, "b3.txt", 1700000180000L, Seq(
       """{"message_id":"m6","type":"identify","anonymous_id":"a1","user_id":"u2","timestamp":"2024-01-01T10:06:00Z"}"""))
     val cfg = UserRecognition.URConfig(
       identifierFields = Seq("user_id", "context.traits"),
       jsonObjectFields = Set("context.traits"))
-    val tagNames = UserRecognition.tagFields(cfg)
-    val tagSchema = org.apache.spark.sql.types.StructType(
-      graft.schema.EventSchema.envelope.fields.filter(f =>
-        tagNames.contains(f.name)))
-    // tws requires the RocksDB provider; run BOTH engines under it so
-    // the only variable is the stateful operator
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "2")
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def run(name: String, tws: Boolean): Seq[String] = {
-      val raw = s2.readStream.format("text")
-        .option("maxFilesPerTrigger", "1").load(in)
-      val tagged = UserRecognition.tagRawLines(
-        raw.select(col("value").cast("string").as("payload"))
-          .withColumn("e", from_json(col("payload"), tagSchema)),
-        cfg)
-      val resolved =
-        if (tws) UserRecognition.resolveTaggedTws(tagged, cfg)
-        else UserRecognition.resolveTagged(tagged, cfg)
-      val q = resolved.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      StreamTest.processAll(q)
-      s2.table(name).as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().toSeq.sorted
-    }
-    val classic = run("gur_classic", tws = false)
-    val modern = run("gur_tws", tws = true)
-    assert(modern == classic,
-      s"tws diverged from classic:\n tws=$modern\n classic=$classic")
-    // sanity on content: m1 and the id-less a1 event re-emit merged
-    // (user_id + traits), m5 re-buffers after the FIRST identify and is
-    // drained by the second under u2 (the chain), keyless m3 passes
-    // through once
+    val got = resolveLines(in, "gur", cfg)
+    // m1 and the id-less a1 event re-emit merged (user_id + traits), m5
+    // re-buffers after the FIRST identify and is drained by the second
+    // under u2 (the chain), keyless m3 passes through once
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val parsed = modern.map(mapper.readTree)
+    val parsed = got.map(mapper.readTree)
     def byId(id: String) = parsed.filter(p =>
       p.get("message_id") != null && p.get("message_id").asText() == id)
     assert(byId("m1").exists(p => p.get("user_id") != null &&
@@ -1269,133 +1257,53 @@ class StreamingSpec extends GraftSpec {
       byId("m2").head.get("user_id") == null) // a2 never identified
   }
 
-  test("maxBufferPerKey caps the anonymous buffer identically in both engines") {
+  test("maxBufferPerKey caps the anonymous buffer: capped events emit but never merge") {
     // beyond-ref guard (URConfig.maxBufferPerKey): a hot key's buffer
     // stops growing at the cap — capped events still EMIT unchanged but
     // never merge. Cap 3 spans TWO batches (2 buffered + 1 more, then
-    // m4/m5 over the cap), so the TWS engine's persisted bufN counter —
-    // not just the in-batch pending length — is what enforces it.
-    import graft.operators.UserRecognition
+    // m4/m5 over the cap), so the count restored from state — not just
+    // the in-batch length — is what enforces it.
     val in = tmp("graft-cap-in")
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      java.nio.file.Files.write(f.toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
     def page(id: Int) =
       s"""{"message_id":"m$id","type":"page","anonymous_id":"a1","timestamp":"2024-01-01T10:0$id:00Z"}"""
-    stage("b0.txt", 1700000000000L, Seq(page(1), page(2)))
-    stage("b1.txt", 1700000060000L, Seq(page(3), page(4), page(5)))
-    stage("b2.txt", 1700000120000L, Seq(
+    stage(in, "b0.txt", 1700000000000L, Seq(page(1), page(2)))
+    stage(in, "b1.txt", 1700000060000L, Seq(page(3), page(4), page(5)))
+    stage(in, "b2.txt", 1700000120000L, Seq(
       """{"message_id":"m6","type":"identify","anonymous_id":"a1","user_id":"u1","timestamp":"2024-01-01T10:06:00Z"}"""))
-    val cfg = UserRecognition.URConfig(maxBufferPerKey = 3)
-    val tagNames = UserRecognition.tagFields(cfg)
-    val tagSchema = org.apache.spark.sql.types.StructType(
-      graft.schema.EventSchema.envelope.fields.filter(f =>
-        tagNames.contains(f.name)))
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "2")
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def run(name: String, tws: Boolean): Seq[(String, String)] = {
-      val raw = s2.readStream.format("text")
-        .option("maxFilesPerTrigger", "1").load(in)
-      val tagged = UserRecognition.tagRawLines(
-        raw.select(col("value").cast("string").as("payload"))
-          .withColumn("e", from_json(col("payload"), tagSchema)),
-        cfg)
-      val resolved =
-        if (tws) UserRecognition.resolveTaggedTws(tagged, cfg)
-        else UserRecognition.resolveTagged(tagged, cfg)
-      val q = resolved.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      StreamTest.processAll(q)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      s2.table(name).as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().toSeq.map { j =>
-          val n = mapper.readTree(j)
-          n.get("message_id").asText() ->
-            Option(n.get("user_id")).filterNot(_.isNull)
-              .map(_.asText()).getOrElse("")
-        }.sorted
-    }
-    val classic = run("cap_classic", tws = false)
-    val modern = run("cap_tws", tws = true)
-    assert(modern == classic, s"tws=$modern classic=$classic")
+    val got = idUser(resolveLines(in, "cap",
+      UserRecognition.URConfig(maxBufferPerKey = 3)))
     // m1-m3 buffered (under the cap) -> re-emit merged; m4/m5 over the
     // cap: emitted once, never merged; the identify emits itself
-    assert(modern == Seq(("m1", ""), ("m1", "u1"), ("m2", ""),
+    assert(got == Seq(("m1", ""), ("m1", "u1"), ("m2", ""),
       ("m2", "u1"), ("m3", ""), ("m3", "u1"), ("m4", ""), ("m5", ""),
-      ("m6", "u1")), modern)
+      ("m6", "u1")), got)
   }
 
-  test("generic TWS timer expiry drops state exactly like the classic TTL") {
+  test("UR TTL expiry drops the buffer silently: a later identify emits only itself") {
     // lookback 0 days: the buffer's TTL is due immediately, so once the
     // watermark advances past the anonymous event (driven by an
-    // unrelated key in batch 1), the classic engine's hasTimedOut and
-    // the TWS engine's handleExpiredTimer must both drop the buffer
-    // SILENTLY — the batch-2 identify then finds nothing to merge and
-    // emits only itself. Pins the one URGenProcessor path the
-    // output-equality test's 30-day lookback never reaches.
-    import graft.operators.UserRecognition
+    // unrelated key in batch 1), the timeout must drop the buffer
+    // SILENTLY — the batch-3 identify then finds nothing to merge and
+    // emits only itself.
     val in = tmp("graft-gexp-in")
-    def stage(name: String, mtime: Long, lines: Seq[String]): Unit = {
-      val f = new java.io.File(in, name)
-      java.nio.file.Files.write(f.toPath,
-        lines.mkString("\n").getBytes("UTF-8"))
-      f.setLastModified(mtime); ()
-    }
-    stage("b0.txt", 1700000000000L, Seq(
+    stage(in, "b0.txt", 1700000000000L, Seq(
       """{"message_id":"m1","type":"page","anonymous_id":"a1","timestamp":"2024-01-01T10:00:00Z"}"""))
     // b1 advances the watermark past the buffer's due time; b2 (another
     // unrelated key, with a1 receiving NO input) is the batch where the
-    // expiry actually fires — in both engines a group with input takes
-    // input processing over timeout, so the identify must come AFTER a
-    // batch that let the timer fire
-    stage("b1.txt", 1700000060000L, Seq(
+    // expiry actually fires — a group with input takes input processing
+    // over timeout, so the identify must come AFTER a batch that let
+    // the timer fire
+    stage(in, "b1.txt", 1700000060000L, Seq(
       """{"message_id":"m2","type":"page","anonymous_id":"a9","timestamp":"2024-01-01T12:00:00Z"}"""))
-    stage("b2.txt", 1700000120000L, Seq(
+    stage(in, "b2.txt", 1700000120000L, Seq(
       """{"message_id":"m2b","type":"page","anonymous_id":"a9","timestamp":"2024-01-01T12:10:00Z"}"""))
-    stage("b3.txt", 1700000180000L, Seq(
+    stage(in, "b3.txt", 1700000180000L, Seq(
       """{"message_id":"m3","type":"identify","anonymous_id":"a1","user_id":"u1","timestamp":"2024-01-01T12:30:00Z"}"""))
-    val cfg = UserRecognition.URConfig(lookbackDays = 0)
-    val tagNames = UserRecognition.tagFields(cfg)
-    val tagSchema = org.apache.spark.sql.types.StructType(
-      graft.schema.EventSchema.envelope.fields.filter(f =>
-        tagNames.contains(f.name)))
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "2")
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def run(name: String, tws: Boolean): Seq[(String, String)] = {
-      val raw = s2.readStream.format("text")
-        .option("maxFilesPerTrigger", "1").load(in)
-      val tagged = UserRecognition.tagRawLines(
-        raw.select(col("value").cast("string").as("payload"))
-          .withColumn("e", from_json(col("payload"), tagSchema)),
-        cfg, watermark = "1 second")
-      val resolved =
-        if (tws) UserRecognition.resolveTaggedTws(tagged, cfg)
-        else UserRecognition.resolveTagged(tagged, cfg)
-      val q = resolved.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append).start()
-      StreamTest.processAll(q)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      s2.table(name).as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().toSeq.map { j =>
-          val n = mapper.readTree(j)
-          n.get("message_id").asText() ->
-            Option(n.get("user_id")).filterNot(_.isNull)
-              .map(_.asText()).getOrElse("")
-        }.sorted
-    }
-    val classic = run("gexp_classic", tws = false)
-    val modern = run("gexp_tws", tws = true)
-    assert(modern == classic, s"tws=$modern classic=$classic")
+    val got = idUser(resolveLines(in, "gexp",
+      UserRecognition.URConfig(lookbackDays = 0), watermark = "1 second"))
     // m1 emitted once (never merged — its buffer expired before the
     // identify), the identify emitted alone
-    assert(modern == Seq(
-      ("m1", ""), ("m2", ""), ("m2b", ""), ("m3", "u1")), modern)
+    assert(got == Seq(
+      ("m1", ""), ("m2", ""), ("m2b", ""), ("m3", "u1")), got)
   }
 }
