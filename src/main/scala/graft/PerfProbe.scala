@@ -5,8 +5,7 @@ package graft
   *   sbt "runMain graft.PerfProbe <sfDir> <reps> <query> [<query> ...]"
   *
   * Prints per-run seconds so warm-vs-cold and variance are visible
-  * (Bench times each query exactly once, in Map order). Honors
-  * GRAFT_SINK_PROF for the sink-internal split.
+  * (Bench times each query exactly once, in Map order).
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {

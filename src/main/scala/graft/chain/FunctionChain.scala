@@ -125,10 +125,10 @@ object FunctionChain {
       }
   }
 
-  /** JVM mirror of Scalars.parseUa — SAME rule table
-    * ([[graft.functions.UaTaxonomy]]) as the Column form, so the twins
-    * cannot drift (ChainSpec still cross-checks them). Shape is the
-    * reference's nested UserAgent protocol type
+  /** Scalars.parseUa's taxonomy in the chain: the SAME rule walks
+    * ([[graft.functions.UaTaxonomy.parse]]) the native expression runs,
+    * so the two cannot drift (ChainSpec still cross-checks them). Shape
+    * is the reference's nested UserAgent protocol type
     * (`types/protocols/functions.d.ts:102-125`): browser{name, version,
     * major}, engine{name, version}, os{name, version}, device{model,
     * type, vendor}, cpu{architecture}, bot. */

@@ -1,14 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.expressions.ParseUserAgent
+import org.apache.spark.sql.{Column, DataFrame, graftshim}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Scalar/enrichment function library — SURVEY §2.4 (F3–F17).
   *
   * Everything here is composed from `org.apache.spark.sql.functions`
-  * built-ins so it stays inside whole-stage codegen; no Scala UDFs on the
-  * hot path.
+  * built-ins or native expressions so it stays inside whole-stage
+  * codegen; no Scala UDFs on the hot path.
   */
 object Scalars {
 
@@ -97,11 +98,15 @@ object Scalars {
   /** F2 UA parse — full taxonomy (browser/engine/os/device/cpu + bot)
     * over the raw user-agent string, rule tables + reference shape in
     * [[UaTaxonomy]] (ref `lib/ua.ts:6,22-25`;
-    * `types/protocols/functions.d.ts:102-125`). Pure column logic =>
-    * codegen, no ua-parser dependency; the chain-side JVM twin
-    * ([[graft.chain.FunctionChain.parseUaNode]]) runs the SAME rule
-    * table, drift-guarded by ChainSpec. */
-  def parseUa(ua: Column): Column = UaTaxonomy.parseColumn(ua)
+    * `types/protocols/functions.d.ts:102-125`). A flat struct of name,
+    * version, major, engine_name, engine_version, os_name, os_version,
+    * device_type, device_vendor, device_model, cpu_architecture, bot;
+    * non-null for a null UA. One native expression
+    * ([[graft.functions.expressions.ParseUserAgent]]) over the same rule
+    * walks the chain's [[graft.chain.FunctionChain.parseUaNode]] runs, so
+    * the two cannot drift; reading a field runs only its part. */
+  def parseUa(ua: Column): Column =
+    graftshim.column(ParseUserAgent(graftshim.expression(ua)))
 
   /** F10/P5 snake_case — `idToSnakeCaseFast` semantics
     * (ref `lib/strings.ts:11-35`): camelCase + spaces/dashes -> snake. */

@@ -1,14 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import java.util.Locale
+import java.util.regex.Pattern
 
-/** F2 user-agent taxonomy — ONE ordered rule table driving BOTH parser
-  * twins (the Column form in [[Scalars.parseUa]] and the JVM form in
-  * [[graft.chain.FunctionChain.parseUaNode]]), so the two cannot drift:
-  * every rule is a plain Java regex evaluated with identical find()
-  * semantics by `rlike`/`regexp_extract` on the Spark side and
-  * `java.util.regex` on the chain side.
+/** F2 user-agent taxonomy — ONE ordered rule table and ONE JVM rule walk
+  * per taxonomy part ([[browser]], [[engine]], [[os]], [[device]],
+  * [[cpu]], [[bot]]). Every caller runs these walks: the native
+  * expressions behind [[Scalars.parseUa]]
+  * ([[graft.functions.expressions.ParseUserAgent]]) and the chain's
+  * [[graft.chain.FunctionChain.parseUaNode]] through [[parse]]. Every
+  * rule is a plain Java regex, compiled once with the table and matched
+  * with `find()`.
   *
   * The field shape is the reference's `UserAgent` protocol type
   * (`types/protocols/functions.d.ts:102-125`): browser{name, version,
@@ -24,12 +26,14 @@ object UaTaxonomy {
   /** ref lib/ua.ts:6 — substring match on the lowercased UA. */
   val botKeywords: Seq[String] =
     Seq("bot", "spider", "headless", "crawler", "uptimia")
-  val botDetect: String = "(?i)" + botKeywords.mkString("|")
 
   /** (name, detect regex, version regexes — first with a group-1 match
     * wins). */
   final case class Rule(name: String, detect: String,
-                        versions: Seq[String])
+                        versions: Seq[String]) {
+    private[UaTaxonomy] val detectP = Pattern.compile(detect)
+    private[UaTaxonomy] val versionPs = versions.map(Pattern.compile)
+  }
 
   val browsers: Seq[Rule] = Seq(
     Rule("Edge", "(?i)edg(?:e|a|ios)?/",
@@ -71,13 +75,16 @@ object UaTaxonomy {
   case object WinNt extends Tx
 
   /** NT build → marketing version (the public ua-parser windows map). */
-  val winNtMap: Seq[(String, String)] = Seq(
+  val winNtMap: Map[String, String] = Map(
     "10.0" -> "10", "6.4" -> "10", "6.3" -> "8.1", "6.2" -> "8",
     "6.1" -> "7", "6.0" -> "Vista", "5.2" -> "XP", "5.1" -> "XP",
     "5.0" -> "2000")
 
   final case class OsRule(name: String, detect: String,
-                          versions: Seq[String], tx: Tx)
+                          versions: Seq[String], tx: Tx) {
+    private[UaTaxonomy] val detectP = Pattern.compile(detect)
+    private[UaTaxonomy] val versionPs = versions.map(Pattern.compile)
+  }
 
   val oses: Seq[OsRule] = Seq(
     OsRule("Windows Phone", "(?i)windows phone",
@@ -98,7 +105,10 @@ object UaTaxonomy {
     * is "desktop" per ref ua.ts:24. */
   final case class DeviceRule(detect: String, vendor: String,
                               model: Either[String, String],
-                              dtype: String)
+                              dtype: String) {
+    private[UaTaxonomy] val detectP = Pattern.compile(detect)
+    private[UaTaxonomy] val modelP = model.map(Pattern.compile)
+  }
 
   val devices: Seq[DeviceRule] = Seq(
     DeviceRule("(?i)apple ?watch|watch ?os", "Apple",
@@ -129,87 +139,58 @@ object UaTaxonomy {
     "arm" -> "(?i)\\barm",
     "ia32" -> "(?i)i[3-6]86|x86",
     "ppc" -> "(?i)ppc|powerpc")
+  private val cpuPs = cpus.map { case (arch, p) => (arch, Pattern.compile(p)) }
 
-  // ---- Column twin ----------------------------------------------------
+  // ---- rule walks ------------------------------------------------------
 
-  private def firstVersion(raw: Column, patterns: Seq[String]): Column =
-    patterns.foldRight(lit("")) { (p, acc) =>
-      val v = regexp_extract(raw, p, 1)
-      when(length(v) > 0, v).otherwise(acc)
-    }
-
-  private def ruleName(raw: Column, rules: Seq[Rule]): Column =
-    rules.foldRight(lit("unknown")) { (r, acc) =>
-      when(raw.rlike(r.detect), r.name).otherwise(acc)
-    }
-
-  private def ruleVersion(raw: Column, name: Column,
-                          rules: Seq[Rule]): Column =
-    rules.foldRight(lit("")) { (r, acc) =>
-      when(name === r.name, firstVersion(raw, r.versions)).otherwise(acc)
-    }
-
-  /** The flat struct [[Scalars.parseUa]] exposes. Field names keep the
-    * pre-taxonomy ones (name/version/os_name/os_version/device_type/
-    * bot) and add major, engine_name, engine_version, device_vendor,
-    * device_model, cpu_architecture. */
-  def parseColumn(ua: Column): Column = {
-    val raw = coalesce(ua, lit(""))
-    val name = ruleName(raw, browsers)
-    val version = ruleVersion(raw, name, browsers)
-    val engine = ruleName(raw, engines)
-    val engineVersion = ruleVersion(raw, engine, engines)
-    val osName = oses.foldRight(lit("unknown")) { (r, acc) =>
-      when(raw.rlike(r.detect), r.name).otherwise(acc)
-    }
-    // device: first matching rule wins
-    val (dVendor, dModel, dType) = devices.foldRight(
-      (lit(""), lit(""), lit("desktop"))) { case (r, (av, am, at)) =>
-      val hit = raw.rlike(r.detect)
-      val model = r.model match {
-        case Left(lit0) => lit(lit0)
-        case Right(p) => regexp_extract(raw, p, 1)
-      }
-      (when(hit, r.vendor).otherwise(av),
-        when(hit, model).otherwise(am),
-        when(hit, r.dtype).otherwise(at))
-    }
-    val cpu = cpus.foldRight(lit("")) { case ((arch, p), acc) =>
-      when(raw.rlike(p), arch).otherwise(acc)
-    }
-    val bot = lower(raw).rlike(botKeywords.mkString("|"))
-    val major =
-      when(length(version) > 0, split(version, "\\.").getItem(0))
-        .otherwise(lit(""))
-    struct(
-      name.as("name"),
-      version.as("version"),
-      major.as("major"),
-      engine.as("engine_name"),
-      engineVersion.as("engine_version"),
-      osName.as("os_name"),
-      osVersionFor(raw, osName).as("os_version"),
-      dType.as("device_type"),
-      dVendor.as("device_vendor"),
-      dModel.as("device_model"),
-      cpu.as("cpu_architecture"),
-      bot.as("bot"))
+  private def found(p: Pattern, s: String): Boolean = p.matcher(s).find()
+  private def extract(p: Pattern, s: String): String = {
+    val m = p.matcher(s)
+    if (m.find() && m.groupCount() >= 1 && m.group(1) != null) m.group(1)
+    else ""
   }
+  private def firstVersion(ps: Seq[Pattern], s: String): String =
+    ps.iterator.map(extract(_, s)).find(_.nonEmpty).getOrElse("")
 
-  private def osVersionFor(raw: Column, osName: Column): Column =
-    oses.foldRight(lit("")) { (r, acc) =>
-      val v = firstVersion(raw, r.versions)
-      val txd = r.tx match {
-        case NoTx => v
-        case UnderscoreDot => regexp_replace(v, "_", ".")
-        case WinNt => winNtMap.foldRight(v) { case ((nt, mk), a) =>
-          when(v === nt, mk).otherwise(a)
-        }
-      }
-      when(osName === r.name, txd).otherwise(acc)
+  /** (name, version, major); major is the text before the first dot, so
+    * "" for a version of dots only. */
+  def browser(s: String): (String, String, String) =
+    browsers.find(r => found(r.detectP, s)).fold(("unknown", "", "")) { r =>
+      val v = firstVersion(r.versionPs, s)
+      (r.name, v, v.takeWhile(_ != '.'))
     }
 
-  // ---- JVM twin -------------------------------------------------------
+  /** (name, version) */
+  def engine(s: String): (String, String) =
+    engines.find(r => found(r.detectP, s)).fold(("unknown", "")) { r =>
+      (r.name, firstVersion(r.versionPs, s))
+    }
+
+  /** (name, version) */
+  def os(s: String): (String, String) =
+    oses.find(r => found(r.detectP, s)).fold(("unknown", "")) { r =>
+      val v = firstVersion(r.versionPs, s)
+      (r.name, r.tx match {
+        case NoTx => v
+        case UnderscoreDot => v.replace('_', '.')
+        case WinNt => winNtMap.getOrElse(v, v)
+      })
+    }
+
+  /** (type, vendor, model) */
+  def device(s: String): (String, String, String) =
+    devices.find(r => found(r.detectP, s)).fold(("desktop", "", "")) { r =>
+      (r.dtype, r.vendor, r.modelP.fold(identity, extract(_, s)))
+    }
+
+  def cpu(s: String): String =
+    cpuPs.collectFirst { case (arch, p) if found(p, s) => arch }
+      .getOrElse("")
+
+  def bot(s: String): Boolean = {
+    val lower = s.toLowerCase(Locale.ROOT)
+    botKeywords.exists(lower.contains)
+  }
 
   final case class UaResult(name: String, version: String, major: String,
                             engineName: String, engineVersion: String,
@@ -218,51 +199,14 @@ object UaTaxonomy {
                             deviceModel: String, cpuArchitecture: String,
                             bot: Boolean)
 
-  private def jFind(p: String, s: String): Boolean =
-    java.util.regex.Pattern.compile(p).matcher(s).find()
-  private def jExtract(p: String, s: String): String = {
-    val m = java.util.regex.Pattern.compile(p).matcher(s)
-    if (m.find() && m.groupCount() >= 1 && m.group(1) != null) m.group(1)
-    else ""
-  }
-  private def jFirstVersion(s: String, patterns: Seq[String]): String =
-    patterns.iterator.map(jExtract(_, s)).find(_.nonEmpty).getOrElse("")
-
+  /** The whole taxonomy of one UA; null parses as "". */
   def parse(ua: String): UaResult = {
     val s = if (ua == null) "" else ua
-    val browser = browsers.find(r => jFind(r.detect, s))
-    val name = browser.map(_.name).getOrElse("unknown")
-    val version =
-      browser.map(r => jFirstVersion(s, r.versions)).getOrElse("")
-    val engine = engines.find(r => jFind(r.detect, s))
-    val osRule = oses.find(r => jFind(r.detect, s))
-    val osVersion = osRule.map { r =>
-      val v = jFirstVersion(s, r.versions)
-      r.tx match {
-        case NoTx => v
-        case UnderscoreDot => v.replace('_', '.')
-        case WinNt => winNtMap.toMap.getOrElse(v, v)
-      }
-    }.getOrElse("")
-    val device = devices.find(r => jFind(r.detect, s))
-    val lower = s.toLowerCase
-    UaResult(
-      name = name,
-      version = version,
-      major = if (version.isEmpty) "" else version.split("\\.").head,
-      engineName = engine.map(_.name).getOrElse("unknown"),
-      engineVersion =
-        engine.map(r => jFirstVersion(s, r.versions)).getOrElse(""),
-      osName = osRule.map(_.name).getOrElse("unknown"),
-      osVersion = osVersion,
-      deviceType = device.map(_.dtype).getOrElse("desktop"),
-      deviceVendor = device.map(_.vendor).getOrElse(""),
-      deviceModel = device.map(_.model match {
-        case Left(l) => l
-        case Right(p) => jExtract(p, s)
-      }).getOrElse(""),
-      cpuArchitecture =
-        cpus.find { case (_, p) => jFind(p, s) }.map(_._1).getOrElse(""),
-      bot = botKeywords.exists(lower.contains))
+    val (name, version, major) = browser(s)
+    val (engineName, engineVersion) = engine(s)
+    val (osName, osVersion) = os(s)
+    val (deviceType, deviceVendor, deviceModel) = device(s)
+    UaResult(name, version, major, engineName, engineVersion, osName,
+      osVersion, deviceType, deviceVendor, deviceModel, cpu(s), bot(s))
   }
 }

@@ -668,12 +668,6 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * beats existing on timestamp ties — re-emitted UR events overwrite),
     * stages the result, and swaps just those partition dirs. The existing
     * table is read with the sidecar schema — no footer scans. */
-  private def prof[A](label: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_SINK_PROF")) {
-      val t0 = System.nanoTime(); val r = f
-      println(f"#### sink.$label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-    } else f
-
   private def mergeInto(
       spark: SparkSession, path: String,
       tableSchema: StructType, incoming: DataFrame,
@@ -702,12 +696,12 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
       .filterNot(batchSet.contains)
     val touched =
       if (probeDates.isEmpty) Array.empty[java.sql.Date]
-      else prof("probe") { windowed
+      else windowed
         .filter(col(DateCol).isin(probeDates.toSeq: _*))
         .select(col(DateCol), col(options.primaryKey))
         .join(incoming.select(options.primaryKey).distinct(),
           Seq(options.primaryKey), "left_semi")
-        .select(DateCol).distinct().collect().map(_.getDate(0)) }
+        .select(DateCol).distinct().collect().map(_.getDate(0))
     val rewriteDates = (touched ++ batchDates).distinct.toSeq
     val oldRows = windowed.filter(col(DateCol).isin(rewriteDates: _*))
 
@@ -728,9 +722,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
     val id = java.util.UUID.randomUUID().toString.take(8)
     val stage = s"$path/.stage-$id"
-    prof("stageWrite") {
-      writePartitioned(merged, stage, SaveMode.Overwrite, rewriteDates.length)
-    }
+    writePartitioned(merged, stage, SaveMode.Overwrite, rewriteDates.length)
     beforeSwapHook()
     // Commit point: persist the swap manifest (touched dates + which have
     // staged output). Crash before this line -> recover() rolls the merge

@@ -101,10 +101,19 @@ class PlanShapeSpec extends GraftSpec {
   }
 
   test("UA taxonomy projection stays codegen'd (no UDFs in the plan)") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RLike}
     val df = SparkEntry.queries("f2b_ua_taxonomy")(spark, dir)
     val p = df.queryExecution.executedPlan.toString()
     assert(!p.contains("BatchEvalPython") && !hasScalaUdf(df),
       "UA parse fell out of codegen")
+    // the rule table is one native parse, not a when/rlike tree folded
+    // per field and per rule: tree size is planning time
+    val exprs: Seq[Expression] =
+      df.queryExecution.analyzed.collect { case n => n.expressions }.flatten
+    val nodes = exprs.map(_.collect { case e => e }.size).sum
+    val rlikes = exprs.map(_.collect { case e: RLike => e }.size).sum
+    assert(nodes <= 200, s"f2b analyzed plan holds $nodes expression nodes")
+    assert(rlikes == 0, s"f2b analyzed plan holds $rlikes RLike nodes")
   }
 
   test("active-events aggregation has a map-side partial (two HashAggregate levels)") {

@@ -632,8 +632,10 @@ class RandomizedInvariantsSpec extends GraftSpec {
     assert(nCorrect >= 6L, s"only $nCorrect/8 marker pairs recovered")
   }
 
-  test("UA twins agree on randomized UA-shaped strings (fragments shuffled, mangled, truncated)") {
+  test("UA parse agrees in codegen, interpreted and JVM form on randomized UA-shaped strings (fragments shuffled, mangled, truncated)") {
     import graft.functions.UaTaxonomy
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
     val rnd = new scala.util.Random(4242)
     val frags = Vector(
       "Mozilla/5.0", "(Windows NT 10.0; Win64; x64)", "(Macintosh)",
@@ -654,30 +656,50 @@ class RandomizedInvariantsSpec extends GraftSpec {
         case 2 => s.replace(" ", "  ")
         case _ => s
       }
-    } ++ Seq("", "??", "a" * 500)
-    val rows = spark.createDataFrame(
-        uas.zipWithIndex.map { case (u, i) => (i, u) })
+    } ++ Seq("", "??", "a" * 500, null,
+      // versions of dots only: major is "", not a crash
+      "Mozilla/5.0 Chrome/.", "Opera/9.80 Version/..")
+    // an RDD-backed frame: a local relation would be projected by the
+    // optimizer, interpreted, and never reach whole-stage codegen
+    val rows = spark.sparkContext
+      .parallelize(uas.zipWithIndex.map { case (u, i) => (i, u) }, 2)
       .toDF("i", "ua")
     val u = graft.functions.Scalars.parseUa(col("ua"))
-    val sqlSide = rows.select(col("i"), col("ua"),
+    def parsed(): (Map[Int, Row], Boolean) = {
+      val df = rows.select(col("i"),
         u.getField("name"), u.getField("version"), u.getField("major"),
         u.getField("engine_name"), u.getField("engine_version"),
         u.getField("os_name"), u.getField("os_version"),
         u.getField("device_type"), u.getField("device_vendor"),
         u.getField("device_model"), u.getField("cpu_architecture"),
         u.getField("bot"))
-      .collect()
-    sqlSide.foreach { r =>
-      val ua = r.getString(1)
+      val byId = df.collect().map(r => r.getInt(0) -> r).toMap
+      (byId, df.queryExecution.executedPlan
+        .exists(_.isInstanceOf[WholeStageCodegenExec]))
+    }
+    val (codegen, codegenWsc) = parsed()
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = keys.map { case (k, _) => k -> conf.getOption(k) }
+    val (interpreted, interpretedWsc) =
+      try {
+        keys.foreach { case (k, v) => conf.set(k, v) }
+        parsed()
+      } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    assert(codegenWsc, "the default plan lost whole-stage codegen")
+    assert(!interpretedWsc, "the interpreted plan still uses whole-stage codegen")
+    def fields(r: Row) = (r.getString(1), r.getString(2), r.getString(3),
+      r.getString(4), r.getString(5), r.getString(6), r.getString(7),
+      r.getString(8), r.getString(9), r.getString(10), r.getString(11),
+      r.getBoolean(12))
+    uas.zipWithIndex.foreach { case (ua, i) =>
       val jvm = UaTaxonomy.parse(ua)
-      val got = (jvm.name, jvm.version, jvm.major, jvm.engineName,
+      val want = (jvm.name, jvm.version, jvm.major, jvm.engineName,
         jvm.engineVersion, jvm.osName, jvm.osVersion, jvm.deviceType,
         jvm.deviceVendor, jvm.deviceModel, jvm.cpuArchitecture, jvm.bot)
-      val want = (r.getString(2), r.getString(3), r.getString(4),
-        r.getString(5), r.getString(6), r.getString(7), r.getString(8),
-        r.getString(9), r.getString(10), r.getString(11),
-        r.getString(12), r.getBoolean(13))
-      assert(got == want, s"twin drift on: $ua")
+      assert(fields(codegen(i)) == want, s"codegen drift on: $ua")
+      assert(fields(interpreted(i)) == want, s"interpreted drift on: $ua")
     }
   }
 
