@@ -163,8 +163,11 @@ object Bench {
     // reps > 1 is a local profiling mode: prints per-rep times to stderr
     // and reports the LAST rep (steady-state) per query
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    // a gate whose run throws is FAILED, never timed: it is listed in
+    // "failed" and kept out of the queries, the totals and the retime set
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOne(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+        org.apache.spark.sql.DataFrame): Option[Double] = {
       // per-query isolation, outside the timed region: drop cached blocks
       // a prior query left behind and let the ContextCleaner collect dead
       // broadcasts/shuffles now, so their GC debt isn't billed to an
@@ -173,15 +176,22 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
       var last = 0.0
-      (1 to reps).foreach { r =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        last = (System.nanoTime() - t0) / 1e9
-        if (reps > 1) System.err.println(f"# $name rep$r $last%.3f")
+      try {
+        (1 to reps).foreach { r =>
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          last = (System.nanoTime() - t0) / 1e9
+          if (reps > 1) System.err.println(f"# $name rep$r $last%.3f")
+        }
+        Some(last)
+      } catch { case e: Throwable =>
+        System.err.println(s"# FAILED $name: $e")
+        failed += name
+        None
       }
-      last
     }
-    val firstPass = selected.map { case (name, fn) => name -> timeOne(name, fn) }
+    val firstPass = selected.flatMap { case (name, fn) =>
+      timeOne(name, fn).map(name -> _) }
     // the slowest queries get a SECOND sample and report min-of-2: a
     // transient load spike (GC, a neighbor process) lands on whichever
     // query was running, and the worst queries are exactly the ones
@@ -264,11 +274,12 @@ object Bench {
         .sortBy(-_._2).take(10).map(_._1)
     val byName = selected.toMap
     val second = firstPass.filter(p => worst(p._1))
-      .map { case (name, _) => name -> timeOne(name, byName(name)) }.toMap
-    val results = firstPass.map { case (name, t1) =>
+      .flatMap { case (name, _) => timeOne(name, byName(name)).map(name -> _) }
+      .toMap
+    val results = firstPass.filterNot(p => failed(p._1)).map { case (name, t1) =>
       name -> second.get(name).map(math.min(_, t1)).getOrElse(t1)
     }
-    val retimedJson = firstPass.filter(p => worst(p._1))
+    val retimedJson = firstPass.filter(p => second.contains(p._1))
       .map { case (n, t1) =>
         s"""\"$n\":[${math.rint(t1 * 1000) / 1000},${
           math.rint(second(n) * 1000) / 1000}]""" }
@@ -316,10 +327,12 @@ object Bench {
     val fullQs = results.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
-    def r2l(v: Double): Double = math.rint(v * 100) / 100
+    def r2(v: Double): Double = math.rint(v * 100) / 100
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,""" +
-      s""""load":{"start":${r2l(loadStart)},"end":${r2l(loadEnd)}},""" +
+      s""""failed":$failedJson,""" +
+      s""""load":{"start":${r2(loadStart)},"end":${r2(loadEnd)}},""" +
       s""""calib_sec":${r3(calibSec)},"speed_ratio":${r3(speedRatio)},""" +
       s""""host":{"procs":${Runtime.getRuntime.availableProcessors}},""" +
       s""""retimed_worst":$retimedJson,"streaming":$streamingJson,"sf":"$sfDir"}"""
@@ -329,41 +342,32 @@ object Bench {
     // stdout: ONE parseable JSON line sized to fit the tail capture —
     // slowest queries individually (they are the ones worth comparing
     // across rounds), the fast tail folded into "rest".
-    def r2(v: Double): Double = math.rint(v * 100) / 100
     val byTime = results.sortBy(-_._2)
+    // the line with the slowest queries that fit in `budget` chars
+    def stdoutLine(budget: Int): String = {
+      val kept = new StringBuilder
+      var nKept = 0
+      var keptSec = 0.0
+      var full = false
+      byTime.foreach { case (k, v) =>
+        val entry = (if (nKept == 0) "" else ",") + "\"" + k + "\":" + r2(v)
+        if (!full && kept.length + entry.length <= budget) {
+          kept.append(entry); nKept += 1; keptSec += v
+        } else full = true
+      }
+      val restSec = r2(math.max(0.0, total - keptSec))
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":{${kept.toString}},"rest":{"n":${results.size - nKept},"sec":$restSec},"failed":$failedJson,"load":{"start":${r2(loadStart)},"end":${r2(loadEnd)}},"streaming":$streamingBrief,"full":"$outFile","sf":"$sfDir"}"""
+    }
     val budget = 1000 // whole line must fit the driver's ~2000-char
                       // stdout tail capture: ~200 fixed + ~270 brief
                       // streaming + 1000 queries ≈ 1500 with margin
-    val kept = new StringBuilder
-    var nKept = 0
-    var keptSec = 0.0
-    var full = false
-    byTime.foreach { case (k, v) =>
-      val entry = (if (nKept == 0) "" else ",") + "\"" + k + "\":" + r2(v)
-      if (!full && kept.length + entry.length <= budget) {
-        kept.append(entry); nKept += 1; keptSec += v
-      } else full = true
-    }
-    val restN = results.size - nKept
-    val restSec = r2(math.max(0.0, total - keptSec))
-    val stdoutLine = s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":{${kept.toString}},"rest":{"n":$restN,"sec":$restSec},"load":{"start":${r2(loadStart)},"end":${r2(loadEnd)}},"streaming":$streamingBrief,"full":"$outFile","sf":"$sfDir"}"""
+    val line = stdoutLine(budget)
     // hard guarantee, not a budget guess: if anything above ever grows
     // the line past the capture window, drop query entries until it fits
     val capture = 1900
-    val finalLine = if (stdoutLine.length <= capture) stdoutLine else {
-      val over = stdoutLine.length - capture
-      // rebuild with a smaller query section
-      val kept2 = new StringBuilder
-      var n2 = 0
-      var sec2 = 0.0
-      byTime.foreach { case (k, v) =>
-        val entry = (if (n2 == 0) "" else ",") + "\"" + k + "\":" + r2(v)
-        if (kept2.length + entry.length <= math.max(200, budget - over)) {
-          kept2.append(entry); n2 += 1; sec2 += v
-        }
-      }
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"queries":{${kept2.toString}},"rest":{"n":${results.size - n2},"sec":${r2(math.max(0.0, total - sec2))}},"load":{"start":${r2(loadStart)},"end":${r2(loadEnd)}},"streaming":$streamingBrief,"full":"$outFile","sf":"$sfDir"}"""
-    }
+    val finalLine =
+      if (line.length <= capture) line
+      else stdoutLine(math.max(200, budget - (line.length - capture)))
     println(finalLine)
     graft.operators.Dedup.releaseCaches() // drop the last pairing call's pinned inputs (driver teardown contract)
     spark.stop()

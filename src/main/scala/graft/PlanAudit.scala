@@ -19,62 +19,35 @@ object PlanAudit {
     for (q <- (if (sys.env.contains("GRAFT_AUDIT")) sys.env("GRAFT_AUDIT").split(",").toSeq else Seq("mv_rewrite", "a22_quota", "dq_bucket_diff", "a23_theta_overlap", "td_retrieval_eval"))) {
       val plan: String =
         try {
+          import org.apache.spark.sql.functions._
           // pseudo-query: the graph loops' shared edge-doubling prelude
-          // over the g1 edge derivation (join+distinct over lineitem) —
-          // the iterative gates' FINAL frames are checkpoint scans, so
-          // the optimization-relevant plan lives here
+          // over the g1/g9 edge derivation (join+distinct over lineitem)
+          // — the iterative gates' FINAL frames are checkpoint scans, so
+          // the optimization-relevant plans live here
+          def prelude = graft.operators.Graph.doubled(
+              spark.read.parquet(s"$dir/orders.parquet")
+                .join(spark.read.parquet(s"$dir/lineitem.parquet"),
+                  col("o_orderkey") === col("l_orderkey"))
+                .select(concat(lit("c"), col("o_custkey")).as("src"),
+                  concat(lit("s"), col("l_suppkey")).as("dst"))
+                .distinct())
+            .repartition(col("src"))
           val df =
-            if (q == "graph_prelude") {
-              import org.apache.spark.sql.functions._
-              val e = spark.read.parquet(s"$dir/orders.parquet")
-                .join(spark.read.parquet(s"$dir/lineitem.parquet"),
-                  col("o_orderkey") === col("l_orderkey"))
-                .select(concat(lit("c"), col("o_custkey")).as("src"),
-                  concat(lit("s"), col("l_suppkey")).as("dst"))
-                .distinct()
-              graft.operators.Graph.doubled(e)
-                .repartition(col("src"))
-            } else if (q == "graph_prelude_union") {
-              // the PRE-r16 doubling (self-union), kept reproducible so
-              // the before/after plan diff is checkable from one build
-              import org.apache.spark.sql.functions._
-              val e = spark.read.parquet(s"$dir/orders.parquet")
-                .join(spark.read.parquet(s"$dir/lineitem.parquet"),
-                  col("o_orderkey") === col("l_orderkey"))
-                .select(concat(lit("c"), col("o_custkey")).as("src"),
-                  concat(lit("s"), col("l_suppkey")).as("dst"))
-                .distinct()
-              e.select(col("src"), col("dst"))
-                .unionByName(e.select(col("dst").as("src"),
-                  col("src").as("dst")))
-                .repartition(col("src"))
-            } else if (q == "g9_ppr_round" || q == "g9_ppr_round_join") {
-              // one PPR round body over the g9 edge derivation: round 1
-              // state (ranks = seeds at 1.0). The iterative gate's final
-              // frame is a checkpoint scan, so the per-round plan — where
-              // the r17 full_outer→union fold lives — is dumped here.
-              import org.apache.spark.sql.functions._
+            if (q == "graph_prelude") prelude
+            else if (q == "g9_ppr_round") {
+              // one PPR round body over the prelude: round 1 state
+              // (ranks = seeds at 1.0), where the r17 full_outer→union
+              // fold lives
               import spark.implicits._
-              val e = spark.read.parquet(s"$dir/orders.parquet")
-                .join(spark.read.parquet(s"$dir/lineitem.parquet"),
-                  col("o_orderkey") === col("l_orderkey"))
-                .select(concat(lit("c"), col("o_custkey")).as("src"),
-                  concat(lit("s"), col("l_suppkey")).as("dst"))
-                .distinct()
-              val dirE = graft.operators.Graph.doubled(e)
-                .repartition(col("src"))
+              val dirE = prelude
               val deg = dirE.groupBy(col("src"))
                 .agg(count(lit(1)).as("deg"))
               val withDeg = dirE.join(deg, "src")
               val seed = Seq("c1", "c2", "c3").toDF("v")
               val ranks = seed.withColumn("r", lit(1.0))
-              if (q == "g9_ppr_round")
-                graft.operators.Graph.pprRound(withDeg, ranks,
-                  seed.select(col("v"), lit(0.0).as("m"),
-                    lit(1.0).as("_s")), 0.85)
-              else
-                graft.operators.Graph.pprRoundJoinForm(withDeg, ranks,
-                  seed, 0.85)
+              graft.operators.Graph.pprRound(withDeg, ranks,
+                seed.select(col("v"), lit(0.0).as("m"),
+                  lit(1.0).as("_s")), 0.85)
             } else SparkEntry.queries(q)(spark, dir)
           // same rendering as df.explain("formatted"), captured
           df.queryExecution.explainString(

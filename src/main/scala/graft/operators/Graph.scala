@@ -409,26 +409,6 @@ object Graph {
           lit(damping) * col("_in")).as("r"))
       .filter(col("r") > 0.0)
 
-  /** The PRE-r17 round shape (aggregate, then FULL OUTER against the
-    * seed table) — kept reproducible so the before/after plan diff in
-    * plans/r17/ is checkable from one build; not called by any query.
-    */
-  private[graft] def pprRoundJoinForm(withDeg: DataFrame,
-                                      ranks: DataFrame, seed: DataFrame,
-                                      damping: Double): DataFrame = {
-    val contrib = withDeg
-      .join(ranks, withDeg("src") === ranks("v"))
-      .select(col("dst").as("v"), (col("r") / col("deg")).as("m"))
-      .groupBy(col("v"))
-      .agg(sum(col("m")).as("_in"))
-    contrib
-      .join(seed.withColumn("_s", lit(1.0)), Seq("v"), "full_outer")
-      .select(col("v"),
-        (lit(1.0 - damping) * coalesce(col("_s"), lit(0.0)) +
-          lit(damping) * coalesce(col("_in"), lit(0.0))).as("r"))
-      .filter(col("r") > 0.0)
-  }
-
   /** HITS hubs and authorities (Kleinberg 1999) over a DIRECTED edge
     * set — the bipartite-credit companion to [[pageRank]]: a good hub
     * points at good authorities and vice versa. Fixed `iterations`

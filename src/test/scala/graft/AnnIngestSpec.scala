@@ -303,4 +303,25 @@ class AnnIngestSpec extends GraftSpec {
     assert(spark.read.parquet(out).count() ==
       spark.read.parquet(refOut).count())
   }
+
+  test("a cell-filtered index read plans only the probed cells' files: 2 cells x 4 batch scopes = 8 of 32") {
+    // the two-level `_batch=/cell=` layout: 4 batches x 8 cells, one
+    // tiny vector per leaf partition
+    val idx = tmp("ai-spec-prune")
+    (0 until 4).foreach { b =>
+      (0 until 8).map(c => (b * 100L + c, Seq(1f, 0f), c))
+        .toDF("id", "vec", "cell")
+        .withColumn("_batch", lit(b.toLong))
+        .write.mode("append").partitionBy("_batch", "cell")
+        .parquet(s"$idx/vectors")
+    }
+    def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
+      df.collect()
+      df.queryExecution.executedPlan.collectLeaves().head
+        .metrics("numFiles").value
+    }
+    val vectors = spark.read.parquet(s"$idx/vectors")
+    assert(filesRead(vectors.filter(col("cell").isin(2, 5))) == 8)
+    assert(filesRead(vectors) == 32)
+  }
 }
