@@ -328,10 +328,11 @@ object UserRecognition {
     // sort would leave tied events in partition order and make the
     // identify-vs-anonymous interleave nondeterministic
     val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.mid))
-    var buffered = state.getOption.map(_.buffered).getOrElse(Nil)
-    // counted once per invocation (the list was just deserialized
-    // anyway); per-event List.length would be quadratic
-    var bufCount = if (maxBufferPerKey > 0) buffered.length else 0
+    // a builder, not the stored List: appending to a List copies it, so
+    // a deep anonymous key would cost O(n^2) per invocation; one List is
+    // stored at state.update
+    val buffered = scala.collection.mutable.ListBuffer
+      .from(state.getOption.map(_.buffered).getOrElse(Nil))
     val out = scala.collection.mutable.ArrayBuffer[String]()
     var lastTs = 0L
     // emissions of THIS WHOLE invocation, by slot: a same-batch identify
@@ -364,23 +365,20 @@ object UserRecognition {
       if (e.ident) {
         buffered.foreach(b =>
           emit(b.mid, merge(b.payload, e.payload), isMerged = true))
-        buffered = Nil
-        bufCount = 0
+        buffered.clear()
         emit(e.mid, e.payload, isMerged = false)
       } else {
         // pass through unchanged (ref: return event)
         emit(e.mid, e.payload, isMerged = false)
         // cap guard (see URConfig.maxBufferPerKey): past the cap the
         // event still emitted above but is not buffered (drop-newest)
-        if (maxBufferPerKey <= 0 || bufCount < maxBufferPerKey) {
-          buffered = buffered :+ URBufEntry(e.mid, e.payload)
-          bufCount += 1
-        }
+        if (maxBufferPerKey <= 0 || buffered.length < maxBufferPerKey)
+          buffered += URBufEntry(e.mid, e.payload)
       }
       lastTs = e.ts.getTime
     }
     if (buffered.nonEmpty) {
-      state.update(URGenState(buffered))
+      state.update(URGenState(buffered.toList))
       if (state.getCurrentWatermarkMs() < lastTs + lookbackMs)
         state.setTimeoutTimestamp(lastTs + lookbackMs)
     } else state.remove()

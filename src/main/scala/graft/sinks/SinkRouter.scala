@@ -10,7 +10,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType,
 /** The warehouse sink layer — SURVEY §2.2 (K1/K2/K8) — reproducing
   * bulker's observable semantics on a parquet warehouse:
   *
-  *  - table routing by the `_table` column (layouts tag it),
+  *  - table routing by the `_table` column (layouts tag it), in one
+  *    pass: a row whose reserved `_quarantine` struct<raw_event, error>
+  *    is non-null ([[SinkRouter.quarantine]]) lands in the dead-letter
+  *    table `quarantine` as that record, and so does a row whose
+  *    `_table` is null, no identifier, or the reserved `quarantine`,
+  *    with an `invalid_table_name:<name>` error; no other table sees
+  *    the `_quarantine` column,
   *  - schema evolution: new columns appear as nulls on old rows, missing
   *    columns read back as nulls (merged superset schema), gated by
   *    `schemaFreeze`,
@@ -163,9 +169,9 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * `_history`/`_quota` (the leading-underscore internal namespace)
     * get clobbered. Identifier = alphanumeric first char, then
     * `[A-Za-z0-9_.-]`, ≤ 255 bytes — no separators, no leading `_`/`.`.
-    * Rows carrying an invalid name are NOT dropped: [[write]] reroutes
-    * them to the quarantine table (delivery is never silently lost,
-    * the corrupt-row contract). */
+    * Rows carrying an invalid name are NOT dropped: [[write]] lands
+    * them in the quarantine table in the same pass (delivery is never
+    * silently lost, the corrupt-row contract). */
   private[sinks] def validTableName(t: String): Boolean =
     t != null && t.length <= 255 &&
       t.matches("[A-Za-z0-9][A-Za-z0-9_.\\-]*")
@@ -198,27 +204,33 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * checkpoint restarts at 0 and must get a fresh marker, or every new
     * batch would be silently skipped against the old high-water mark). */
   def runOnce(batchId: Long, streamId: String = "default")(body: => Unit): Unit = {
-    val suffix = java.security.MessageDigest.getInstance("MD5")
-      .digest(streamId.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
-    val marker = Paths.get(warehouseDir, s"_graft_last_batch_$suffix")
+    val marker = Paths.get(warehouseDir,
+      s"_graft_last_batch_${SinkRouter.streamScope(streamId)}")
     val last =
       if (Files.exists(marker))
         new String(Files.readAllBytes(marker), StandardCharsets.UTF_8).trim.toLong
       else -1L
     if (batchId <= last) return
     body
-    val tmp = Paths.get(warehouseDir, s"._graft_last_batch_$suffix.tmp")
-    Files.createDirectories(Paths.get(warehouseDir))
-    Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, marker,
+    atomicWrite(Paths.get(warehouseDir), marker.getFileName.toString,
+      batchId.toString)
+  }
+
+  /** Publish `body` as `dir/name` in one atomic rename of a dot-prefixed
+    * temp file — readers see the old content or the new, never a part. */
+  private def atomicWrite(dir: Path, name: String, body: String): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".$name.tmp")
+    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, dir.resolve(name),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
   }
 
-  /** Route one batch: split by `_table`, write each group. The batch is
-    * cached for the duration — table discovery plus one write per table
-    * would otherwise recompute the upstream (e.g. re-parse every JSON
-    * event per pass in the streaming path). */
+  /** Route one batch in one pass: split by `_table` (dead letters and
+    * invalid names to `quarantine`, see the class doc), write each
+    * group. The batch is cached for the duration — table discovery plus
+    * one write per table would otherwise recompute the upstream (e.g.
+    * re-parse every JSON event per pass in the streaming path). */
   def write(batch: DataFrame): Unit = {
     val spark = batch.sparkSession
     val cached = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -234,41 +246,56 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
       val dateExpr = tsSource
         .map(c => coalesce(to_date(col(s"`$c`")), lit(EpochDate)))
         .getOrElse(lit(EpochDate))
+      val hasRecords = batch.columns.contains(SinkRouter.QuarantineCol)
+      val isRecord =
+        if (hasRecords) col(SinkRouter.QuarantineCol).isNotNull else lit(false)
       // the per-table row count rides the same routing aggregation —
       // the commit-history metric costs no extra job
       val routing = cached
-        .groupBy(col("_table"))
+        .groupBy(col("_table"), isRecord.as("_rec"))
         .agg(collect_set(dateExpr).as("_dates"),
           count(lit(1)).as("_n"))
         .collect()
-        .map(r => (r.getString(0),
-          r.getSeq[java.sql.Date](1).toArray.sortBy(_.toLocalDate.toEpochDay),
-          r.getLong(2)))
-      val (good, bad) = routing.partition(r => validTableName(r._1))
-      good.foreach { case (t, dates, n) =>
-        val rows = cached.filter(col("_table") === t).drop("_table")
+        .map(r => (r.getString(0), r.getBoolean(1),
+          r.getSeq[java.sql.Date](2).toArray.sortBy(_.toLocalDate.toEpochDay),
+          r.getLong(3)))
+      val (good, dead) = routing.partition { case (t, rec, _, _) =>
+        !rec && validTableName(t) && t != SinkRouter.QuarantineTable }
+      val tables = good.map { case (t, _, dates, n) =>
+        (t, cached.filter(col("_table") === t && !isRecord)
+          .drop("_table", SinkRouter.QuarantineCol), dates, n)
+      }
+      val deadLetters =
+        if (dead.isEmpty) None
+        else {
+          // invalid table name = a routing error, not a data loss: the
+          // offending rows join the dead-letter write with the name in
+          // the error
+          val isBadName = dead.filterNot(_._2).map(_._1)
+            .foldLeft(lit(false))((acc, t) =>
+              acc || (if (t == null) col("_table").isNull
+                      else col("_table") === t))
+          val eventCols = batch.columns
+            .filterNot(c => c == "_table" || c == SinkRouter.QuarantineCol)
+          val misrouted = SinkRouter.record(
+            to_json(struct(eventCols.map(c => col(s"`$c`")): _*)),
+            concat(lit("invalid_table_name:"),
+              coalesce(col("_table"), lit("null"))))
+          val rec =
+            if (hasRecords) coalesce(col(SinkRouter.QuarantineCol), misrouted)
+            else misrouted
+          Some((SinkRouter.QuarantineTable,
+            cached.filter(isRecord || isBadName)
+              .select(rec.as("_r")).select("_r.*"),
+            Array(EpochDate), dead.map(_._4).sum))
+        }
+      (tables ++ deadLetters).foreach { case (t, rows, dates, n) =>
         val created = !tableExists(tablePath(t))
         writeTable(spark, t, rows, dates)
         recordCommit(t,
           if (created) "create"
           else if (merges(t)) "merge" else "append",
           Map("rows" -> n))
-      }
-      if (bad.nonEmpty) {
-        // invalid table name = a routing error, not a data loss: the
-        // offending rows land in quarantine with the name in the error
-        // (one recursion level — "quarantine" itself is a valid name)
-        val badNames = bad.map(_._1)
-        val isBadName = badNames.foldLeft(lit(false))((acc, t) =>
-          acc || (if (t == null) col("_table").isNull
-                  else col("_table") === t))
-        val rows = cached.filter(isBadName)
-        write(rows
-          .select(to_json(struct(rows.columns.filter(_ != "_table")
-            .map(c => col(s"`$c`")): _*)).as("raw_event"),
-            concat(lit("invalid_table_name:"),
-              coalesce(col("_table"), lit("null"))).as("error"),
-            lit(SinkRouter.QuarantineTable).as("_table")))
       }
     } finally cached.unpersist(false)
   }
@@ -323,21 +350,16 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
           .map(_.group(1).toLong - 1L).getOrElse(0L)
       else 0L
     }.sum
-    val json = s"""{"version": $v, "table": "*", """ +
+    atomicWrite(dir.toPath, cp.getName,
+      s"""{"version": $v, "table": "*", """ +
       s""""operation": "vacuum_checkpoint", """ +
       s""""ts_ms": ${System.currentTimeMillis()}, """ +
-      s""""metrics": {"commits_folded": ${dropped.length + priorFolds}}}"""
-    val tmp = new java.io.File(dir, s".${cp.getName}.tmp")
-    Files.write(tmp.toPath, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, cp.toPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      s""""metrics": {"commits_folded": ${dropped.length + priorFolds}}}""")
     dropped.init.foreach(f => Files.deleteIfExists(f.toPath))
   }
 
   private def recordCommit(table: String, operation: String,
                            metrics: Map[String, Long]): Unit = {
-    val dir = new java.io.File(warehouseDir, "_history")
-    dir.mkdirs()
     val v = historyStart + historySeq.incrementAndGet()
     // table names originate from the user-controlled `_table` column —
     // JSON-escape them (and operation, defensively) so a quote or
@@ -350,27 +372,17 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     }
     val mjson = metrics.toSeq.sortBy(_._1)
       .map { case (k, n) => s""""${esc(k)}": $n""" }.mkString("{", ", ", "}")
-    val json = s"""{"version": $v, "table": "${esc(table)}", """ +
+    atomicWrite(Paths.get(historyDir), f"$v%012d.json",
+      s"""{"version": $v, "table": "${esc(table)}", """ +
       s""""operation": "${esc(operation)}", """ +
-      s""""ts_ms": ${System.currentTimeMillis()}, "metrics": $mjson}"""
-    val f = new java.io.File(dir, f"$v%012d.json")
-    val tmp = new java.io.File(dir, f".$v%012d.tmp")
-    Files.write(tmp.toPath, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp.toPath, f.toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      s""""ts_ms": ${System.currentTimeMillis()}, "metrics": $mjson}""")
   }
 
   /** The commit log as a DataFrame, ordered by version. */
   def history(spark: SparkSession): DataFrame = {
-    val dir = new java.io.File(warehouseDir, "_history")
-    val schema = StructType(Seq(
-      StructField("version", org.apache.spark.sql.types.LongType),
-      StructField("table", org.apache.spark.sql.types.StringType),
-      StructField("operation", org.apache.spark.sql.types.StringType),
-      StructField("ts_ms", org.apache.spark.sql.types.LongType),
-      StructField("metrics", org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.LongType))))
+    val dir = new java.io.File(historyDir)
+    val schema = StructType.fromDDL("version BIGINT, `table` STRING, " +
+      "operation STRING, ts_ms BIGINT, metrics MAP<STRING, BIGINT>")
     if (!dir.exists()) return spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     spark.read.schema(schema).json(dir.getAbsolutePath)
@@ -383,6 +395,18 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   private def tableExists(path: String): Boolean = listDir(path).exists(f =>
     f.getName.startsWith(s"$DateCol=") ||
       (f.isFile && f.getName.endsWith(fmtExt)))
+
+  private def partitionDirs(path: String): Array[java.io.File] =
+    listDir(path).filter(d => d.isDirectory && d.getName.startsWith(s"$DateCol="))
+
+  private def partitionDates(path: String): Array[java.sql.Date] =
+    partitionDirs(path).map(d =>
+      java.sql.Date.valueOf(d.getName.stripPrefix(s"$DateCol=")))
+
+  private def tableNames: Array[String] = listDir(warehouseDir)
+    .filter(d => d.isDirectory && !d.getName.startsWith(".") &&
+      !d.getName.startsWith("_") && tableExists(d.getAbsolutePath))
+    .map(_.getName)
 
   /** A table written by a pre-partitioning version of this router has bare
     * parquet files under the table dir. Fold them into the epoch partition
@@ -452,12 +476,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     })
 
   private def persistSchema(path: String, schema: StructType): Unit = {
-    val dir = Paths.get(path)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$SchemaSidecar.tmp")
-    Files.write(tmp, schema.json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(SchemaSidecar),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    atomicWrite(Paths.get(path), SchemaSidecar, schema.json)
     schemaCache(path) = schema
   }
 
@@ -548,8 +567,10 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     w.save(path)
   }
 
-  private def writeTable(spark: SparkSession, table: String, rows: DataFrame,
-                         batchDates: Array[java.sql.Date]): Unit = {
+  /** The prologue of every path that lands rows in `table`: crash
+    * repair, legacy-layout fold, snake_case names, the reserved-column
+    * check and the date tag. Returns (table path, tagged rows). */
+  private def prepare(table: String, rows: DataFrame): (String, DataFrame) = {
     val path = tablePath(table)
     recover(path)
     migrateLegacyLayout(path)
@@ -559,7 +580,12 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     if (base.columns.contains(DateCol))
       throw new IllegalArgumentException(
         s"column name '$DateCol' is reserved for the sink's date partition")
-    val incoming = withDate(base)
+    (path, withDate(base))
+  }
+
+  private def writeTable(spark: SparkSession, table: String, rows: DataFrame,
+                         batchDates: Array[java.sql.Date]): Unit = {
+    val (path, incoming) = prepare(table, rows)
     if (!tableExists(path)) {
       writePartitioned(incoming, path, SaveMode.Overwrite, batchDates.length)
       persistSchema(path, nullable(incoming.schema))
@@ -612,41 +638,25 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * the replaced dates. */
   def overwriteDates(spark: SparkSession, table: String,
                      rows: DataFrame): Seq[java.sql.Date] = {
-    val path = tablePath(table)
-    recover(path)
-    migrateLegacyLayout(path)
-    val base =
-      if (options.keepOriginalNames) rows
-      else graft.functions.Scalars.snakeCaseSchema(rows)
-    if (base.columns.contains(DateCol))
-      throw new IllegalArgumentException(
-        s"column name '$DateCol' is reserved for the sink's date partition")
-    val incoming = withDate(base)
-    if (!tableExists(path)) {
-      // dates were always collected for the return value; collecting
-      // them BEFORE the write also sizes its task count
+    val (path, tagged) = prepare(table, rows)
+    val created = !tableExists(path)
+    val incoming =
+      (if (created) tagged else alignToTable(spark, path, tagged)._1).persist()
+    try {
+      // dates are collected for the return value; collecting them
+      // BEFORE the write also sizes its task count
       val dates = incoming.select(col(DateCol)).distinct().collect()
         .map(_.getDate(0)).toSeq
-      writePartitioned(incoming, path, SaveMode.Overwrite, dates.length)
-      persistSchema(path, nullable(incoming.schema))
-      dates
-    } else {
-      val aligned = alignToTable(spark, path, incoming)._1.persist()
-      try {
-        val dates = aligned.select(col(DateCol)).distinct().collect()
-          .map(_.getDate(0))
-        val dirs = dates.map(d => s"$DateCol=$d").toSeq
-        val id = java.util.UUID.randomUUID().toString.take(8)
-        val stage = s"$path/.stage-$id"
-        writePartitioned(aligned, stage, SaveMode.Overwrite, dates.length)
-        val stagedNames = listDir(stage)
-          .filter(_.getName.startsWith(s"$DateCol=")).map(_.getName).toSet
-        commitSwap(path, id, dirs, stagedNames)
+      if (created) {
+        writePartitioned(incoming, path, SaveMode.Overwrite, dates.length)
+        persistSchema(path, nullable(incoming.schema))
+      } else {
+        stagedRewrite(path, incoming, dates.map(d => s"$DateCol=$d"))
         recordCommit(table, "replace_where",
           Map("partitions_replaced" -> dates.size.toLong))
-        dates.toSeq
-      } finally { aligned.unpersist(false); () }
-    }
+      }
+      dates
+    } finally { incoming.unpersist(false); () }
   }
 
   /** Align two frames to the union-by-name superset schema. */
@@ -689,9 +699,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     // common streaming case (batch dates ⊇ live window dates) the probe
     // job disappears entirely.
     val batchSet = batchDates.toSet
-    val probeDates = listDir(path)
-      .filter(f => f.isDirectory && f.getName.startsWith(s"$DateCol="))
-      .map(f => java.sql.Date.valueOf(f.getName.stripPrefix(s"$DateCol=")))
+    val probeDates = partitionDates(path)
       .filter(d => (!d.before(lo) && !d.after(hi)) || d == EpochDate)
       .filterNot(batchSet.contains)
     val touched =
@@ -719,25 +727,30 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
         struct(dataCols.map(col): _*),
         struct(col(options.timestampColumn), col("_src"))).as("_r"))
       .select(col("_r.*"))
-
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val stage = s"$path/.stage-$id"
-    writePartitioned(merged, stage, SaveMode.Overwrite, rewriteDates.length)
-    beforeSwapHook()
-    // Commit point: persist the swap manifest (touched dates + which have
-    // staged output). Crash before this line -> recover() rolls the merge
-    // back; crash after -> recover() rolls it forward.
-    val stagedNames = listDir(stage)
-      .filter(_.getName.startsWith(s"$DateCol=")).map(_.getName).toSet
-    // defensive union: every staged dir must be swapped in even if the
-    // rewrite-date bookkeeping ever disagrees with the staged output
-    val dirNames = (rewriteDates.map(d => s"$DateCol=$d") ++ stagedNames).distinct
-    commitSwap(path, id, dirNames, stagedNames)
+    stagedRewrite(path, merged, rewriteDates.map(d => s"$DateCol=$d"))
   }
 
-  /** Test seam: runs after the staged merge output is fully committed and
-    * before the swap manifest (the commit point) is written. A crash here
-    * must leave the table exactly as it was (SinkRouterSpec proves it). */
+  /** The staged rewrite of every partition-replacing operation: `rows`
+    * go to a hidden `.stage-<id>` dir, then [[commitSwap]] replaces the
+    * `dirs` partitions (a dir without staged output is deleted). The
+    * swap manifest is the commit point: a crash before it rolls back on
+    * the next [[recover]], a crash after it rolls forward. */
+  private def stagedRewrite(path: String, rows: DataFrame,
+                            dirs: Seq[String]): Unit = {
+    val id = java.util.UUID.randomUUID().toString.take(8)
+    val stage = s"$path/${stageDir(id)}"
+    writePartitioned(rows, stage, SaveMode.Overwrite, dirs.length)
+    beforeSwapHook()
+    val stagedNames = partitionDirs(stage).map(_.getName).toSet
+    // defensive union: every staged dir must be swapped in even if the
+    // caller's date bookkeeping ever disagrees with the staged output
+    commitSwap(path, id, (dirs ++ stagedNames).distinct, stagedNames)
+  }
+
+  /** Test seam: runs after a staged rewrite's output is fully committed
+    * and before the swap manifest (the commit point) is written. A crash
+    * here must leave the table exactly as it was (SinkRouterSpec proves
+    * it). */
   protected def beforeSwapHook(): Unit = ()
 
   // ---- swap protocol -------------------------------------------------------
@@ -749,6 +762,8 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
   private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
 
+  private def stageDir(id: String) = s".stage-$id"
+
   /** Commit a staged partition swap: the CommitLog manifest is the
     * commit point; the executor is idempotent from any crash point
     * (staged dir consumed → skip; delete re-deletes nothing). Dirs in
@@ -759,8 +774,8 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     CommitLog.commit(hadoopConf, path, s"swap-$id", CommitLog.Swap(
       deletes = dirs.filterNot(staged),
       renames = dirs.filter(staged).map(d =>
-        CommitLog.Rename(s".stage-$id/$d", d)),
-      cleanup = Seq(s".stage-$id")))
+        CommitLog.Rename(s"${stageDir(id)}/$d", d)),
+      cleanup = Seq(stageDir(id))))
 
   /** Crash repair, run before every write. Swaps with a persisted
     * manifest are rolled FORWARD ([[CommitLog.recover]]). Leftover
@@ -801,9 +816,12 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   def readTable(spark: SparkSession, table: String): DataFrame = {
     val path = tablePath(table)
     recover(path)
-    applyDeletes(spark, path,
-      readData(spark, loadSchema(spark, path), path)).drop(DateCol)
+    readAt(spark, path)
   }
+
+  private def readAt(spark: SparkSession, path: String): DataFrame =
+    applyDeletes(spark, path, readData(spark, loadSchema(spark, path), path))
+      .drop(DateCol)
 
   // ---- snapshots (time travel) ---------------------------------------------
 
@@ -833,16 +851,23 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   def snapshot(table: String, name: String): Unit = {
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"snapshot name must be [A-Za-z0-9._-]+ and not dot-lead: $name")
+    val root = snapsRoot(tablePath(table))
+    linkCopy(table, root.resolve(s".tmp-$name"), root.resolve(name),
+      s"snapshot already exists: $name")
+    recordCommit(table, "snapshot", Map.empty)
+  }
+
+  /** Hard-link `table`'s sidecar, data files and deletion vector under
+    * `tmpDst`, then publish it as `dst` by one atomic rename. */
+  private def linkCopy(table: String, tmpDst: Path, dst: Path,
+                       exists: String): Unit = {
     val path = tablePath(table)
     recover(path)
     val sidecar = Paths.get(path, SchemaSidecar)
     if (!Files.exists(sidecar))
       throw new IllegalStateException(
         s"table $table has no schema sidecar (write to it first)")
-    val dst = snapsRoot(path).resolve(name)
-    if (Files.exists(dst))
-      throw new IllegalStateException(s"snapshot already exists: $name")
-    val tmpDst = snapsRoot(path).resolve(s".tmp-$name")
+    if (Files.exists(dst)) throw new IllegalStateException(exists)
     deleteRecursive(tmpDst.toFile)
     Files.createDirectories(tmpDst)
     Files.createLink(tmpDst.resolve(SchemaSidecar), sidecar): Unit
@@ -853,13 +878,10 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
           !f.getName.startsWith("_"))
         .foreach(f => Files.createLink(to.resolve(f.getName), f.toPath))
     }
-    listDir(path).filter(d => d.isDirectory &&
-        d.getName.startsWith(s"$DateCol="))
-      .foreach(d => linkDir(d, tmpDst.resolve(d.getName)))
+    partitionDirs(path).foreach(d => linkDir(d, tmpDst.resolve(d.getName)))
     val dv = new java.io.File(dvPath(path))
     if (dv.isDirectory) linkDir(dv, tmpDst.resolve("_deletes"))
-    Files.move(tmpDst, dst, StandardCopyOption.ATOMIC_MOVE)
-    recordCommit(table, "snapshot", Map.empty)
+    Files.move(tmpDst, dst, StandardCopyOption.ATOMIC_MOVE): Unit
   }
 
   /** Zero-copy WRITABLE clone — the dev/test-branch half of the
@@ -875,32 +897,8 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * publish via directory rename. On an object store the link set
     * becomes a metadata-manifest copy — the same O(metadata) shape. */
   def cloneTable(srcTable: String, dstTable: String): Unit = {
-    val src = tablePath(srcTable)
-    recover(src)
-    val sidecar = Paths.get(src, SchemaSidecar)
-    if (!Files.exists(sidecar))
-      throw new IllegalStateException(
-        s"table $srcTable has no schema sidecar (write to it first)")
-    val dst = Paths.get(tablePath(dstTable))
-    if (Files.exists(dst))
-      throw new IllegalStateException(s"table already exists: $dstTable")
-    val tmpDst = Paths.get(warehouseDir, s".clone-tmp-$dstTable")
-    deleteRecursive(tmpDst.toFile)
-    Files.createDirectories(tmpDst)
-    Files.createLink(tmpDst.resolve(SchemaSidecar), sidecar): Unit
-    def linkDir(srcDir: java.io.File, to: Path): Unit = {
-      Files.createDirectories(to)
-      Option(srcDir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))
-        .foreach(f => Files.createLink(to.resolve(f.getName), f.toPath))
-    }
-    listDir(src).filter(d => d.isDirectory &&
-        d.getName.startsWith(s"$DateCol="))
-      .foreach(d => linkDir(d, tmpDst.resolve(d.getName)))
-    val dv = new java.io.File(dvPath(src))
-    if (dv.isDirectory) linkDir(dv, tmpDst.resolve("_deletes"))
-    Files.move(tmpDst, dst, StandardCopyOption.ATOMIC_MOVE)
+    linkCopy(srcTable, Paths.get(warehouseDir, s".clone-tmp-$dstTable"),
+      Paths.get(tablePath(dstTable)), s"table already exists: $dstTable")
     recordCommit(dstTable, "clone",
       Map.empty) // source untouched; the clone's history starts here
   }
@@ -913,9 +911,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val snap = snapsRoot(tablePath(table)).resolve(name)
     if (!Files.exists(snap))
       throw new IllegalArgumentException(s"no such snapshot: $table@$name")
-    val p = snap.toString
-    applyDeletes(spark, p, readData(spark, loadSchema(spark, p), p))
-      .drop(DateCol)
+    readAt(spark, snap.toString)
   }
 
   def listSnapshots(table: String): Seq[String] =
@@ -961,11 +957,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * negligible; nothing shuffles. */
   def exportSubject(spark: SparkSession, keyCol: String,
                     keyValue: String): DataFrame = {
-    val tables = listDir(warehouseDir)
-      .filter(d => d.isDirectory && !d.getName.startsWith(".") &&
-        !d.getName.startsWith("_") && tableExists(d.getAbsolutePath))
-      .map(_.getName).sorted
-    val frames = tables.toSeq.flatMap { t =>
+    val frames = tableNames.sorted.toSeq.flatMap { t =>
       val schema = loadSchema(spark, tablePath(t))
       if (!schema.fieldNames.contains(keyCol)) None
       else Some(readTable(spark, t)
@@ -984,27 +976,28 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val path = tablePath(table)
     recover(path)
     if (!tableExists(path)) return 0L
-    val schema = loadSchema(spark, path)
-    val full = readData(spark, schema, path)
-    val hits = full.filter(predicate)
-      .groupBy(col(DateCol)).agg(count(lit(1)).as("_n"))
-      .collect()
-    if (hits.isEmpty) return 0L
-    val touched = hits.map(_.getDate(0))
-    val deleted = hits.map(_.getLong(1)).sum
-    val keep = full
-      .filter(col(DateCol).isin(touched.toSeq: _*))
-      .filter(!predicate)
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val stage = s"$path/.stage-$id"
-    writePartitioned(keep, stage, SaveMode.Overwrite, touched.length)
-    val stagedNames = listDir(stage)
-      .filter(_.getName.startsWith(s"$DateCol=")).map(_.getName).toSet
-    val dirNames = touched.map(d => s"$DateCol=$d").toSeq
-    commitSwap(path, id, dirNames, stagedNames)
-    recordCommit(table, "delete", Map("rows_deleted" -> deleted,
-      "partitions_rewritten" -> touched.size.toLong))
+    val (deleted, rewritten) =
+      rewriteWithout(spark, path, _.filter(predicate), _.filter(!predicate))
+    if (deleted > 0) recordCommit(table, "delete", Map(
+      "rows_deleted" -> deleted, "partitions_rewritten" -> rewritten))
     deleted
+  }
+
+  /** Copy-on-write removal, the two-job shape of [[deleteWhere]] and
+    * [[purgeDeletes]]: a probe counts `hit`'s rows per date, then only
+    * the dates holding one are rewritten with the rows `kept` selects.
+    * Returns (rows removed, partitions rewritten). */
+  private def rewriteWithout(spark: SparkSession, path: String,
+                             hit: DataFrame => DataFrame,
+                             kept: DataFrame => DataFrame): (Long, Long) = {
+    val full = readData(spark, loadSchema(spark, path), path)
+    val hits = hit(full).groupBy(col(DateCol)).agg(count(lit(1)).as("_n"))
+      .collect()
+    val touched = hits.map(_.getDate(0))
+    if (touched.nonEmpty)
+      stagedRewrite(path, kept(full.filter(col(DateCol).isin(touched.toSeq: _*))),
+        touched.map(d => s"$DateCol=$d").toSeq)
+    (hits.map(_.getLong(1)).sum, touched.length.toLong)
   }
 
   /** Merge-on-read erasure (deletion vectors): instead of rewriting the
@@ -1028,15 +1021,21 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val pk = options.primaryKey
     val keys = readData(spark, schema, path)
       .filter(predicate).select(col(pk)).distinct()
+    val n = appendDeletes(spark, path, keys)
+    if (n > 0) recordCommit(table, "delete_mor", Map("keys_added" -> n))
+    n
+  }
+
+  private def appendDeletes(spark: SparkSession, path: String,
+                            keys: DataFrame): Long = {
     val dv = dvPath(path)
     val fresh =
       if (!new java.io.File(dv).exists()) keys
-      else keys.join(spark.read.parquet(dv), Seq(pk), "left_anti")
+      else keys.join(spark.read.parquet(dv), Seq(options.primaryKey), "left_anti")
     fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = fresh.count()
       if (n > 0) fresh.coalesce(1).write.mode(SaveMode.Append).parquet(dv)
-      if (n > 0) recordCommit(table, "delete_mor", Map("keys_added" -> n))
       n
     } finally { fresh.unpersist(false); () }
   }
@@ -1068,28 +1067,11 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     recover(path)
     val dv = dvPath(path)
     if (!new java.io.File(dv).exists()) return 0L
-    val pk = options.primaryKey
-    val keys = spark.read.parquet(dv)
-    val schema = loadSchema(spark, path)
-    val full = readData(spark, schema, path)
-    val hits = full.join(broadcast(keys), Seq(pk), "left_semi")
-      .groupBy(col(DateCol)).agg(count(lit(1)).as("_n"))
-      .collect()
-    if (hits.nonEmpty) {
-      val touched = hits.map(_.getDate(0))
-      val keep = full
-        .filter(col(DateCol).isin(touched.toSeq: _*))
-        .join(broadcast(keys), Seq(pk), "left_anti")
-      val id = java.util.UUID.randomUUID().toString.take(8)
-      val stage = s"$path/.stage-$id"
-      writePartitioned(keep, stage, SaveMode.Overwrite, touched.length)
-      val stagedNames = listDir(stage)
-        .filter(_.getName.startsWith(s"$DateCol=")).map(_.getName).toSet
-      val dirNames = touched.map(d => s"$DateCol=$d").toSeq
-      commitSwap(path, id, dirNames, stagedNames)
-    }
+    val keys = broadcast(spark.read.parquet(dv))
+    val pk = Seq(options.primaryKey)
+    val (purged, _) = rewriteWithout(spark, path,
+      _.join(keys, pk, "left_semi"), _.join(keys, pk, "left_anti"))
     deleteRecursive(new java.io.File(dv))
-    val purged = hits.map(_.getLong(1)).sum
     recordCommit(table, "purge_deletes", Map("rows_purged" -> purged))
     purged
   }
@@ -1108,9 +1090,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     recover(path)
     if (!tableExists(path)) return Seq.empty
     val cutoff = asOf.minusDays(retainDays.toLong)
-    val dropped = listDir(path)
-      .filter(d => d.isDirectory && d.getName.startsWith(s"$DateCol="))
-      .map(d => java.sql.Date.valueOf(d.getName.stripPrefix(s"$DateCol=")))
+    val dropped = partitionDates(path)
       .filter(d => d != EpochDate && d.toLocalDate.isBefore(cutoff))
       .sortBy(_.toLocalDate.toEpochDay).toSeq
     if (dropped.isEmpty) return Seq.empty
@@ -1183,19 +1163,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
         }
         write(upserts.withColumn("_table", lit(table)))
       }
-      val nDel =
-        if (delKeys.isEmpty) 0L
-        else {
-          val dv = dvPath(path)
-          val fresh =
-            if (!new java.io.File(dv).exists()) delKeys
-            else delKeys.join(spark.read.parquet(dv), Seq(pk), "left_anti")
-          val n = fresh.count()
-          if (n > 0)
-            fresh.coalesce(1).write.mode(SaveMode.Append).parquet(dv)
-          n
-        }
-      (nUp, nDel)
+      (nUp, appendDeletes(spark, path, delKeys))
     } finally { winners.unpersist(false); () }
   }
 
@@ -1210,18 +1178,14 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * holding date partitions or parquet files). The streaming pipeline
     * calls this on a batch cadence — see EventPipeline.start. */
   def compactAll(spark: SparkSession, maxFilesPerPartition: Int = 8): Unit =
-    listDir(warehouseDir)
-      .filter(d => d.isDirectory && !d.getName.startsWith(".") &&
-        !d.getName.startsWith("_") && tableExists(d.getAbsolutePath))
-      .foreach(d => compact(spark, d.getName, maxFilesPerPartition))
+    tableNames.foreach(t => compact(spark, t, maxFilesPerPartition))
 
   def compact(spark: SparkSession, table: String,
               maxFilesPerPartition: Int = 8): Unit = {
     val path = tablePath(table)
     recover(path)
     if (!tableExists(path)) return
-    val crowded = listDir(path)
-      .filter(d => d.isDirectory && d.getName.startsWith(s"$DateCol="))
+    val crowded = partitionDirs(path)
       .filter(d => Option(d.listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(fmtExt)) > maxFilesPerPartition)
       .map(_.getName)
@@ -1230,12 +1194,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val dates = crowded.map(_.stripPrefix(s"$DateCol="))
     val rows = readData(spark, schema, path)
       .filter(col(DateCol).isin(dates: _*))
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val stage = s"$path/.stage-$id"
-    writePartitioned(rows, stage, SaveMode.Overwrite, crowded.length) // 1 file per date
-    val stagedNames = listDir(stage)
-      .filter(_.getName.startsWith(s"$DateCol=")).map(_.getName).toSet
-    commitSwap(path, id, crowded.toSeq, stagedNames)
+    stagedRewrite(path, rows, crowded.toSeq) // 1 file per date
     recordCommit(table, "compact",
       Map("partitions_compacted" -> crowded.size.toLong))
   }
@@ -1243,8 +1202,30 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
 object SinkRouter {
 
-  /** Dead-letter table for lines the pipelines cannot land. */
+  /** Dead-letter table, exactly (raw_event, error); see the class doc. */
   val QuarantineTable = "quarantine"
+
+  /** The 12-hex-digit key a stream's side files (batch marker, quota
+    * deltas) are scoped by: batch ids are only unique per stream. */
+  def streamScope(streamId: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(streamId.getBytes(StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(12)
+
+  /** Reserved routing column next to `_table`: a non-null
+    * struct<raw_event, error> sends its row to [[QuarantineTable]]. */
+  val QuarantineCol = "_quarantine"
+
+  private[sinks] def record(raw: org.apache.spark.sql.Column,
+                            error: org.apache.spark.sql.Column) =
+    struct(raw.cast("string").as("raw_event"), error.cast("string").as("error"))
+
+  /** `rows` as dead-letter records for [[SinkRouter.write]]: `raw` and
+    * `error` become the quarantine table's (raw_event, error). */
+  def quarantine(rows: DataFrame, raw: org.apache.spark.sql.Column,
+                 error: org.apache.spark.sql.Column): DataFrame =
+    rows.select(lit(QuarantineTable).as("_table"),
+      record(raw, error).as(QuarantineCol))
 
   // (historyDir, table) -> (dir mtime at scan, version). A new commit
   // creates a file, which bumps the directory's mtime — so a matching

@@ -28,19 +28,6 @@ import graft.sinks.{SinkOptions, SinkRouter}
   */
 object EventPipeline {
 
-  /** Build the transform graph from a raw-JSON event stream (batch or
-    * streaming DataFrame with a `value` string column).
-    *
-    * `dedupWatermark` bounds the dedup state AND is the late-data
-    * cutoff: a stateful operator filters input older than the watermark,
-    * so events arriving later than this are DROPPED by the dedup stage.
-    * For live ingestion (roughly time-ordered arrival) the 1-hour
-    * default is right — state stays small and the sink MERGE catches any
-    * residual duplicates. For bulk backfills/replays, where batch N+1
-    * can carry events far older than batch N's max timestamp, pass a
-    * watermark wider than the replayed span (or withDedup=false and let
-    * the sink MERGE dedup) — otherwise old events are silently lost
-    * (StreamingSpec's multi-batch test demonstrates both sides). */
   /** The layout projection by name — applied inside `transform`, or (in
     * [[start]]) deferred into foreachBatch so per-batch config rerouting
     * can precede it. */
@@ -52,43 +39,35 @@ object EventPipeline {
     case other => throw new IllegalArgumentException(s"unknown layout $other")
   }
 
+  /** Build the transform graph from a raw-JSON event stream (batch or
+    * streaming DataFrame with a `value` string column): the batch/replay
+    * path, EventSchema.fromJson + the timestamp default; nothing is
+    * classified corrupt here (the streaming modes quarantine corrupt
+    * lines, see [[corruptLines]]).
+    *
+    * `dedupWatermark` bounds the dedup state AND is the late-data
+    * cutoff: a stateful operator filters input older than the watermark,
+    * so events arriving later than this are DROPPED by the dedup stage.
+    * For live ingestion (roughly time-ordered arrival) the 1-hour
+    * default is right — state stays small and the sink MERGE catches any
+    * residual duplicates. For bulk backfills/replays, where batch N+1
+    * can carry events far older than batch N's max timestamp, pass a
+    * watermark wider than the replayed span (or withDedup=false and let
+    * the sink MERGE dedup) — otherwise old events are silently lost
+    * (StreamingSpec's multi-batch test demonstrates both sides). */
   def transform(raw: DataFrame, layout: String = "segment-single-table",
                 withDedup: Boolean = true,
-                dedupWatermark: String = "1 hour",
-                quarantineCorrupt: Boolean = false): DataFrame = {
+                dedupWatermark: String = "1 hour"): DataFrame = {
     import raw.sparkSession.implicits._
-    def applyLayout(deduped: DataFrame): DataFrame =
-      EventPipeline.applyLayout(deduped, layout)
-    def dedup(parsed: DataFrame): DataFrame =
+    val parsed = defaultTimestamp(EventSchema.fromJson(
+      raw.select(col("value").cast("string").as("value")).as[String]))
+    val deduped =
       if (!withDedup) parsed
       else if (parsed.isStreaming)
         parsed.withWatermark("timestamp", dedupWatermark)
           .dropDuplicatesWithinWatermark("message_id")
       else parsed.dropDuplicates("message_id")
-
-    if (!quarantineCorrupt) {
-      // batch/replay path: EventSchema.fromJson + the timestamp default;
-      // nothing is classified corrupt here
-      applyLayout(dedup(defaultTimestamp(
-        EventSchema.fromJson(raw.select(col("value").cast("string").as("value")).as[String]))))
-    } else {
-      // streaming path: lines that are not valid JSON objects route to a
-      // quarantine table instead of vanishing — the reference logs these
-      // to its events log. Corrupt detection and timestamp defaulting
-      // are the SHARED helpers (isCorruptStruct/defaultTimestamp) so
-      // this path and envelopeStream can never drift apart.
-      val parsedRaw = raw.select(col("value").cast("string").as("value"),
-        from_json(col("value").cast("string"), EventSchema.envelope).as("e"))
-      val isCorrupt = isCorruptStruct(col("e"))
-      val parsed = defaultTimestamp(parsedRaw.filter(!isCorrupt).select("e.*")
-        .withColumn("message_id",
-          coalesce(col("message_id"), expr("uuid()"))))
-      val bad = parsedRaw.filter(isCorrupt).select(
-        col("value").as("raw_event"),
-        lit("parse_error").as("error"),
-        lit(SinkRouter.QuarantineTable).as("_table"))
-      applyLayout(dedup(parsed)).unionByName(bad, allowMissingColumns = true)
-    }
+    applyLayout(deduped, layout)
   }
 
   /** Corrupt = unparseable JSON or no `type` — the protocol's one
@@ -96,14 +75,90 @@ object EventPipeline {
     * `probe` must use from_json (PERMISSIVE yields an all-null struct
     * for malformed input, and field-coercion rules must match the full
     * envelope parse — a get_json_object probe would disagree on e.g. a
-    * numeric `type`). Shared by [[transform]] and [[envelopeStream]] so
-    * batch replay and the live stream classify identically. */
+    * numeric `type`). Shared by every streaming mode so they all
+    * classify identically. */
   private val typeProbe: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("type",
         org.apache.spark.sql.types.StringType)))
   private def isCorruptStruct(e: org.apache.spark.sql.Column) =
     e.isNull || e.getField("type").isNull
+
+  private def textLines(session: SparkSession, inputDir: String,
+                        maxFilesPerTrigger: Int): DataFrame =
+    session.readStream.format("text")
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .load(inputDir)
+
+  private def envelopeFields(names: String*) =
+    org.apache.spark.sql.types.StructType(
+      EventSchema.envelope.fields.filter(f => names.contains(f.name)))
+
+  /** The source lines that fail the corrupt probe, as (payload, error =
+    * "parse_error"). Corrupt rows must stay OUT of the watermarked
+    * branch: they carry no event time, and stamping them with
+    * processing time would drag the event-time watermark to wall-clock
+    * now — one bad line in a historical backfill would then silently
+    * expire every older event in later batches. This branch re-scans
+    * the source (union children are independent) but parses only a
+    * one-field `type` probe, not the full envelope, so the second pass
+    * costs a text scan + a trivial from_json. */
+  private def corruptLines(raw: DataFrame): DataFrame = {
+    val value = col("value").cast("string")
+    raw.select(value.as("payload"), from_json(value, typeProbe).as("p"))
+      .filter(isCorruptStruct(col("p")))
+      .select(col("payload"), lit("parse_error").as("error"))
+  }
+
+  private def openPropsParser(openProps: String): DataFrame => DataFrame =
+    openProps match {
+      case "json" => identity
+      case "variant" => env => env
+        .withColumn("properties", try_parse_json(col("properties")))
+        .withColumn("traits", try_parse_json(col("traits")))
+      case other =>
+        throw new IllegalArgumentException(s"unsupported openProps: $other")
+    }
+
+  /** A batch of (payload, error, ...) rows as ONE frame to route: the
+    * rows with a null `error` through `events`, the rest as dead letters
+    * — rare, so in one partition: the union then adds one task per
+    * stage, not one per batch partition. */
+  private def withDeadLetters(cached: DataFrame)(
+      events: DataFrame => DataFrame): DataFrame = {
+    val isBad = col("error").isNotNull
+    events(cached.filter(!isBad)).unionByName(SinkRouter.quarantine(
+      cached.filter(isBad).coalesce(1), col("payload"), col("error")),
+      allowMissingColumns = true)
+  }
+
+  /** The one foreachBatch body of every pipeline mode: once per (stream
+    * = checkpoint, batchId), the batch is persisted (so `rows` can split
+    * it without re-running the stateful plan) and lands through ONE
+    * [[SinkRouter.write]]. Compaction and `onBatch` are idempotent
+    * maintenance, so they run outside the replay marker. */
+  private def sinkStream(stream: DataFrame, spark: SparkSession,
+                         router: SinkRouter, checkpointDir: String,
+                         trigger: Trigger, compactEvery: Int,
+                         compactMaxFiles: Int,
+                         onBatch: Long => Unit = _ => ())(
+      rows: (DataFrame, Long) => DataFrame): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        router.runOnce(batchId, streamId = checkpointDir) {
+          val cached = batch.persist()
+          try router.write(rows(cached, batchId))
+          finally { cached.unpersist(false); () }
+        }
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          router.compactAll(spark, compactMaxFiles)
+        onBatch(batchId)
+        ()
+      }
+      .start()
 
   /** Missing event time defaults to received_at, else processing time
     * (the reference ingest stamps receivedAt and uses it as the event
@@ -112,20 +167,6 @@ object EventPipeline {
     df.withColumn("timestamp",
       coalesce(col("timestamp"), col("received_at"), current_timestamp()))
 
-  /** The streaming stage graph WITHOUT the layout: parse + watermarked
-    * dedup over the GOOD rows, quarantine rows unioned in (identified
-    * by a non-null `error` column). Corrupt rows must stay OUT of the
-    * watermarked branch: they carry no event time, and stamping them
-    * with processing time would drag the event-time watermark to
-    * wall-clock now — one bad line in a historical backfill would then
-    * silently expire every older event in later batches. The bad branch
-    * re-scans the source (union children are independent) but parses
-    * only a one-field `type` probe, not the full envelope, so the
-    * second pass costs a text scan + a trivial from_json. [[start]]
-    * consumes this and applies config rerouting + the layout inside
-    * foreachBatch — the layout is a narrow projection, but the reroute
-    * join needs the envelope's `connection_id` and the CURRENT config
-    * snapshot, which only exists per batch. */
   /** Billing quota enforcement INSIDE the pipeline (ref free tier
     * "200k events/mo", README.md:62): per (write_key, month), a
     * running admitted count flags each event `billable` before it
@@ -145,10 +186,8 @@ object EventPipeline {
                          quota: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = env.sparkSession
-    val scope = java.security.MessageDigest.getInstance("MD5")
-      .digest(streamId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString.take(12)
-    val qdir = new java.io.File(s"$warehouseDir/_quota/$scope")
+    val qdir = new java.io.File(
+      s"$warehouseDir/_quota/${SinkRouter.streamScope(streamId)}")
     qdir.mkdirs()
     // batch-scoped commit (the CommitLog layout-as-log style): a
     // replayed batch overwrites its own delta; readers consult only
@@ -157,13 +196,13 @@ object EventPipeline {
       .listPriorDeltas(qdir, "delta-", batchId)
       .map(_.getAbsolutePath)
     val prior =
-      if (priorDirs.isEmpty)
-        spark.emptyDataFrame
-          .select(lit("").as("_qws"), lit("").as("_qmonth"),
-            lit(0L).as("_qprior")).limit(0)
-      else spark.read.parquet(priorDirs.toIndexedSeq: _*)
-        .groupBy(col("_qws"), col("_qmonth"))
-        .agg(sum(col("_qn")).as("_qprior"))
+      if (priorDirs.nonEmpty)
+        spark.read.parquet(priorDirs.toIndexedSeq: _*)
+          .groupBy(col("_qws"), col("_qmonth"))
+          .agg(sum(col("_qn")).as("_qprior"))
+      else spark.emptyDataFrame
+        .select(lit("").as("_qws"), lit("").as("_qmonth"),
+          lit(0L).as("_qprior")).limit(0)
     val keyed = env.select(col("message_id"),
       coalesce(col("write_key"), lit("")).as("_qws"),
       date_format(date_trunc("month", col("timestamp")), "yyyy-MM")
@@ -236,19 +275,18 @@ object EventPipeline {
     * delivery logs, duplicates included — the 401-per-request shape).
     * The probe stays narrow: one `get_json_object` field plus a
     * broadcast key join, both codegen'd, paid before the envelope
-    * parse either way.
+    * parse either way. [[start]] consumes this and applies config
+    * rerouting + the layout inside foreachBatch — the reroute join needs
+    * the envelope's `connection_id` and the CURRENT config snapshot,
+    * which only exists per batch.
     * Output columns: (payload, message_id, timestamp, error). */
   private def envelopeStream(raw: DataFrame,
                              dedupWatermark: String,
                              authKeys: Option[DataFrame] = None,
                              authSeeds: Seq[String] = Nil): DataFrame = {
     val value = col("value").cast("string")
-    val narrowSchema = org.apache.spark.sql.types.StructType(
-      EventSchema.envelope.fields.filter(f =>
-        Set("type", "message_id", "timestamp", "received_at")
-          .contains(f.name)))
-    val parsed = raw.select(value.as("payload"),
-      from_json(value, narrowSchema).as("e"))
+    val parsed = raw.select(value.as("payload"), from_json(value,
+      envelopeFields("type", "message_id", "timestamp", "received_at")).as("e"))
     val wellFormed = parsed
       .filter(!isCorruptStruct(col("e")))
       .select(col("payload"),
@@ -274,13 +312,8 @@ object EventPipeline {
       .withWatermark("timestamp", dedupWatermark)
       .dropDuplicatesWithinWatermark("message_id")
       .withColumn("error", lit(null).cast("string"))
-    val bad = raw
-      .select(value.as("payload"), from_json(value, typeProbe).as("p"))
-      .filter(isCorruptStruct(col("p")))
-      .select(col("payload"), lit(null).cast("string").as("message_id"),
-        lit(null).cast("timestamp").as("timestamp"),
-        lit("parse_error").as("error"))
-    (Seq(good) ++ authBad ++ Seq(bad)).reduce(_ unionByName _)
+    (good +: authBad.toSeq).reduce(_ unionByName _)
+      .unionByName(corruptLines(raw), allowMissingColumns = true)
   }
 
   /** Adapt a Kafka-wire DataFrame (the connector's fixed output schema:
@@ -385,14 +418,8 @@ object EventPipeline {
             authKeys: Option[DataFrame] = None,
             authSeeds: Seq[String] =
               Seq(graft.sources.WriteKeyAuth.DefaultSeed)): StreamingQuery = {
-    require(Seq("json", "variant").contains(openProps),
-      s"unsupported openProps: $openProps")
+    val parseProps = openPropsParser(openProps)
     val session = tunedSession(spark, statePartitions, stateStore)
-    val raw = session.readStream
-      .format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load(inputDir)
-    val router = new SinkRouter(warehouseDir, options)
     // S4: live connection configs — re-checked before every micro-batch
     // (driver-side stat; re-read only on change), so a config edit
     // reroutes the NEXT batch without restarting the stream. The
@@ -412,67 +439,44 @@ object EventPipeline {
             coalesce(col("_cfg_table"), col("table_name")))
           .drop("_cfg_table", "_cfg_enabled")
     }
-    envelopeStream(raw, dedupWatermark, authKeys, authSeeds).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // split the quarantine rows off BEFORE routing so their
-        // raw_event/error columns never pollute the real tables'
-        // schemas; marker keyed by checkpoint = this stream's batch-id
-        // namespace; the whole split commits as one idempotent unit
-        router.runOnce(batchId, streamId = checkpointDir) {
-          val cached = batch.persist()
-          try {
-            // S9 auth already ran in envelopeStream, BEFORE the dedup
-            // stateful stage (see there) — rejects arrive as error rows
-            // and fall into the quarantine branch with the others
-            val isQ = col("error").isNotNull
-            val good = cached.filter(!isQ)
-            // the ONE full envelope parse — after the stateful stage;
-            // the stream's dedup key + defaulted event time override
-            // the re-parsed fields so dedup and storage cannot disagree
-            // (uuid-defaulted ids are nondeterministic per parse)
-            val env0 = good
-              .select(col("message_id").as("_mid"),
-                col("timestamp").as("_ts"),
-                from_json(col("payload"), EventSchema.envelope).as("e"))
-              .select(col("_mid"), col("_ts"), col("e.*"))
-              .withColumn("message_id", col("_mid"))
-              .withColumn("timestamp", col("_ts"))
-              .drop("_mid", "_ts")
-            val env =
-              if (openProps != "variant") env0
-              else env0
-                .withColumn("properties", try_parse_json(col("properties")))
-                .withColumn("traits", try_parse_json(col("traits")))
-            val out = applyLayout(reroute(env), layout)
-            router.write(quotaPerMonth match {
-              case None => out
-              case Some(q) =>
-                val flags = quotaFlags(env, warehouseDir, checkpointDir,
-                  batchId, q)
-                // layouts project fixed column sets, so the flag joins
-                // back on the layout's id column after the layout
-                // (batch-sized join); jitsu-legacy renames the envelope
-                // id, so rename the flag key to match
-                val idCol =
-                  if (layout == "jitsu-legacy") "eventn_ctx_event_id"
-                  else "message_id"
-                out.join(flags.withColumnRenamed("message_id", idCol),
-                  Seq(idCol), "left")
-            })
-            val bad = cached.filter(isQ)
-              .select(col("payload").as("raw_event"), col("error"),
-                lit(SinkRouter.QuarantineTable).as("_table"))
-            if (!bad.isEmpty) router.write(bad)
-          } finally { cached.unpersist(false); () }
+    sinkStream(envelopeStream(textLines(session, inputDir, maxFilesPerTrigger),
+        dedupWatermark, authKeys, authSeeds), spark,
+        new SinkRouter(warehouseDir, options), checkpointDir, trigger,
+        compactEvery, compactMaxFiles) { (cached, batchId) =>
+      // S9 auth already ran in envelopeStream, BEFORE the dedup
+      // stateful stage (see there) — rejects arrive as error rows and
+      // become dead-letter records with the corrupt lines
+      withDeadLetters(cached) { good =>
+        // the ONE full envelope parse — after the stateful stage; the
+        // stream's dedup key + defaulted event time override the
+        // re-parsed fields so dedup and storage cannot disagree
+        // (uuid-defaulted ids are nondeterministic per parse)
+        val env = parseProps(good
+          .select(col("message_id").as("_mid"),
+            col("timestamp").as("_ts"),
+            from_json(col("payload"), EventSchema.envelope).as("e"))
+          .select(col("_mid"), col("_ts"), col("e.*"))
+          .withColumn("message_id", col("_mid"))
+          .withColumn("timestamp", col("_ts"))
+          .drop("_mid", "_ts"))
+        val out = applyLayout(reroute(env), layout)
+        quotaPerMonth match {
+          case None => out
+          case Some(q) =>
+            val flags = quotaFlags(env, warehouseDir, checkpointDir,
+              batchId, q)
+            // layouts project fixed column sets, so the flag joins back
+            // on the layout's id column after the layout (batch-sized
+            // join); jitsu-legacy renames the envelope id, so rename the
+            // flag key to match
+            val idCol =
+              if (layout == "jitsu-legacy") "eventn_ctx_event_id"
+              else "message_id"
+            out.join(flags.withColumnRenamed("message_id", idCol),
+              Seq(idCol), "left")
         }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          router.compactAll(spark, compactMaxFiles)
-        ()
       }
-      .start()
+    }
   }
 
   /** [[start]] with the reference's USER-RECOGNITION stage inside the
@@ -513,13 +517,9 @@ object EventPipeline {
             // commit (outside the runOnce marker, like compaction) —
             // the soak harness drives vacuum/MV-refresh/snapshot here
             onBatch: Long => Unit = _ => ()): StreamingQuery = {
-    require(Seq("json", "variant").contains(openProps),
-      s"unsupported openProps: $openProps")
+    val parseProps = openPropsParser(openProps)
     val session = tunedSession(spark, statePartitions, stateStore)
-    val raw = session.readStream
-      .format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load(inputDir)
+    val raw = textLines(session, inputDir, maxFilesPerTrigger)
     val value = col("value").cast("string")
     // the in-stream parse is NARROW: only the UR key/identifier fields
     // plus the corrupt probe — the raw line itself rides through
@@ -527,58 +527,31 @@ object EventPipeline {
     // in foreachBatch after recognition. Tokenizing a 5-field
     // projection is a fraction of materializing the deep envelope
     // struct, and the to_json re-serialization disappears entirely.
-    val tagNames = graft.operators.UserRecognition.tagFields(urConfig)
-    val tagSchema = org.apache.spark.sql.types.StructType(
-      EventSchema.envelope.fields.filter(f => tagNames.contains(f.name)))
-    val parsed = raw.select(value.as("payload"),
-      from_json(value, tagSchema).as("e"))
+    val parsed = raw.select(value.as("payload"), from_json(value,
+      envelopeFields(graft.operators.UserRecognition.tagFields(urConfig): _*))
+      .as("e"))
     val tagged = graft.operators.UserRecognition.tagRawLines(
       parsed.filter(!isCorruptStruct(col("e"))), urConfig, urWatermark)
     val resolved = graft.operators.UserRecognition
       .resolveTagged(tagged, urConfig)
       .toDF("payload")
       .withColumn("error", lit(null).cast("string"))
-    val bad = raw
-      .select(value.as("payload"), from_json(value, typeProbe).as("p"))
-      .filter(isCorruptStruct(col("p")))
-      .select(col("payload"), lit("parse_error").as("error"))
-    val router = new SinkRouter(warehouseDir, options)
-    resolved.unionByName(bad).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        router.runOnce(batchId, streamId = checkpointDir) {
-          val cached = batch.persist()
-          try {
-            val goodRows = cached.filter(col("error").isNull)
-              .select(col("payload").as("value"))
-              .as[String](org.apache.spark.sql.Encoders.STRING)
-            // no per-parse uuid() default here: the tag stage already
-            // injected a deterministic message_id (hash of the raw
-            // line) into any id-less payload BEFORE recognition, so a
-            // UR merged re-emission or a post-crash replay of this
-            // batch re-parses to the SAME id and the sink MERGE
-            // collapses it (fromJson's uuid() fallback never fires)
-            val env0 = defaultTimestamp(EventSchema.fromJson(goodRows))
-            val env =
-              if (openProps != "variant") env0
-              else env0
-                .withColumn("properties", try_parse_json(col("properties")))
-                .withColumn("traits", try_parse_json(col("traits")))
-            router.write(applyLayout(env, layout))
-            val badRows = cached.filter(col("error").isNotNull)
-              .select(col("payload").as("raw_event"), col("error"),
-                lit(SinkRouter.QuarantineTable).as("_table"))
-            if (!badRows.isEmpty) router.write(badRows)
-          } finally { cached.unpersist(false); () }
-        }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          router.compactAll(spark, compactMaxFiles)
-        onBatch(batchId)
-        ()
+    sinkStream(resolved.unionByName(corruptLines(raw)), spark,
+        new SinkRouter(warehouseDir, options), checkpointDir, trigger,
+        compactEvery, compactMaxFiles, onBatch) { (cached, _) =>
+      withDeadLetters(cached) { good =>
+        // no per-parse uuid() default here: the tag stage already
+        // injected a deterministic message_id (hash of the raw line)
+        // into any id-less payload BEFORE recognition, so a UR merged
+        // re-emission or a post-crash replay of this batch re-parses to
+        // the SAME id and the sink MERGE collapses it (fromJson's uuid()
+        // fallback never fires)
+        val env = defaultTimestamp(EventSchema.fromJson(
+          good.select(col("payload").as("value"))
+            .as[String](org.apache.spark.sql.Encoders.STRING)))
+        applyLayout(parseProps(env), layout)
       }
-      .start()
+    }
   }
 
   /** Alignment-data pipeline mode: the ingest stream feeds the
@@ -613,15 +586,9 @@ object EventPipeline {
   private[graft] def alignmentEvents(session: SparkSession,
       inputDir: String, maxFilesPerTrigger: Int)
       : org.apache.spark.sql.DataFrame = {
-    val raw = session.readStream
-      .format("text")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .load(inputDir)
-    val narrowSchema = org.apache.spark.sql.types.StructType(
-      EventSchema.envelope.fields.filter(f =>
-        Set("message_id", "timestamp", "received_at", "user_id",
-          "anonymous_id", "event", "type", "properties")
-          .contains(f.name)))
+    val raw = textLines(session, inputDir, maxFilesPerTrigger)
+    val narrowSchema = envelopeFields("message_id", "timestamp",
+      "received_at", "user_id", "anonymous_id", "event", "type", "properties")
     raw
       .select(from_json(col("value").cast("string"), narrowSchema).as("e"))
       .filter(!isCorruptStruct(col("e")))
@@ -664,20 +631,10 @@ object EventPipeline {
       case _ => graft.operators.Conversations
         .preferencePairsStream(events, watermark)
     }
-    val router = new SinkRouter(warehouseDir, SinkOptions())
-    out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        router.runOnce(batchId, streamId = checkpointDir) {
-          router.write(batch.withColumn("_table", lit(mode)))
-        }
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
-          router.compactAll(spark, compactMaxFiles)
-        ()
-      }
-      .start()
+    sinkStream(out, spark, new SinkRouter(warehouseDir, SinkOptions()),
+        checkpointDir, trigger, compactEvery, compactMaxFiles) {
+      (cached, _) => cached.withColumn("_table", lit(mode))
+    }
   }
 
   /** Streaming metrics side-channel: minute-windowed rollup maintained as

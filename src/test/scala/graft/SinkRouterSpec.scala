@@ -54,6 +54,76 @@ class SinkRouterSpec extends GraftSpec {
     assert(quarantined.filter(col("raw_event").contains("\"m2\"")).count() == 1)
   }
 
+  test("one write routes events, dead-letter records and invalid names " +
+    "in one pass; the record column never reaches an event table") {
+    val wh = tmpDir()
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    // an event column literally named `error` must not collide with the
+    // dead-letter record's error
+    val events = Seq[(String, java.sql.Timestamp, String, String)](
+      ("m1", ts, "checkout failed", "events"),
+      ("m2", ts, null, "events"),
+      ("m3", ts, "e3", "../escape"),
+      ("m4", ts, "e4", null),
+      ("m5", ts, "e5", "quarantine") // user-supplied: a reserved name
+    ).toDF("message_id", "timestamp", "error", "_table")
+    val records = SinkRouter.quarantine(
+      Seq(("not json", "parse_error"), ("{\"type\":", "parse_error"))
+        .toDF("line", "why"), col("line"), col("why"))
+    val router = new SinkRouter(wh, SinkOptions(deduplicate = true))
+    val batch = events.unionByName(records, allowMissingColumns = true)
+    router.write(batch)
+    val ev = spark.read.parquet(s"$wh/events")
+    assert(!ev.columns.contains("raw_event") &&
+      !ev.columns.contains(SinkRouter.QuarantineCol), ev.columns.toSeq)
+    assert(ev.select("message_id", "error").as[(String, String)].collect()
+      .toMap == Map("m1" -> "checkout failed", "m2" -> null))
+    assert(!new java.io.File(new java.io.File(wh).getParent, "escape").exists())
+    val q = router.readTable(spark, SinkRouter.QuarantineTable)
+    assert(q.columns.toSeq == Seq("raw_event", "error"))
+    val errors = q.select("error").as[String].collect().toSeq.sorted
+    assert(errors == Seq("invalid_table_name:../escape",
+      "invalid_table_name:null", "invalid_table_name:quarantine",
+      "parse_error", "parse_error"))
+    assert(q.filter(col("error") === "invalid_table_name:quarantine")
+      .select("raw_event").as[String].collect().head.contains("\"e5\""))
+    assert(q.filter(col("error") === "parse_error").select("raw_event")
+      .as[String].collect().toSet == Set("not json", "{\"type\":"))
+    // one commit per table; a replay MERGEs events and appends
+    // dead letters (the quarantine table has no key)
+    router.write(batch)
+    val h = router.history(spark).select(col("table"), col("operation"),
+      element_at(col("metrics"), "rows")).as[(String, String, Long)]
+      .collect().toSeq
+    assert(h == Seq(("events", "create", 2L), ("quarantine", "create", 5L),
+      ("events", "merge", 2L), ("quarantine", "append", 5L)), s"got $h")
+    assert(router.readTable(spark, "events").count() == 2)
+    assert(router.readTable(spark, SinkRouter.QuarantineTable).count() == 10)
+  }
+
+  test("overwriteDates evaluates its input once, on a new and an existing table") {
+    val wh = tmpDir()
+    val router = new SinkRouter(wh)
+    val evals = spark.sparkContext.longAccumulator("overwriteDates-evals")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "message_id STRING, timestamp TIMESTAMP")
+    // RDD-backed, so every evaluation of the source runs the counting
+    // map (the optimizer cannot prune it as it could a UDF column)
+    def counted(day: String, n: Int) = {
+      val rows = (0 until n).map(i => org.apache.spark.sql.Row(s"$day-$i",
+        java.sql.Timestamp.valueOf(s"$day ${10 + i % 3}:00:00")))
+      val acc = evals
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2)
+        .map { r => acc.add(1); r }, schema)
+    }
+    router.overwriteDates(spark, "events", counted("2024-01-01", 12))
+    assert(evals.value == 12L, "new table")
+    evals.reset()
+    router.overwriteDates(spark, "events", counted("2024-01-02", 12))
+    assert(evals.value == 12L, "existing table")
+    assert(router.readTable(spark, "events").count() == 24)
+  }
+
   test("schema evolution: new column appears as null on old rows") {
     val wh = tmpDir()
     val router = new SinkRouter(wh)
