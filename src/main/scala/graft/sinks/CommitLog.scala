@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -117,12 +117,13 @@ object CommitLog {
     * sharing a root must keep it that way or serialize its commits
     * behind the existing tag. */
   def commit(spark: SparkSession, root: String, tag: String,
-             swap: Swap): Unit =
-    commit(spark.sparkContext.hadoopConfiguration, root, tag, swap)
+             swap: Swap): Unit = {
+    val (fs, rootP) = fsOf(spark.sparkContext.hadoopConfiguration, root)
+    commit(fs, rootP, tag, swap)
+  }
 
-  def commit(conf: org.apache.hadoop.conf.Configuration, root: String,
-             tag: String, swap: Swap): Unit = {
-    val (fs, rootP) = fsOf(conf, root)
+  /** [[commit]] through the caller's file-system handle. */
+  def commit(fs: FileSystem, rootP: Path, tag: String, swap: Swap): Unit = {
     val tmp = new Path(rootP, s"$Prefix$tag.tmp")
     val out = fs.create(tmp, true)
     out.write(serialize(swap).getBytes(StandardCharsets.UTF_8))
@@ -147,22 +148,30 @@ object CommitLog {
   /** Complete every persisted-but-unfinished commit under `root` (the
     * roll-forward half; no-op on a healthy table). Writers call this
     * before touching a root a predecessor may have crashed on. */
-  def recover(spark: SparkSession, root: String): Unit =
-    recover(spark.sparkContext.hadoopConfiguration, root)
+  def recover(spark: SparkSession, root: String): Unit = {
+    val (fs, rootP) = fsOf(spark.sparkContext.hadoopConfiguration, root)
+    recover(fs, rootP)
+  }
 
-  def recover(conf: org.apache.hadoop.conf.Configuration,
-              root: String): Unit = {
-    val (fs, rootP) = fsOf(conf, root)
-    if (!fs.exists(rootP)) return
-    fs.listStatus(rootP).map(_.getPath.getName)
+  /** [[recover]] through the caller's file-system handle. */
+  def recover(fs: FileSystem, rootP: Path): Unit =
+    children(fs, rootP).map(_.getPath.getName)
       .filter(n => n.startsWith(Prefix) && !n.endsWith(".tmp"))
       .foreach { name =>
-        val body = new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(
-            fs.open(new Path(rootP, name))),
-          StandardCharsets.UTF_8)
+        val body = readString(fs, new Path(rootP, name))
         execute(fs, rootP, name, deserialize(body))
       }
+
+  /** `dir`'s entries; empty when `dir` does not exist. */
+  private[sinks] def children(fs: FileSystem, dir: Path): Array[FileStatus] =
+    if (fs.exists(dir)) fs.listStatus(dir) else Array.empty
+
+  /** The whole of file `p`, as UTF-8. */
+  private[sinks] def readString(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   /** The idempotent post-manifest executor (see the class doc). */
@@ -212,7 +221,7 @@ object CommitLog {
   def readPriorBatches(spark: SparkSession, path: String,
                        batchId: Long): Option[DataFrame] = {
     val (fs, rootP) = fsOf(spark.sparkContext.hadoopConfiguration, path)
-    val hasEarlier = fs.exists(rootP) && fs.listStatus(rootP).exists { st =>
+    val hasEarlier = children(fs, rootP).exists { st =>
       val nm = st.getPath.getName
       nm.startsWith("_batch=") &&
         scala.util.Try(nm.stripPrefix("_batch=").toLong).toOption
@@ -223,14 +232,17 @@ object CommitLog {
       .filter(col("_batch") < lit(batchId)).drop("_batch"))
   }
 
-  /** Batch ids present as `<prefix><id>` children of `dir`, strictly
+  /** The `<prefix><id>` child dirs of `dir` whose batch id is strictly
     * below `batchId` — the prior-scope listing the `_quota/` counter
-    * deltas replay against. */
-  def listPriorDeltas(dir: java.io.File, prefix: String,
-                      batchId: Long): Seq[java.io.File] =
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
-        scala.util.Try(f.getName.stripPrefix(prefix).toLong).toOption
+    * deltas replay against. Listed through the session's file system,
+    * so `dir` may be on any scheme; a missing `dir` has none. */
+  def listPriorDeltas(spark: SparkSession, dir: String, prefix: String,
+                      batchId: Long): Seq[Path] = {
+    val (fs, dirP) = fsOf(spark.sparkContext.hadoopConfiguration, dir)
+    children(fs, dirP).filter(_.isDirectory).map(_.getPath)
+      .filter(p => p.getName.startsWith(prefix) &&
+        scala.util.Try(p.getName.stripPrefix(prefix).toLong).toOption
           .exists(_ < batchId))
       .toIndexedSeq
+  }
 }

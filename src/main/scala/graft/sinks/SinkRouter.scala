@@ -1,8 +1,8 @@
 package graft.sinks
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType, DateType}
@@ -73,13 +73,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType,
   *    Cost per batch is O(touched partitions), not O(table) — at 100 TB
   *    the sink rewrites a few recent date partitions, never history.
   *
-  * Durability caveat (sandbox compromise, stated honestly): the swap and
-  * recovery use driver-local POSIX directory renames, which are atomic on
-  * a local filesystem but do not exist on S3 (and HDFS rename is not a
-  * cheap metadata op for dir trees on object stores). On a real deployment
-  * this commit protocol is exactly what a table format (Delta/Iceberg)
-  * provides; the partition-pruned merge SHAPE (what to read, what to
-  * rewrite) is the part that transfers unchanged.
+  * One file system: every side file (batch marker, schema sidecar,
+  * `_history`, deletion vector, swap manifest) and every listing goes
+  * through ONE Hadoop `FileSystem` handle, resolved from the session's
+  * Hadoop configuration as Spark's own table writes are, so the data and
+  * its idempotence records share one file system on any scheme. A local
+  * path gets the raw local FS (no `.crc` twin beside each side file).
+  * Side files publish by one rename of a temp file, and a rename that
+  * returns `false` is an error, never a silent skip.
+  *
+  * Durability caveat: the swap and the publishes rely on renames, which
+  * are atomic on a local FS, but copy+delete on object stores, and HDFS
+  * rename does not replace an existing file (so there the second marker
+  * publish fails loudly). On a real deployment this commit protocol is
+  * exactly what a table format (Delta/Iceberg) provides; the partition-
+  * pruned merge SHAPE (what to read, what to rewrite) is the part that
+  * transfers unchanged. Snapshots and clones hard-link data files, which
+  * only a local file system can.
   *
   * Reference contract: jitsu bulker's table options — `deduplicate`,
   * `primaryKey`, `timestampColumn`, `deduplicateWindow`, `schemaFreeze`,
@@ -90,7 +100,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType,
   * lives in `libs/core-functions/src/functions/bulker-destination.ts`.
   */
 case class SinkOptions(
-    mode: String = "batch",            // batch | stream (semantics identical here)
     deduplicate: Boolean = false,
     primaryKey: String = "message_id",
     timestampColumn: String = "timestamp",
@@ -135,6 +144,11 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * [[graft.plans.MvRewrite.MvCatalog.watchCommits]] as the MV
     * staleness signal. */
   def historyDir: String = s"$warehouseDir/_history"
+  private def historyPath = new Path(historyDir)
+
+  /** The one handle every side file and listing goes through (see the
+    * class doc); Spark's reads and writes resolve the same one. */
+  private lazy val fs: FileSystem = SinkRouter.fileSystem(new Path(warehouseDir))
 
   require(Seq("parquet", "orc").contains(options.format),
     s"unsupported table format: ${options.format}")
@@ -204,27 +218,30 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * checkpoint restarts at 0 and must get a fresh marker, or every new
     * batch would be silently skipped against the old high-water mark). */
   def runOnce(batchId: Long, streamId: String = "default")(body: => Unit): Unit = {
-    val marker = Paths.get(warehouseDir,
-      s"_graft_last_batch_${SinkRouter.streamScope(streamId)}")
+    val name = s"_graft_last_batch_${SinkRouter.streamScope(streamId)}"
+    val marker = new Path(warehouseDir, name)
     val last =
-      if (Files.exists(marker))
-        new String(Files.readAllBytes(marker), StandardCharsets.UTF_8).trim.toLong
+      if (fs.exists(marker)) CommitLog.readString(fs, marker).trim.toLong
       else -1L
     if (batchId <= last) return
     body
-    atomicWrite(Paths.get(warehouseDir), marker.getFileName.toString,
-      batchId.toString)
+    atomicWrite(new Path(warehouseDir), name, batchId.toString)
   }
 
-  /** Publish `body` as `dir/name` in one atomic rename of a dot-prefixed
-    * temp file — readers see the old content or the new, never a part. */
+  /** Publish `body` as `dir/name` in one rename of a dot-prefixed temp
+    * file, which replaces an existing `name` in one step on a local FS —
+    * readers see the old content or the new, never a part. */
   private def atomicWrite(dir: Path, name: String, body: String): Unit = {
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    rename(tmp, new Path(dir, name))
   }
+
+  /** `fs.rename`, with Hadoop's `false` (nothing moved) as an error. */
+  private def rename(src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst returned false")
 
   /** Route one batch in one pass: split by `_table` (dead letters and
     * invalid names to `quarantine`, see the class doc), write each
@@ -310,13 +327,8 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   // resume numbering after the HIGHEST existing version (not the file
   // count — [[vacuumHistory]] deletes old entries, and a count-based
   // resume would then reuse live version numbers and corrupt ordering)
-  private lazy val historyStart: Long = {
-    val d = new java.io.File(warehouseDir, "_history")
-    Option(d.list()).getOrElse(Array.empty[String])
-      .filter(n => n.endsWith(".json") && !n.startsWith("."))
-      .flatMap(n => scala.util.Try(n.stripSuffix(".json").toLong).toOption)
-      .maxOption.getOrElse(0L)
-  }
+  private lazy val historyStart: Long =
+    SinkRouter.historyEntries(fs, historyPath).lastOption.fold(0L)(_._1)
 
   /** Truncate the commit log to its newest `keepLast` entries, folding
     * everything older into ONE audit checkpoint entry (table `*`,
@@ -331,31 +343,25 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * treat as "recompute once" (safe, never stale). */
   def vacuumHistory(keepLast: Int): Unit = {
     require(keepLast >= 1, "keepLast must be >= 1")
-    val dir = new java.io.File(warehouseDir, "_history")
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".json") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
+    val files = SinkRouter.historyEntries(fs, historyPath)
     if (files.length <= keepLast) return
     val dropped = files.dropRight(keepLast)
-    val cp = dropped.last
-    val v = scala.util.Try(
-      cp.getName.stripSuffix(".json").toLong).getOrElse(return)
+    val (v, cp) = dropped.last
     // folding over an earlier checkpoint accumulates its count, so the
     // audit total stays exact across repeated vacuums
-    val priorFolds = dropped.map { f =>
-      val body = new String(Files.readAllBytes(f.toPath),
-        StandardCharsets.UTF_8)
+    val priorFolds = dropped.map { case (_, f) =>
+      val body = CommitLog.readString(fs, f)
       if (body.contains(""""operation": "vacuum_checkpoint""""))
         """"commits_folded":\s*(\d+)""".r.findFirstMatchIn(body)
           .map(_.group(1).toLong - 1L).getOrElse(0L)
       else 0L
     }.sum
-    atomicWrite(dir.toPath, cp.getName,
+    atomicWrite(historyPath, cp.getName,
       s"""{"version": $v, "table": "*", """ +
       s""""operation": "vacuum_checkpoint", """ +
       s""""ts_ms": ${System.currentTimeMillis()}, """ +
       s""""metrics": {"commits_folded": ${dropped.length + priorFolds}}}""")
-    dropped.init.foreach(f => Files.deleteIfExists(f.toPath))
+    dropped.init.foreach { case (_, f) => fs.delete(f, false) }
   }
 
   private def recordCommit(table: String, operation: String,
@@ -372,7 +378,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     }
     val mjson = metrics.toSeq.sortBy(_._1)
       .map { case (k, n) => s""""${esc(k)}": $n""" }.mkString("{", ", ", "}")
-    atomicWrite(Paths.get(historyDir), f"$v%012d.json",
+    atomicWrite(historyPath, f"$v%012d.json",
       s"""{"version": $v, "table": "${esc(table)}", """ +
       s""""operation": "${esc(operation)}", """ +
       s""""ts_ms": ${System.currentTimeMillis()}, "metrics": $mjson}""")
@@ -380,33 +386,33 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
   /** The commit log as a DataFrame, ordered by version. */
   def history(spark: SparkSession): DataFrame = {
-    val dir = new java.io.File(historyDir)
     val schema = StructType.fromDDL("version BIGINT, `table` STRING, " +
       "operation STRING, ts_ms BIGINT, metrics MAP<STRING, BIGINT>")
-    if (!dir.exists()) return spark.createDataFrame(
+    if (!fs.exists(historyPath)) return spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    spark.read.schema(schema).json(dir.getAbsolutePath)
+    spark.read.schema(schema).json(historyDir)
       .orderBy(col("version"))
   }
 
-  private def listDir(path: String): Array[java.io.File] =
-    Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
+  private def listDir(path: String): Array[FileStatus] =
+    CommitLog.children(fs, new Path(path))
+
+  private def name(f: FileStatus): String = f.getPath.getName
 
   private def tableExists(path: String): Boolean = listDir(path).exists(f =>
-    f.getName.startsWith(s"$DateCol=") ||
-      (f.isFile && f.getName.endsWith(fmtExt)))
+    name(f).startsWith(s"$DateCol=") || (f.isFile && name(f).endsWith(fmtExt)))
 
-  private def partitionDirs(path: String): Array[java.io.File] =
-    listDir(path).filter(d => d.isDirectory && d.getName.startsWith(s"$DateCol="))
+  private def partitionDirs(path: String): Array[FileStatus] =
+    listDir(path).filter(d => d.isDirectory && name(d).startsWith(s"$DateCol="))
 
   private def partitionDates(path: String): Array[java.sql.Date] =
     partitionDirs(path).map(d =>
-      java.sql.Date.valueOf(d.getName.stripPrefix(s"$DateCol=")))
+      java.sql.Date.valueOf(name(d).stripPrefix(s"$DateCol=")))
 
   private def tableNames: Array[String] = listDir(warehouseDir)
-    .filter(d => d.isDirectory && !d.getName.startsWith(".") &&
-      !d.getName.startsWith("_") && tableExists(d.getAbsolutePath))
-    .map(_.getName)
+    .filter(d => d.isDirectory && !name(d).startsWith(".") &&
+      !name(d).startsWith("_") && tableExists(d.getPath.toString))
+    .map(name)
 
   /** A table written by a pre-partitioning version of this router has bare
     * parquet files under the table dir. Fold them into the epoch partition
@@ -414,15 +420,13 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * rows stay merge-visible) instead of letting SaveMode.Overwrite
     * silently destroy them. */
   private def migrateLegacyLayout(path: String): Unit = {
-    val loose = listDir(path).filter(f => f.isFile && f.getName.endsWith(fmtExt))
+    val loose = listDir(path).filter(f => f.isFile && name(f).endsWith(fmtExt))
     if (loose.nonEmpty) {
-      val epochDir = Paths.get(path, s"$DateCol=$EpochDate")
-      Files.createDirectories(epochDir)
-      loose.foreach(f =>
-        Files.move(f.toPath, epochDir.resolve(f.getName),
-          StandardCopyOption.ATOMIC_MOVE))
+      val epochDir = new Path(path, s"$DateCol=$EpochDate")
+      fs.mkdirs(epochDir)
+      loose.foreach(f => rename(f.getPath, new Path(epochDir, name(f))))
       schemaCache.remove(path)
-      Files.deleteIfExists(Paths.get(path, SchemaSidecar)): Unit
+      fs.delete(new Path(path, SchemaSidecar), false): Unit
     }
   }
 
@@ -461,9 +465,9 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * scan that then persists the sidecar so it never happens again. */
   private def loadSchema(spark: SparkSession, path: String): StructType =
     schemaCache.getOrElseUpdate(path, {
-      val sidecar = Paths.get(path, SchemaSidecar)
-      if (Files.exists(sidecar)) {
-        val json = new String(Files.readAllBytes(sidecar), StandardCharsets.UTF_8)
+      val sidecar = new Path(path, SchemaSidecar)
+      if (fs.exists(sidecar)) {
+        val json = CommitLog.readString(fs, sidecar)
         // normalize on load too: sidecars written before deep
         // normalization may carry non-nullable nested flags
         nullable(DataType.fromJson(json).asInstanceOf[StructType])
@@ -476,7 +480,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     })
 
   private def persistSchema(path: String, schema: StructType): Unit = {
-    atomicWrite(Paths.get(path), SchemaSidecar, schema.json)
+    atomicWrite(new Path(path), SchemaSidecar, schema.json)
     schemaCache(path) = schema
   }
 
@@ -650,11 +654,9 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
       if (created) {
         writePartitioned(incoming, path, SaveMode.Overwrite, dates.length)
         persistSchema(path, nullable(incoming.schema))
-      } else {
-        stagedRewrite(path, incoming, dates.map(d => s"$DateCol=$d"))
-        recordCommit(table, "replace_where",
-          Map("partitions_replaced" -> dates.size.toLong))
-      }
+      } else stagedRewrite(path, incoming, dates.map(d => s"$DateCol=$d"))
+      recordCommit(table, if (created) "create" else "replace_where",
+        Map("partitions_replaced" -> dates.size.toLong))
       dates
     } finally { incoming.unpersist(false); () }
   }
@@ -741,7 +743,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val stage = s"$path/${stageDir(id)}"
     writePartitioned(rows, stage, SaveMode.Overwrite, dirs.length)
     beforeSwapHook()
-    val stagedNames = partitionDirs(stage).map(_.getName).toSet
+    val stagedNames = partitionDirs(stage).map(name).toSet
     // defensive union: every staged dir must be swapped in even if the
     // caller's date bookkeeping ever disagrees with the staged output
     commitSwap(path, id, (dirs ++ stagedNames).distinct, stagedNames)
@@ -760,8 +762,6 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   // staged dates become staged→live `renames`, the stage root drops as
   // `cleanup`.
 
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
-
   private def stageDir(id: String) = s".stage-$id"
 
   /** Commit a staged partition swap: the CommitLog manifest is the
@@ -771,7 +771,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * performed. */
   private def commitSwap(path: String, id: String,
                          dirs: Seq[String], staged: Set[String]): Unit =
-    CommitLog.commit(hadoopConf, path, s"swap-$id", CommitLog.Swap(
+    CommitLog.commit(fs, new Path(path), s"swap-$id", CommitLog.Swap(
       deletes = dirs.filterNot(staged),
       renames = dirs.filter(staged).map(d =>
         CommitLog.Rename(s"${stageDir(id)}/$d", d)),
@@ -787,28 +787,22 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
   private def recover(path: String): Unit = {
     // fast path: a healthy table has no commit/stage/trash entries — one
     // directory listing and out (recover runs before EVERY write/read)
-    val entries = listDir(path)
-    if (!entries.exists(f => f.getName.startsWith(".commit-") ||
-        f.getName.startsWith(".stage-") || f.getName.startsWith(".trash-")))
+    val entries = listDir(path).map(name)
+    if (!entries.exists(n => n.startsWith(".commit-") ||
+        n.startsWith(".stage-") || n.startsWith(".trash-")))
       return
-    CommitLog.recover(hadoopConf, path)
-    val kids = listDir(path)
+    CommitLog.recover(fs, new Path(path))
+    val kids = listDir(path).map(_.getPath)
     kids.filter(_.getName.startsWith(".trash-")).foreach { trash =>
-      Option(trash.listFiles()).getOrElse(Array.empty)
+      CommitLog.children(fs, trash).map(_.getPath)
         .filter(_.getName.startsWith(s"$DateCol="))
         .foreach { part =>
-          val live = Paths.get(path, part.getName)
-          if (!Files.exists(live))
-            Files.move(part.toPath, live, StandardCopyOption.ATOMIC_MOVE)
+          val live = new Path(path, part.getName)
+          if (!fs.exists(live)) rename(part, live)
         }
     }
-    kids.filter(f => f.getName.startsWith(".stage-") || f.getName.startsWith(".trash-"))
-      .foreach(deleteRecursive)
-  }
-
-  private def deleteRecursive(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursive)
-    f.delete(): Unit
+    kids.filter(p => p.getName.startsWith(".stage-") || p.getName.startsWith(".trash-"))
+      .foreach(fs.delete(_, true))
   }
 
   /** Read a routed table back with the sidecar schema (merged superset —
@@ -825,7 +819,7 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
 
   // ---- snapshots (time travel) ---------------------------------------------
 
-  private def snapsRoot(path: String) = Paths.get(path, "_snapshots")
+  private def snapsRoot(path: String) = new Path(path, "_snapshots")
 
   /** Named ZERO-COPY snapshot — the time-travel half of a table format
     * (Delta `VERSION AS OF` / Iceberg snapshots), additive to the swap
@@ -843,45 +837,55 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * snapshot (a half-built `.tmp-` dir is invisible to [[readSnapshot]]
     * and harmless — hard links hold no data of their own).
     *
-    * Durability caveat, same as the class doc: hard links are a POSIX
-    * local-FS notion. On an object store this operator IS the table
-    * format's snapshot manifest (a file LIST, which object-store table
-    * formats keep instead of links); the O(metadata), zero-data-copy
-    * shape is the part that transfers. */
+    * Hard links are a local-FS notion: on any other file system this
+    * throws `UnsupportedOperationException` naming the scheme. There the
+    * operator would be the table format's snapshot manifest (a file
+    * LIST, which object-store table formats keep instead of links); the
+    * O(metadata), zero-data-copy shape is the part that transfers. */
   def snapshot(table: String, name: String): Unit = {
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"),
       s"snapshot name must be [A-Za-z0-9._-]+ and not dot-lead: $name")
     val root = snapsRoot(tablePath(table))
-    linkCopy(table, root.resolve(s".tmp-$name"), root.resolve(name),
+    linkCopy(table, new Path(root, s".tmp-$name"), new Path(root, name),
       s"snapshot already exists: $name")
     recordCommit(table, "snapshot", Map.empty)
   }
 
   /** Hard-link `table`'s sidecar, data files and deletion vector under
-    * `tmpDst`, then publish it as `dst` by one atomic rename. */
+    * `tmpDst`, then publish it as `dst` by one rename. Listing, dirs and
+    * the publish go through the handle; only the link endpoints resolve
+    * to local files. */
   private def linkCopy(table: String, tmpDst: Path, dst: Path,
                        exists: String): Unit = {
+    val local = fs match {
+      case l: RawLocalFileSystem => l
+      case other => throw new UnsupportedOperationException(
+        s"snapshots and clones hard-link files, which needs a local file " +
+          s"system; the warehouse is on ${other.getUri.getScheme}:")
+    }
+    def link(src: Path, to: Path): Unit =
+      java.nio.file.Files.createLink(local.pathToFile(to).toPath,
+        local.pathToFile(src).toPath): Unit
     val path = tablePath(table)
     recover(path)
-    val sidecar = Paths.get(path, SchemaSidecar)
-    if (!Files.exists(sidecar))
+    val sidecar = new Path(path, SchemaSidecar)
+    if (!fs.exists(sidecar))
       throw new IllegalStateException(
         s"table $table has no schema sidecar (write to it first)")
-    if (Files.exists(dst)) throw new IllegalStateException(exists)
-    deleteRecursive(tmpDst.toFile)
-    Files.createDirectories(tmpDst)
-    Files.createLink(tmpDst.resolve(SchemaSidecar), sidecar): Unit
-    def linkDir(src: java.io.File, to: Path): Unit = {
-      Files.createDirectories(to)
-      Option(src.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith(".") &&
-          !f.getName.startsWith("_"))
-        .foreach(f => Files.createLink(to.resolve(f.getName), f.toPath))
+    if (fs.exists(dst)) throw new IllegalStateException(exists)
+    fs.delete(tmpDst, true)
+    fs.mkdirs(tmpDst)
+    link(sidecar, new Path(tmpDst, SchemaSidecar))
+    def linkDir(src: Path, to: Path): Unit = {
+      fs.mkdirs(to)
+      CommitLog.children(fs, src)
+        .filter(f => f.isFile && !name(f).startsWith(".") && !name(f).startsWith("_"))
+        .foreach(f => link(f.getPath, new Path(to, name(f))))
     }
-    partitionDirs(path).foreach(d => linkDir(d, tmpDst.resolve(d.getName)))
-    val dv = new java.io.File(dvPath(path))
-    if (dv.isDirectory) linkDir(dv, tmpDst.resolve("_deletes"))
-    Files.move(tmpDst, dst, StandardCopyOption.ATOMIC_MOVE): Unit
+    partitionDirs(path).foreach(d => linkDir(d.getPath, new Path(tmpDst, name(d))))
+    val dv = dvPath(path)
+    if (fs.isDirectory(dv)) linkDir(dv, new Path(tmpDst, "_deletes"))
+    rename(tmpDst, dst)
   }
 
   /** Zero-copy WRITABLE clone — the dev/test-branch half of the
@@ -894,11 +898,13 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * compact / delete replace whole partition directories through the
     * staged-write + manifest swap, unlinking rather than rewriting the
     * shared inodes. O(files) metadata ops, zero bytes copied; atomic
-    * publish via directory rename. On an object store the link set
-    * becomes a metadata-manifest copy — the same O(metadata) shape. */
+    * publish via directory rename. Like [[snapshot]], it needs a local
+    * file system and throws `UnsupportedOperationException` on any
+    * other; there the link set would become a metadata-manifest copy —
+    * the same O(metadata) shape. */
   def cloneTable(srcTable: String, dstTable: String): Unit = {
-    linkCopy(srcTable, Paths.get(warehouseDir, s".clone-tmp-$dstTable"),
-      Paths.get(tablePath(dstTable)), s"table already exists: $dstTable")
+    linkCopy(srcTable, new Path(warehouseDir, s".clone-tmp-$dstTable"),
+      new Path(tablePath(dstTable)), s"table already exists: $dstTable")
     recordCommit(dstTable, "clone",
       Map.empty) // source untouched; the clone's history starts here
   }
@@ -908,24 +914,24 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * the snapshot doesn't leak back in time) and the snapshot's own
     * deletion vector. */
   def readSnapshot(spark: SparkSession, table: String, name: String): DataFrame = {
-    val snap = snapsRoot(tablePath(table)).resolve(name)
-    if (!Files.exists(snap))
+    val snap = new Path(snapsRoot(tablePath(table)), name)
+    if (!fs.exists(snap))
       throw new IllegalArgumentException(s"no such snapshot: $table@$name")
     readAt(spark, snap.toString)
   }
 
   def listSnapshots(table: String): Seq[String] =
-    Option(snapsRoot(tablePath(table)).toFile.listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !f.getName.startsWith("."))
-      .map(_.getName).sorted.toSeq
+    CommitLog.children(fs, snapsRoot(tablePath(table)))
+      .filter(f => f.isDirectory && !name(f).startsWith("."))
+      .map(name).sorted.toSeq
 
   /** Drop a snapshot: unlinks its file references (data shared with the
     * live table or other snapshots is untouched — inodes free only when
     * the last link goes). */
   def dropSnapshot(table: String, name: String): Unit = {
-    schemaCache.remove(snapsRoot(tablePath(table)).resolve(name).toString)
-    deleteRecursive(snapsRoot(tablePath(table)).resolve(name).toFile)
+    val snap = new Path(snapsRoot(tablePath(table)), name)
+    schemaCache.remove(snap.toString)
+    fs.delete(snap, true): Unit
   }
 
   /** Targeted row erasure (GDPR right-to-be-forgotten / DELETE WHERE —
@@ -1030,12 +1036,13 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
                             keys: DataFrame): Long = {
     val dv = dvPath(path)
     val fresh =
-      if (!new java.io.File(dv).exists()) keys
-      else keys.join(spark.read.parquet(dv), Seq(options.primaryKey), "left_anti")
+      if (!fs.exists(dv)) keys
+      else keys.join(spark.read.parquet(dv.toString), Seq(options.primaryKey),
+        "left_anti")
     fresh.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = fresh.count()
-      if (n > 0) fresh.coalesce(1).write.mode(SaveMode.Append).parquet(dv)
+      if (n > 0) fresh.coalesce(1).write.mode(SaveMode.Append).parquet(dv.toString)
       n
     } finally { fresh.unpersist(false); () }
   }
@@ -1046,13 +1053,13 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     * upstream replays). Position-keyed vectors (Delta/Iceberg) make the
     * opposite choice; both are stated trade-offs of MoR deletes. */
 
-  private def dvPath(path: String) = s"$path/_deletes"
+  private def dvPath(path: String) = new Path(path, "_deletes")
 
   private def applyDeletes(spark: SparkSession, path: String,
                            df: DataFrame): DataFrame = {
     val dv = dvPath(path)
-    if (!new java.io.File(dv).exists()) df
-    else df.join(broadcast(spark.read.parquet(dv)),
+    if (!fs.exists(dv)) df
+    else df.join(broadcast(spark.read.parquet(dv.toString)),
       Seq(options.primaryKey), "left_anti")
   }
 
@@ -1066,12 +1073,12 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     val path = tablePath(table)
     recover(path)
     val dv = dvPath(path)
-    if (!new java.io.File(dv).exists()) return 0L
-    val keys = broadcast(spark.read.parquet(dv))
+    if (!fs.exists(dv)) return 0L
+    val keys = broadcast(spark.read.parquet(dv.toString))
     val pk = Seq(options.primaryKey)
     val (purged, _) = rewriteWithout(spark, path,
       _.join(keys, pk, "left_semi"), _.join(keys, pk, "left_anti"))
-    deleteRecursive(new java.io.File(dv))
+    fs.delete(dv, true)
     recordCommit(table, "purge_deletes", Map("rows_purged" -> purged))
     purged
   }
@@ -1146,18 +1153,16 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
         // un-tombstone before the write: a key that was deleted in an
         // earlier batch and re-inserted now must come back
         val dv = dvPath(path)
-        if (new java.io.File(dv).exists()) {
-          val cur = spark.read.parquet(dv)
+        if (fs.exists(dv)) {
+          val cur = spark.read.parquet(dv.toString)
           val kept = cur.join(broadcast(upserts.select(col(pk))),
             Seq(pk), "left_anti").persist()
           try {
             if (kept.count() < cur.count()) {
-              val tmp = s"$path/.dv-rewrite"
-              kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-              deleteRecursive(new java.io.File(dv))
-              Files.move(Paths.get(tmp), Paths.get(dv),
-                StandardCopyOption.ATOMIC_MOVE)
-              ()
+              val tmp = new Path(path, ".dv-rewrite")
+              kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+              fs.delete(dv, true)
+              rename(tmp, dv)
             }
           } finally { kept.unpersist(false); () }
         }
@@ -1186,9 +1191,9 @@ class SinkRouter(warehouseDir: String, options: SinkOptions = SinkOptions()) {
     recover(path)
     if (!tableExists(path)) return
     val crowded = partitionDirs(path)
-      .filter(d => Option(d.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(fmtExt)) > maxFilesPerPartition)
-      .map(_.getName)
+      .filter(d => CommitLog.children(fs, d.getPath)
+        .count(f => f.isFile && name(f).endsWith(fmtExt)) > maxFilesPerPartition)
+      .map(name)
     if (crowded.isEmpty) return
     val schema = loadSchema(spark, path)
     val dates = crowded.map(_.stripPrefix(s"$DateCol="))
@@ -1227,6 +1232,26 @@ object SinkRouter {
     rows.select(lit(QuarantineTable).as("_table"),
       record(raw, error).as(QuarantineCol))
 
+  /** The file system holding `path`, resolved through the active
+    * session's Hadoop configuration — the one Spark's own table reads and
+    * writes use. A local path gets the raw local FS behind the cached
+    * checksummed one (which writes a `.crc` twin beside every file and is
+    * shared with Spark's writes, so it is not reconfigured). */
+  private def fileSystem(path: Path): FileSystem =
+    path.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration) match {
+      case local: LocalFileSystem => local.getRawFileSystem
+      case other => other
+    }
+
+  /** The commit log's `<version>.json` entries (temp files skipped),
+    * ascending by version. */
+  private def historyEntries(fs: FileSystem, dir: Path): Array[(Long, Path)] =
+    CommitLog.children(fs, dir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".json") && !p.getName.startsWith("."))
+      .flatMap(p => scala.util.Try(p.getName.stripSuffix(".json").toLong)
+        .toOption.map(_ -> p))
+      .sortBy(_._1)
+
   // (historyDir, table) -> (dir mtime at scan, version). A new commit
   // creates a file, which bumps the directory's mtime — so a matching
   // mtime means the cached answer is still exact and the hit path is
@@ -1240,10 +1265,14 @@ object SinkRouter {
     * [[graft.plans.MvRewrite.MvCatalog]]) compare instead of stat'ing
     * every data file. Memoized against the directory mtime: unchanged
     * log ⇒ one stat; a landed commit ⇒ one listing plus reads of only
-    * the newest tiny JSON entries. */
+    * the newest tiny JSON entries. A store without directory mtimes
+    * reports 0, which never memo-hits. */
   def latestCommit(historyDir: String, table: String): Long = {
-    val dir = new java.io.File(historyDir)
-    val mtime = dir.lastModified() // 0 when the dir does not exist
+    val dir = new Path(historyDir)
+    val fs = fileSystem(dir)
+    // 0 when the dir does not exist, or the store keeps no dir mtimes
+    val mtime = scala.util.Try(fs.getFileStatus(dir).getModificationTime)
+      .getOrElse(0L)
     val key = (historyDir, table)
     val cached = commitMemo.get(key)
     // never trust an mtime still inside the filesystem's timestamp
@@ -1254,16 +1283,11 @@ object SinkRouter {
     // window is one directory listing of a vacuum-bounded log.
     if (cached != null && cached._1 == mtime &&
         mtime < System.currentTimeMillis() - 2000) return cached._2
-    val files = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".json") && !f.getName.startsWith("."))
-      .sortBy(_.getName)(Ordering[String].reverse)
     val needle = s""""table": "$table""""
-    val v = files.find { f =>
-      new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-        .contains(needle)
-    }.flatMap(f => scala.util.Try(
-      f.getName.stripSuffix(".json").toLong).toOption).getOrElse(0L)
-    commitMemo.put(key, (mtime, v))
+    val v = historyEntries(fs, dir).reverseIterator
+      .find { case (_, f) => CommitLog.readString(fs, f).contains(needle) }
+      .fold(0L)(_._1)
+    if (mtime > 0) commitMemo.put(key, (mtime, v))
     v
   }
 }

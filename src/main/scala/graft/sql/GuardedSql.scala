@@ -173,18 +173,11 @@ object GuardedSql {
             h.location.rootPaths.flatMap { p =>
               val fs = p.getFileSystem(conf)
               val parent = p.getParent
-              val hist = if (parent == null) null
-                else new org.apache.hadoop.fs.Path(parent, "_history")
-              // the commit-stamp fast path is LOCAL-ONLY: latestCommit
-              // reads the log through java.io.File, which on HDFS/S3A
-              // would silently see nothing and pin the stamp at 0
-              val scheme = Option(p.toUri.getScheme)
-              val isLocal = scheme.isEmpty || scheme.contains("file")
               val commitV =
-                if (isLocal && hist != null && fs.exists(hist))
-                  graft.sinks.SinkRouter.latestCommit(
-                    hist.toUri.getPath, p.getName)
-                else 0L
+                if (parent == null) 0L
+                else graft.sinks.SinkRouter.latestCommit(
+                  new org.apache.hadoop.fs.Path(parent, "_history").toString,
+                  p.getName)
               if (commitV > 0L) Seq(s"$p@v$commitV")
               else if (!fs.exists(p)) Seq(s"$p:absent")
               else {

@@ -186,18 +186,15 @@ object EventPipeline {
                          quota: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = env.sparkSession
-    val qdir = new java.io.File(
-      s"$warehouseDir/_quota/${SinkRouter.streamScope(streamId)}")
-    qdir.mkdirs()
+    val qdir = s"$warehouseDir/_quota/${SinkRouter.streamScope(streamId)}"
     // batch-scoped commit (the CommitLog layout-as-log style): a
     // replayed batch overwrites its own delta; readers consult only
     // strictly-earlier scopes
     val priorDirs = graft.sinks.CommitLog
-      .listPriorDeltas(qdir, "delta-", batchId)
-      .map(_.getAbsolutePath)
+      .listPriorDeltas(spark, qdir, "delta-", batchId).map(_.toString)
     val prior =
       if (priorDirs.nonEmpty)
-        spark.read.parquet(priorDirs.toIndexedSeq: _*)
+        spark.read.parquet(priorDirs: _*)
           .groupBy(col("_qws"), col("_qmonth"))
           .agg(sum(col("_qn")).as("_qprior"))
       else spark.emptyDataFrame
@@ -219,7 +216,7 @@ object EventPipeline {
     flagged.groupBy(col("_qws"), col("_qmonth"))
       .agg(count(lit(1)).as("_qn"))
       .coalesce(1).write.mode("overwrite")
-      .parquet(s"${qdir.getAbsolutePath}/delta-$batchId")
+      .parquet(s"$qdir/delta-$batchId")
     val out = flagged.select(col("message_id"), col("billable"))
       .localCheckpoint()
     flagged.unpersist(false)

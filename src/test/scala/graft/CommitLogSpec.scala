@@ -238,13 +238,8 @@ class CommitLogSpec extends GraftSpec {
   // live dir is cleared); a false commit-point rename must abort the
   // commit before anything live is touched.
 
-  private def flakyConf: org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    c.setClass("fs.flaky.impl", classOf[FlakyRenameFs],
-      classOf[org.apache.hadoop.fs.FileSystem])
-    c
-  }
+  private def flakyFs = FlakyRenameFs.register(spark)
+  private def flaky(root: String) = new org.apache.hadoop.fs.Path("flaky:" + root)
 
   test("a false staged->live rename aborts, keeps the manifest, and recover rolls forward") {
     val root = tmp()
@@ -252,7 +247,7 @@ class CommitLogSpec extends GraftSpec {
     mkDir(root, ".st", "new")
     FlakyRenameFs.failOnceWhenDstNamed.set("live")
     val ex = intercept[java.io.IOException] {
-      CommitLog.commit(flakyConf, "flaky:" + root, "t",
+      CommitLog.commit(flakyFs, flaky(root), "t",
         CommitLog.Swap(renames = Seq(CommitLog.Rename(".st", "live"))))
     }
     assert(ex.getMessage.contains("manifest left in place"))
@@ -260,7 +255,7 @@ class CommitLogSpec extends GraftSpec {
     // ONLY copy, and the surviving manifest is what lets recover retry
     assert(new java.io.File(root, ".commit-t").exists(), "manifest dropped")
     assert(readMarker(root, ".st").contains("new"), "staged data lost")
-    CommitLog.recover(flakyConf, "flaky:" + root) // rename works again
+    CommitLog.recover(flakyFs, flaky(root)) // rename works again
     assert(readMarker(root, "live").contains("new"))
     assert(!new java.io.File(root, ".commit-t").exists())
     assert(!new java.io.File(root, ".st").exists())
@@ -274,7 +269,7 @@ class CommitLogSpec extends GraftSpec {
       renames = Seq(CommitLog.Rename(".st", "live")))
     FlakyRenameFs.failOnceWhenDstNamed.set(".commit-t2")
     val ex = intercept[java.io.IOException] {
-      CommitLog.commit(flakyConf, "flaky:" + root, "t2", swap)
+      CommitLog.commit(flakyFs, flaky(root), "t2", swap)
     }
     assert(ex.getMessage.contains("commit aborted"))
     // no durable commit record => nothing executed: deletes did not
@@ -282,32 +277,12 @@ class CommitLogSpec extends GraftSpec {
     assert(readMarker(root, "old").contains("old"))
     assert(readMarker(root, ".st").contains("new"))
     assert(!new java.io.File(root, ".commit-t2").exists())
-    CommitLog.recover(flakyConf, "flaky:" + root) // no-op: no manifest
+    CommitLog.recover(flakyFs, flaky(root)) // no-op: no manifest
     assert(readMarker(root, "old").contains("old"))
     // the retry (rename healthy again) completes the swap
-    CommitLog.commit(flakyConf, "flaky:" + root, "t2", swap)
+    CommitLog.commit(flakyFs, flaky(root), "t2", swap)
     assert(readMarker(root, "old").isEmpty)
     assert(readMarker(root, "live").contains("new"))
     assert(!new java.io.File(root, ".commit-t2").exists())
   }
-}
-
-/** A local FS whose rename returns FALSE (once) when the destination's
-  * name matches [[FlakyRenameFs.failOnceWhenDstNamed]] -- the Hadoop
-  * soft-failure mode CommitLog must treat as an abort, not a success. */
-class FlakyRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("flaky:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean = {
-    val want = FlakyRenameFs.failOnceWhenDstNamed.get()
-    if (want != null && dst.getName == want) {
-      FlakyRenameFs.failOnceWhenDstNamed.set(null)
-      false
-    } else super.rename(src, dst)
-  }
-}
-
-object FlakyRenameFs {
-  val failOnceWhenDstNamed =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 }

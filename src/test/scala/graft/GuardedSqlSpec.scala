@@ -111,34 +111,41 @@ class GuardedSqlSpec extends GraftSpec {
 
   test("queryCached: router tables validate by COMMIT VERSION — a landed batch invalidates without any data-file listing") {
     import spark.implicits._
-    val wh = java.nio.file.Files.createTempDirectory("sqlcache-wh").toString
-    val router = new graft.sinks.SinkRouter(wh)
-    router.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      .withColumn("_table", org.apache.spark.sql.functions.lit("t")))
-    def reView(): Unit = spark.read.parquet(s"$wh/t")
-      .createOrReplaceTempView("cache_ver_v")
-    reView()
-    GuardedSql.clearResultCache()
-    val sql = "SELECT k, v FROM cache_ver_v ORDER BY k LIMIT 10"
-    val (r1, c1) = GuardedSql.queryCached(spark, sql)
-    val (_, c2) = GuardedSql.queryCached(spark, sql)
-    assert(!c1 && c2 && r1.count() == 2)
-    // a batch lands through the router: _history version bumps, the
-    // cached entry dies, fresh rows serve
-    router.write(Seq((3L, "c")).toDF("k", "v")
-      .withColumn("_table", org.apache.spark.sql.functions.lit("t")))
-    reView()
-    val (r3, c3) = GuardedSql.queryCached(spark, sql)
-    assert(!c3, "post-commit read must recompute")
-    assert(r3.count() == 3)
-    // a commit to a DIFFERENT table does not invalidate this one
-    val (_, c4) = GuardedSql.queryCached(spark, sql)
-    assert(c4)
-    router.write(Seq((9L, "z")).toDF("k", "v")
-      .withColumn("_table", org.apache.spark.sql.functions.lit("other")))
-    val (_, c5) = GuardedSql.queryCached(spark, sql)
-    assert(c5, "unrelated table's commit must not invalidate")
-    spark.catalog.dropTempView("cache_ver_v")
+    // on file: and on a second scheme, whose commit log the stamp reads
+    // through the same file system
+    FlakyRenameFs.register(spark)
+    for (scheme <- Seq("", "flaky:")) {
+      val wh = scheme + java.nio.file.Files.createTempDirectory("sqlcache-wh").toString
+      val router = new graft.sinks.SinkRouter(wh)
+      router.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+        .withColumn("_table", org.apache.spark.sql.functions.lit("t")))
+      def reView(): Unit = spark.read.parquet(s"$wh/t")
+        .createOrReplaceTempView("cache_ver_v")
+      reView()
+      GuardedSql.clearResultCache()
+      val sql = "SELECT k, v FROM cache_ver_v ORDER BY k LIMIT 10"
+      val (r1, c1) = GuardedSql.queryCached(spark, sql)
+      val (_, c2) = GuardedSql.queryCached(spark, sql)
+      assert(!c1 && c2 && r1.count() == 2)
+      // a batch lands through the router: _history version bumps, the
+      // cached entry dies, fresh rows serve
+      router.write(Seq((3L, "c")).toDF("k", "v")
+        .withColumn("_table", org.apache.spark.sql.functions.lit("t")))
+      reView()
+      val (r3, c3) = GuardedSql.queryCached(spark, sql)
+      assert(!c3, "post-commit read must recompute")
+      assert(r3.count() == 3)
+      // a commit to a DIFFERENT table does not invalidate this one
+      val (_, c4) = GuardedSql.queryCached(spark, sql)
+      assert(c4)
+      router.write(Seq((9L, "z")).toDF("k", "v")
+        .withColumn("_table", org.apache.spark.sql.functions.lit("other")))
+      val (_, c5) = GuardedSql.queryCached(spark, sql)
+      assert(c5, "unrelated table's commit must not invalidate")
+      // the stamp's source, read through the scheme's file system
+      assert(graft.sinks.SinkRouter.latestCommit(s"$wh/_history", "t") > 0L)
+      spark.catalog.dropTempView("cache_ver_v")
+    }
   }
 
   test("queryCached across a history vacuum: a folded commit version falls back to the stat digest — no stale serve, exactly one recompute") {

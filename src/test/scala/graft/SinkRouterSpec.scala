@@ -842,4 +842,93 @@ class SinkRouterSpec extends GraftSpec {
     assert(dev == Map("m1" -> "a", "m9" -> "DEV"),
       s"dev branch must keep the pre-merge value: $dev")
   }
+
+  test("overwriteDates on a new table records its create commit") {
+    val wh = tmpDir()
+    val router = new SinkRouter(wh)
+    router.overwriteDates(spark, "events", Seq(
+        ("m1", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
+      .toDF("message_id", "timestamp"))
+    val h = router.history(spark).select("table", "operation")
+      .as[(String, String)].collect().toSeq
+    assert(h == Seq(("events", "create")), s"got $h")
+    assert(SinkRouter.latestCommit(router.historyDir, "events") > 0L)
+  }
+
+  /** Every side-file path of one router on the warehouse `wh`: batch
+    * markers (with a replay), append and MERGE, MoR delete and purge,
+    * vacuum, compaction, history vacuum, snapshot and clone. Returns the
+    * router and what each step left readable. */
+  private def lifecycle(wh: String): (SinkRouter, Seq[(String, Seq[String])]) = {
+    val router = new SinkRouter(wh, SinkOptions(deduplicate = true))
+    val seen = Seq.newBuilder[(String, Seq[String])]
+    def rows(step: String, df: => org.apache.spark.sql.DataFrame): Unit =
+      seen += step -> df.collect().map(_.toString).sorted.toSeq
+    def dead(line: String) = SinkRouter.quarantine(Seq(line).toDF("line"),
+      col("line"), lit("parse_error"))
+    def withDead(b: org.apache.spark.sql.DataFrame, line: String) =
+      b.unionByName(dead(line), allowMissingColumns = true)
+    val b0 = withDead(batch(("m1", "2023-12-01 10:00:00", "u1"),
+      ("m2", "2024-01-01 10:00:00", null),
+      ("m3", "2024-01-02 10:00:00", "u3")), "bad0")
+    router.writeBatch(b0, 0L) // creates events and quarantine
+    router.writeBatch(batch(("m9", "2024-01-01 10:00:00", "u9")), 0L) // replay
+    rows("replay skipped", router.readTable(spark, "events"))
+    // MERGE into events, append to quarantine (it has no key)
+    router.writeBatch(withDead(batch(("m2", "2024-01-01 10:00:00", "u2"),
+      ("m4", "2024-01-02 11:00:00", "u4")), "bad1"), 1L)
+    rows("merge", router.readTable(spark, "events"))
+    rows("append", router.readTable(spark, SinkRouter.QuarantineTable))
+    assert(router.deleteWhereMor(spark, "events", col("message_id") === "m3") == 1L)
+    rows("delete_mor", router.readTable(spark, "events"))
+    router.snapshot("events", "s1") // links the deletion vector too
+    assert(router.purgeDeletes(spark, "events") == 1L)
+    rows("purge", router.readTable(spark, "events"))
+    rows("vacuum", router.vacuum("events", 10,
+      java.time.LocalDate.parse("2024-01-02")).map(_.toString).toDF())
+    router.compact(spark, SinkRouter.QuarantineTable, maxFilesPerPartition = 1)
+    rows("compact", router.readTable(spark, SinkRouter.QuarantineTable))
+    router.vacuumHistory(keepLast = 4)
+    rows("history", router.history(spark).drop("ts_ms"))
+    rows("snapshot", router.readSnapshot(spark, "events", "s1"))
+    router.cloneTable("events", "events_dev")
+    rows("clone", router.readTable(spark, "events_dev"))
+    (router, seen.result())
+  }
+
+  test("the warehouse on a non-file: scheme keeps every side file on it " +
+    "and matches file:, and a failed marker publish retries cleanly") {
+    FlakyRenameFs.register(spark)
+    val (localWh, flakyRoot) = (tmpDir(), tmpDir())
+    val (local, expected) = lifecycle(localWh)
+    val (router, got) = lifecycle("flaky:" + flakyRoot)
+    assert(got == expected)
+    assert(expected.head._2.size == 3, s"the replayed batch id landed: $expected")
+    // the marker, sidecars and history sit under the flaky root, and no
+    // relative `flaky:` tree appears in the working directory
+    def under(rel: String) = new java.io.File(flakyRoot, rel)
+    val marker = under("").listFiles()
+      .filter(_.getName.startsWith("_graft_last_batch_")).toSeq
+    assert(marker.size == 1, s"markers: $marker")
+    Seq("events", "quarantine", "events_dev",
+        "events/_snapshots/s1").foreach { t =>
+      assert(under(s"$t/_graft_schema.json").isFile, s"$t sidecar")
+    }
+    assert(under("_history").listFiles().count(_.getName.endsWith(".json")) > 0)
+    assert(!new java.io.File("flaky:").exists(), "side files escaped to ./flaky:")
+    // a marker publish whose rename returns false raises; the previous
+    // marker still names the previous batch, and the retried batch
+    // converges to the table one clean delivery gives
+    def lastBatch = new String(Files.readAllBytes(marker.head.toPath), "UTF-8").trim
+    val b2 = batch(("m4", "2024-01-02 11:00:00", "u4b"), ("m5", "2024-01-03 10:00:00", "u5"))
+    local.writeBatch(b2, 2L)
+    FlakyRenameFs.failOnceWhenDstNamed.set(marker.head.getName)
+    intercept[java.io.IOException](router.writeBatch(b2, 2L))
+    assert(lastBatch == "1")
+    router.writeBatch(b2, 2L)
+    assert(lastBatch == "2")
+    def table(r: SinkRouter) = r.readTable(spark, "events").collect()
+      .map(_.toString).sorted.toSeq
+    assert(table(router) == table(local))
+  }
 }
