@@ -1,6 +1,20 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Host-speed calibration: seconds for a fixed CPU-bound job whose
+    * time scales with the host's effective speed, min-of-2 so the first
+    * run's JIT warmup isn't billed. */
+  def calibrate(spark: SparkSession): Double = (1 to 2).map { _ =>
+    val t0 = System.nanoTime()
+    // sum DOUBLES: a long sum of 150M uniform random int64 hashes
+    // overflows int64 almost surely, and ANSI mode (Spark 4 default)
+    // turns that into a fatal ARITHMETIC_OVERFLOW
+    spark.range(0L, 150000000L, 1L, 32)
+      .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h")
+      .agg(Map("h" -> "sum")).head
+    (System.nanoTime() - t0) / 1e9
+  }.min
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -143,23 +157,11 @@ object Bench {
         .split(" ")(0).toDouble
       catch { case _: Throwable => -1.0 }
     val loadStart = loadAvg()
-    // host-speed calibration: a fixed CPU-bound job whose time scales
-    // with this host's effective speed. Recorded in the artifact and
-    // used to NORMALIZE the >2x retime comparison below — a slower (or
-    // merely busier) host than the committed artifact's otherwise
-    // retimes dozens of gates for no reason (the r14 advice finding).
-    // min-of-2 so the first run's JIT warmup isn't billed.
-    def calibrate(): Double = (1 to 2).map { _ =>
-      val t0 = System.nanoTime()
-      // sum DOUBLES: a long sum of 150M uniform random int64 hashes
-      // overflows int64 almost surely, and ANSI mode (Spark 4
-      // default) turns that into a fatal ARITHMETIC_OVERFLOW
-      spark.range(0L, 150000000L, 1L, 32)
-        .selectExpr("CAST(xxhash64(id) AS DOUBLE) AS h")
-        .agg(Map("h" -> "sum")).head
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    val calibSec = calibrate()
+    // recorded in the artifact and used to NORMALIZE the >2x retime
+    // comparison below — a slower (or merely busier) host than the
+    // committed artifact's otherwise retimes dozens of gates for no
+    // reason (the r14 advice finding)
+    val calibSec = calibrate(spark)
     // reps > 1 is a local profiling mode: prints per-rep times to stderr
     // and reports the LAST rep (steady-state) per query
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt

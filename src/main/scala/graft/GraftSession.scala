@@ -33,11 +33,12 @@ object GraftSession {
       // rewrite SMJ→SHJ at runtime when every post-shuffle partition is
       // under 64 MB (bounded build-side memory; AQE skew-split applies
       // to SHJ too, so a skewed partition still splits rather than
-      // OOMs). Env-overridable for A/B measurement.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("GRAFT_PREFER_SMJ", "false"))
+      // OOMs). Both are runtime SQL confs: `Inspect census --conf
+      // spark.sql.join.preferSortMergeJoin=true` shows which gates'
+      // plans flip against these values.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_SHJ_THRESHOLD", "67108864"))
+        "67108864")
       .config("spark.sql.session.timeZone", "UTC")
       // UR trait merge concatenates own+identified key maps; later (identified)
       // keys must win, as in lodash merge

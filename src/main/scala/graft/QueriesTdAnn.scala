@@ -622,8 +622,8 @@ private[graft] object QueriesTdAnn {
     // parallelism) — exact vectors are scheduling-dependent, so the
     // output is the same PROPERTY decision, whose >=6-of-8 floor
     // carries a 2-pair margin that training jitter has never
-    // approached (15/15 probe runs at sf0.001/0.01/0.1 recovered 8/8;
-    // tools/W2vProbe.scala)
+    // approached (15/15 runs at sf0.001/0.01/0.1 recovered 8/8, a
+    // dated measurement; RandomizedInvariantsSpec pins the floor)
     ("td_word2vec_dist",
       ((s, dir) => w2vPairGate(s, dir, numPartitions = 4)),
       """SELECT CAST(COUNT(DISTINCT doc_id % 8) AS BIGINT) AS n_anchors,

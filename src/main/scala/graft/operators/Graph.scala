@@ -390,9 +390,9 @@ object Graph {
     * re-shuffled each iteration). Same arithmetic: the union arms add
     * only +0.0 terms to the opposite sums, which IEEE addition leaves
     * exact; a v with no contributions sums m over {0.0} = 0.0, exactly
-    * coalesce(_in, 0.0) of the join form. Split out so PlanAudit can
-    * dump the round-body plan (the loop's final frame is a checkpoint
-    * scan and shows nothing).
+    * coalesce(_in, 0.0) of the join form. Split out so `Inspect plans
+    * g9_ppr_round` can dump the round-body plan (the loop's final frame
+    * is a checkpoint scan and shows nothing).
     */
   private[graft] def pprRound(withDeg: DataFrame, ranks: DataFrame,
                               seedMass: DataFrame,

@@ -401,7 +401,7 @@ object EventPipeline {
             // VariantType right after the envelope, so every downstream
             // read (layout projections, warehouse queries) is a
             // pre-shredded variant_get instead of a per-access JSON
-            // re-parse (2.1x on wide projections — tools/VariantProbe),
+            // re-parse (2.1x on wide projections, SCALE.md round 8),
             // and the sink stores the binary variant encoding
             openProps: String = "json",
             // S9 ingest auth: a key-store dimension (id, credential) —

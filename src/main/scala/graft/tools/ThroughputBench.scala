@@ -113,8 +113,8 @@ object ThroughputBench {
           compactEvery = compactEvery)
       case "recognized_variant" =>
         // open props parsed ONCE into Spark 4 VariantType after
-        // recognition — the storage-path streaming number (VariantProbe
-        // measured the batch side)
+        // recognition — the storage-path streaming number (SCALE.md
+        // round 8 has the batch side)
         EventPipeline.startRecognized(spark, input.dir, wh, cp,
           maxFilesPerTrigger = 1, statePartitions = statePartitions,
           stateStore = stateStore, urWatermark = "10 minutes",

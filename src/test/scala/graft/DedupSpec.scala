@@ -272,6 +272,10 @@ class DedupSpec extends GraftSpec {
     val dist = Dedup.distributedComponents(pairs)
       .as[(Long, Long)].collect().toMap
     assert(dist == comp)
+    // past driverMaxPairs the guard hands the same pairs to the
+    // distributed fallback
+    assert(Dedup.connectedComponents(pairs, driverMaxPairs = 1)
+      .as[(Long, Long)].collect().toMap == comp)
   }
 
   test("clustersBestOf keeps the highest-quality member, min-id on ties") {

@@ -257,6 +257,13 @@ class SamplingSpec extends GraftSpec {
       .collect().map(r => r.getAs[Long]("alloc_tokens"))
     assert(even.sorted.toSeq == Seq(3L, 3L, 4L))
 
+    // more domains than maxDomains is a per-row key: rejected loudly,
+    // never truncated
+    val tooMany = intercept[IllegalArgumentException](
+      Sampling.unimaxAllocation(av, "domain", "avail",
+        budgetTokens = 100L, maxEpochsMilli = 1000L, maxDomains = 2))
+    assert(tooMany.getMessage.contains("domains"))
+
     assert(Sampling.unimaxAllocation(
       Seq.empty[(String, Long)].toDF("domain", "avail"),
       "domain", "avail", 100L, 1000L).count() == 0)

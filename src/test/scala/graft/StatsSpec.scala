@@ -172,6 +172,9 @@ class StatsSpec extends GraftSpec {
       4L -> ((4L, 2L, 0L, 400000L)),
       6L -> ((2L, 0L, 1L, 400000L)),
       11L -> ((1L, 0L, 1L, 400000L))))
+    // 4 distinct lifetimes over a bound of 3: rejected before the fold
+    intercept[IllegalArgumentException](
+      Stats.kaplanMeier(ev, "id", "ts", censorDays = 14, maxTimes = 3))
     // all entities still active: survival never leaves 1.0
     val alive = Seq(("a", "2024-01-01"), ("a", "2024-01-31"),
       ("b", "2024-01-20"), ("b", "2024-01-31")).toDF("id", "ts")
