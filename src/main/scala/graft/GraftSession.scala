@@ -11,6 +11,8 @@ import org.apache.spark.sql.SparkSession
   *   - AQE on: runtime shuffle-partition coalescing + skew-join splitting,
   *     which is what makes the same plans survive a 100x scale-up.
   *   - UTC session time zone for oracle (DuckDB) parity.
+  *   - one codegen class cache for the whole JVM, sized to the working
+  *     set, so warm work reuses its generated classes.
   */
 object GraftSession {
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -48,6 +50,23 @@ object GraftSession {
       // reads as LongType behind this flag; EventSchema.readEvents converts
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // Compile each generated class once per JVM. Spark's class cache
+      // is an LRU keyed by (class loader, code) with 100 entries by
+      // default, and the 8 perfbench `operators` gates generate ~205
+      // classes, so every warm `operators` pass recompiled ~205. The
+      // three perfbench workloads compile ~210 (operators), ~170
+      // (console) and ~160 (an ingest warm-up plus drain) classes, so
+      // 1000 holds all three in one JVM with ~1.8x headroom. A warm
+      // pass now compiles 0-6 and a warm ingest drain 24, down from
+      // 150-185 (SCALE.md "Codegen cache and class-loader isolation").
+      // Both confs are read once per JVM or per session, so they
+      // belong here, not in `spark.conf.set`.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // Artifact isolation gives every session, and every streaming
+      // query's cloned session, its own class loader, which splits the
+      // cache above per session. Nothing here adds a session artifact
+      // (no `addArtifact`, no `ADD JAR`), so isolation buys nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -158,28 +159,36 @@ object Inspect {
   }
 
   /** Min-of-`reps` seconds per gate through the noop sink, which
-    * produces every output row and column. A gate that throws in any
-    * rep is listed in `failed` and never timed. */
+    * produces every output row and column, and the Janino compiles of
+    * that fastest rep (`CodegenMetrics`): a work counter that does not
+    * move with host load, and 0 on a warm rep while Spark's class cache
+    * holds the gate's generated code. A gate that throws in any rep is
+    * listed in `failed` and never timed. */
   def timeGates(spark: SparkSession, dir: String, gates: Seq[(String, Gate)],
-                reps: Int): (Seq[(String, Double)], Seq[String]) = {
+                reps: Int)
+      : (Seq[(String, Double)], Seq[(String, Long)], Seq[String]) = {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = gates.map { case (name, fn) =>
-      val times = (1 to reps).iterator.map { r =>
+      val runs = (1 to reps).iterator.map { r =>
         spark.catalog.clearCache()
         System.gc()
+        val c0 = compiles
         val t0 = System.nanoTime()
         try {
           fn(spark, dir).write.format("noop").mode("overwrite").save()
           val t = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"# $name rep$r $t%.2f")
-          Some(t)
+          val n = compiles - c0
+          System.err.println(f"# $name rep$r $t%.2f compiles=$n")
+          Some((t, n))
         } catch { case e: Throwable =>
           System.err.println(s"# $name FAILED $e")
           None
         }
       }.takeWhile(_.isDefined).flatten.toSeq
-      name -> (if (times.size == reps) Some(times.min) else None)
+      name -> (if (runs.size == reps) Some(runs.minBy(_._1)) else None)
     }
-    (results.collect { case (n, Some(t)) => n -> t },
+    (results.collect { case (n, Some((t, _))) => n -> t },
+      results.collect { case (n, Some((_, c))) => n -> c },
       results.collect { case (n, None) => n })
   }
 
@@ -203,13 +212,16 @@ object Inspect {
         val staged = stage(spark, a.sf, a.scale)
         println(s"# staged ${a.scale}x tables under $staged")
         val calib = Bench.calibrate(spark)
-        val (times, failed) = timeGates(spark, staged, names.map(n => n -> gate(n)), a.reps)
+        val (times, compiles, failed) =
+          timeGates(spark, staged, names.map(n => n -> gate(n)), a.reps)
         def r2(v: Double) = math.rint(v * 100) / 100
         val json = times.map { case (n, t) => s""""$n":${r2(t)}""" }.mkString("{", ",", "}")
+        val compilesJson = compiles.map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
         val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
         val line = s"""{"copies":${a.scale},"cpus":$cpus,""" +
           s""""calib_sec":${r2(calib)},"reps":${a.reps},""" +
-          s""""timed_action":"noop","gates":$json,"failed":$failedJson,"src":"${a.sf}"}"""
+          s""""timed_action":"noop","gates":$json,"compiles":$compilesJson,""" +
+          s""""failed":$failedJson,"src":"${a.sf}"}"""
         val out = a.out.getOrElse(s"SCALE${a.scale}X_c$cpus.json")
         java.nio.file.Files.write(java.nio.file.Paths.get(out), (line + "\n").getBytes("UTF-8"))
         println(line)

@@ -6,7 +6,8 @@ import graft.tools.Inspect
 
 /** `Inspect`'s subcommands on one cheap gate, so the tool cannot rot
   * unseen: the census line format, the per-gate plan files, the timing
-  * loop's failed-gate rule and the shared argument parser. */
+  * loop's failed-gate rule and compile counter, and the shared argument
+  * parser. */
 class InspectSpec extends GraftSpec {
   test("census: one CENSUS line in the join-census format") {
     assert(Inspect.censusLine(spark, sf, "a9_rollup") ==
@@ -27,11 +28,14 @@ class InspectSpec extends GraftSpec {
     val buildThrows: Inspect.Gate = (_, _) => throw new IllegalStateException("boom")
     val writeThrows: Inspect.Gate =
       (s, _) => s.range(3).selectExpr("raise_error('boom') AS x")
-    val (times, failed) = Inspect.timeGates(spark, sf, Seq(
+    val (times, compiles, failed) = Inspect.timeGates(spark, sf, Seq(
       "ok" -> ok, "build_throws" -> buildThrows, "write_throws" -> writeThrows),
       reps = 2)
     assert(times.map(_._1) == Seq("ok") && times.head._2 > 0)
     assert(failed == Seq("build_throws", "write_throws"))
+    // rep 2 reuses rep 1's generated classes from Spark's class cache;
+    // the faster rep is the counted one
+    assert(compiles == Seq("ok" -> 0L))
   }
 
   test("parse: gates positional or comma-separated; bad input rejected") {
