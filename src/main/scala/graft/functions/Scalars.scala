@@ -19,39 +19,19 @@ object Scalars {
   def eventTimeSafe(ts: Column, receivedAt: Column): Column =
     least(coalesce(ts, receivedAt), coalesce(receivedAt, ts))
 
-  def eventTimeSafeNow(ts: Column, receivedAt: Column): Column =
-    least(coalesce(ts, receivedAt), coalesce(receivedAt, ts), current_timestamp())
-
-  /** F4/F5 time truncation (minute for metrics, hour for billing, day for
-    * reports) — ref `metrics.ts:150-152,56-58`. */
-  def truncMinute(ts: Column): Column = date_trunc("minute", ts)
-  def truncHour(ts: Column): Column = date_trunc("hour", ts)
-  def truncDay(ts: Column): Column = date_trunc("day", ts)
-
   /** F6 URL parsing — host/path/search (ref `bulker-destination.ts:60-67`). */
   def urlHost(url: Column): Column = parse_url(url, lit("HOST"))
   def urlPath(url: Column): Column = parse_url(url, lit("PATH"))
-  def urlQuery(url: Column): Column = parse_url(url, lit("QUERY"))
   def urlParam(url: Column, key: String): Column =
     parse_url(url, lit("QUERY"), lit(key))
 
   /** F6 referring domain (ref `analytics-plugin.ts:441`). */
   def referringDomain(referrer: Column): Column = urlHost(referrer)
 
-  /** F7 UTM extraction — query string -> campaign struct
-    * (ref `analytics-plugin.ts:87-99`, `mixpanel-destination.ts:38-56`). */
-  def utmStruct(url: Column): Column = struct(
-    urlParam(url, "utm_campaign").as("name"),
-    urlParam(url, "utm_source").as("source"),
-    urlParam(url, "utm_medium").as("medium"),
-    urlParam(url, "utm_term").as("term"),
-    urlParam(url, "utm_content").as("content"))
-
   /** F8 hashing family (ref `mixpanel-destination.ts:391-393`,
     * `facebook-conversions.ts:11-16`). */
   def md5InsertId(cols: Column*): Column = md5(concat_ws(":", cols: _*))
   def sha256Pii(c: Column): Column = sha2(lower(trim(c)), 256)
-  def sanitizePhone(c: Column): Column = regexp_replace(c, "[^0-9]", "")
 
   /** F8 sha256 -> int partition id mod n
     * (ref `profiles-functions.ts:47-53,87`: 240 partitions). */
@@ -67,10 +47,6 @@ object Scalars {
     * substitute (ref `functions.d.ts:76-91`). */
   def fingerprintId(ip: Column, ua: Column): Column =
     sha2(concat_ws("|", ip, ua), 256)
-
-  /** F11 base64 (ref `mixpanel-destination.ts:383-389`). */
-  def basicAuth(user: Column, pass: Column): Column =
-    concat(lit("Basic "), base64(concat(user, lit(":"), pass).cast(BinaryType)))
 
   /** F12 `plural` — event type -> warehouse table name
     * (ref `bulker-destination.ts:310-323`). */
@@ -167,9 +143,6 @@ object Scalars {
       (if (target == f.dataType) base else base.cast(target)).as(snakeCaseName(f.name))
     }: _*)
   }
-
-  /** F13 JSON ser/de passthroughs. */
-  def jsonGet(c: Column, path: String): Column = get_json_object(c, path)
 
   /** F14 GA4 event-name mapping — the full segment-style switch of
     * `ga4-destination.ts:169-298` + name sanitize/truncate-40 (:164-167). */

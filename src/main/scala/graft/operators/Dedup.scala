@@ -445,48 +445,35 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .persist(lvl)
-    var cachedNext: DataFrame = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .withColumn("_chg", lit(0L))
-      .persist(lvl)
-    var labels = cachedNext.drop("_chg")
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // candidate label per node = min(own, neighbors' labels); the
-      // did-anything-change flag rides along so ONE action per round both
-      // materializes the new labels into cache and returns the
-      // convergence count (a separate count() job per round is pure
-      // scheduler overhead on shallow near-dup graphs)
+    // candidate label per node = min(own, neighbors' labels); the
+    // did-anything-change flag rides along so the round's ONE action
+    // both materializes the new labels and returns the convergence
+    // count (a separate count() job per round is pure scheduler
+    // overhead on shallow near-dup graphs)
+    val (labels, changed) = Iterate.untilStable(
+        edges.select(col("src").as("id")).distinct()
+          .withColumn("component", col("id")),
+        maxIter, Seq(edges), changed = sum(col("_chg"))) { prev =>
+      val labels = prev.drop("_chg")
       val viaEdges = edges
         .join(labels.withColumnRenamed("id", "src"), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("component")).as("nbr"))
-      val prev = cachedNext
-      cachedNext = labels.join(viaEdges, Seq("id"), "left")
+      labels.join(viaEdges, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nbr"), col("component")))
             .as("component"),
           (col("component") > col("nbr")).cast("long").as("_chg"))
-        .persist(lvl)
-      changed = cachedNext.agg(coalesce(sum(col("_chg")), lit(0L)))
-        .head.getLong(0)
-      prev.unpersist(false)
-      labels = cachedNext.drop("_chg")
-      iter += 1
     }
-    edges.unpersist(false)
     // no silent caps: unconverged labels would mean phantom clusters
-    if (changed > 0)
+    if (changed > 0) {
+      Iterate.release(labels)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           s"($changed labels still changing) — component diameter exceeds " +
           "maxIter; raise it (or add the large-star contraction)")
-    // truncate lineage and release the iteration caches — callers get a
-    // materialized frame, not 20 rounds of joins pinned in the cache
-    val out = labels.localCheckpoint(true)
-    cachedNext.unpersist(false)
-    out
+    }
+    labels.drop("_chg")
   }
 
   /** Near-dup cluster summary: one row per component with the surviving

@@ -19,31 +19,20 @@ import org.apache.spark.sql.Column
   * Scale shape: the directed edge list (each undirected edge doubled) is
   * repartitioned ON src ONCE and persisted — every iteration's join
   * then reuses that partitioning and only the node-sized rank table
-  * shuffles per round. Ranks persist per iteration (lineage truncation:
-  * iteration N's plan must not replay iterations 1..N-1), and the
-  * previous round unpersists eagerly. Damping keeps the fixed point
-  * contracting, so a FIXED iteration count (deterministic, engine-
-  * replayable — an unrolled-CTE oracle can reproduce every round's IEEE
-  * arithmetic) is also the production shape: rank pipelines run a known
-  * round budget, not convergence polling.
+  * shuffles per round. Every loop here runs through [[Iterate]]: one
+  * eager checkpoint per round truncates lineage (iteration N's plan must
+  * not replay iterations 1..N-1) and frees the previous round's blocks,
+  * and the persisted edge frames are released when the loop ends. Its
+  * scaladoc carries the FAULT-TOLERANCE TRADE of those checkpoints, which
+  * also covers the one-shot `localCheckpoint(true)` calls in this file.
+  * Damping keeps the fixed point contracting, so a FIXED iteration
+  * count (deterministic, engine-replayable — an unrolled-CTE oracle can
+  * reproduce every round's IEEE arithmetic) is also the production
+  * shape: rank pipelines run a known round budget, not convergence
+  * polling.
   *
   * `edges`: (src, dst) DISTINCT undirected pairs. Returns (v, r). */
 object Graph {
-
-  /** FAULT-TOLERANCE TRADE, every `localCheckpoint(true)` in this file:
-    * localCheckpoint materializes to EXECUTOR-LOCAL block storage and
-    * truncates lineage — after it, the blocks are the only copy, so on
-    * a real cluster an executor loss mid-iteration kills the job (no
-    * recompute path). That is the right default here: the iterative
-    * loops otherwise grow 4^k logical plans (see [[hits]]) and the
-    * bench/gates run single-JVM where "executor loss" means the whole
-    * process died anyway. Cluster deployments that need mid-job
-    * survival should swap in `spark.sparkContext.setCheckpointDir`
-    * (reliable storage) + `.checkpoint()` — same lineage truncation,
-    * one extra write/read of a node-sized frame per round — or
-    * `persist(StorageLevel.MEMORY_AND_DISK_2)` for replica-based
-    * recovery. See SCALE.md "Iterative graph loops and executor loss".
-    */
 
   /** The shared prelude of every fixed-iteration loop in this file:
     * the undirected edge list doubled into both orientations,
@@ -55,8 +44,8 @@ object Graph {
     * join + distinct over the fact table), doubling the most
     * expensive stage of every graph job for no semantic difference
     * (same multiset; both orientations of a row fan out from the
-    * same input row). Ownership contract: the CALLER unpersists (in
-    * its `finally`); the helper never does. */
+    * same input row). Ownership contract: the CALLER releases it (as
+    * an [[Iterate]] static, or in its own `finally`). */
   private def directedEdges(edges: DataFrame,
                             dedup: Boolean = false): DataFrame =
     doubled(edges, dedup).repartition(col("src")).persist()
@@ -80,30 +69,14 @@ object Graph {
     // src each round, so pre-joining deg once removes a per-iteration
     // join (deg is static)
     val withDeg = dir.join(deg, "src").persist()
-    var ranks = deg.select(col("src").as("v"), lit(1.0).as("r")).persist()
-    ranks.count() // materialize before the loop mutates the reference
-    try {
-      (1 to iterations).foreach { _ =>
-        val next = withDeg
-          .join(ranks, withDeg("src") === ranks("v"))
-          .select(col("dst"), (col("r") / col("deg")).as("m"))
-          .groupBy(col("dst"))
-          .agg((lit(1.0 - damping) + lit(damping) * sum(col("m"))).as("r"))
-          .select(col("dst").as("v"), col("r"))
-          .persist()
-        next.count()
-        ranks.unpersist(false)
-        ranks = next
-      }
-      // eager localCheckpoint materializes the node-sized result into
-      // GC-managed storage so the loop's last persisted frame can be
-      // released here instead of leaking a cache entry per call
-      ranks.localCheckpoint(true)
-    } finally {
-      dir.unpersist(false)
-      deg.unpersist(false)
-      withDeg.unpersist(false)
-      ranks.unpersist(false)
+    Iterate(deg.select(col("src").as("v"), lit(1.0).as("r")), iterations,
+      Seq(dir, deg, withDeg)) { ranks =>
+      withDeg
+        .join(ranks, withDeg("src") === ranks("v"))
+        .select(col("dst"), (col("r") / col("deg")).as("m"))
+        .groupBy(col("dst"))
+        .agg((lit(1.0 - damping) + lit(damping) * sum(col("m"))).as("r"))
+        .select(col("dst").as("v"), col("r"))
     }
   }
 
@@ -134,30 +107,16 @@ object Graph {
     val wout = dir.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       .persist()
     val withW = dir.join(wout, "src").persist()
-    var ranks = wout.select(col("src").as("v"), lit(1.0).as("r"))
-      .persist()
-    ranks.count()
-    try {
-      (1 to iterations).foreach { _ =>
-        val next = withW
-          .join(ranks, withW("src") === ranks("v"))
-          .select(col("dst"),
-            (col("r") * col("w") / col("wout")).as("m"))
-          .groupBy(col("dst"))
-          .agg((lit(1.0 - damping) + lit(damping) * sum(col("m")))
-            .as("r"))
-          .select(col("dst").as("v"), col("r"))
-          .persist()
-        next.count()
-        ranks.unpersist(false)
-        ranks = next
-      }
-      ranks.localCheckpoint(true)
-    } finally {
-      dir.unpersist(false)
-      wout.unpersist(false)
-      withW.unpersist(false)
-      ranks.unpersist(false)
+    Iterate(wout.select(col("src").as("v"), lit(1.0).as("r")), iterations,
+      Seq(dir, wout, withW)) { ranks =>
+      withW
+        .join(ranks, withW("src") === ranks("v"))
+        .select(col("dst"),
+          (col("r") * col("w") / col("wout")).as("m"))
+        .groupBy(col("dst"))
+        .agg((lit(1.0 - damping) + lit(damping) * sum(col("m")))
+          .as("r"))
+        .select(col("dst").as("v"), col("r"))
     }
   }
 
@@ -275,26 +234,16 @@ object Graph {
   def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dir = directedEdges(edges, dedup = true)
-    var labels = dir.select(col("src").as("v")).distinct()
-      .withColumn("lbl", col("v")).persist()
-    labels.count()
-    try {
-      (1 to rounds).foreach { _ =>
-        val counts = dir.join(labels, dir("dst") === labels("v"))
-          .groupBy(dir("src"), col("lbl"))
-          .agg(count(lit(1)).as("n"))
-        val w = Window.partitionBy(col("src"))
-          .orderBy(col("n").desc, col("lbl"))
-        val next = counts.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1)
-          .select(col("src").as("v"), col("lbl"))
-          .persist()
-        next.count()
-        labels.unpersist(false)
-        labels = next
-      }
-      labels.withColumnRenamed("lbl", "community").localCheckpoint(true)
-    } finally { dir.unpersist(false); labels.unpersist(false); () }
+    val w = Window.partitionBy(col("src")).orderBy(col("n").desc, col("lbl"))
+    Iterate(dir.select(col("src").as("v")).distinct()
+      .withColumn("lbl", col("v")), rounds, Seq(dir)) { labels =>
+      dir.join(labels, dir("dst") === labels("v"))
+        .groupBy(dir("src"), col("lbl"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1)
+        .select(col("src").as("v"), col("lbl"))
+    }.withColumnRenamed("lbl", "community")
   }
 
   /** Multi-source BFS hop distances over an undirected graph: the
@@ -311,29 +260,21 @@ object Graph {
     * repartitioned on src once and persisted; each round shuffles only
     * the reached-vertex frame (which only grows by the new frontier),
     * aggregated by min. Rounds are FIXED (maxHops), so an unrolled-CTE
-    * oracle replays every round; per-round persist + count truncates
-    * lineage exactly like the other fixed-iteration graph ops. */
+    * oracle replays every round; [[Iterate]]'s per-round checkpoint
+    * truncates lineage exactly like the other fixed-iteration graph
+    * ops. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
                    maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 32, "maxHops must be in [1, 32]")
     val dir = directedEdges(edges, dedup = true)
-    var dist = seeds.select(col("v")).distinct()
-      .withColumn("dist", lit(0L)).persist()
-    dist.count()
-    try {
-      (1 to maxHops).foreach { _ =>
-        val next = dist
-          .unionByName(
-            dir.join(dist, dir("src") === dist("v"))
-              .select(dir("dst").as("v"), (col("dist") + 1L).as("dist")))
-          .groupBy(col("v")).agg(min(col("dist")).as("dist"))
-          .persist()
-        next.count()
-        dist.unpersist(false)
-        dist = next
-      }
-      dist.localCheckpoint(true)
-    } finally { dir.unpersist(false); dist.unpersist(false); () }
+    Iterate(seeds.select(col("v")).distinct().withColumn("dist", lit(0L)),
+      maxHops, Seq(dir)) { dist =>
+      dist
+        .unionByName(
+          dir.join(dist, dir("src") === dist("v"))
+            .select(dir("dst").as("v"), (col("dist") + 1L).as("dist")))
+        .groupBy(col("v")).agg(min(col("dist")).as("dist"))
+    }
   }
 
   /** Personalized PageRank (Haveliwala 2002) — centrality RELATIVE TO
@@ -362,22 +303,9 @@ object Graph {
     // restart mass as UNION rows, not a per-round join: see pprRound
     val seedMass = seed.select(col("v"), lit(0.0).as("m"),
       lit(1.0).as("_s"))
-    var ranks = seed.withColumn("r", lit(1.0)).persist()
-    ranks.count()
-    try {
-      (1 to iterations).foreach { _ =>
-        val next = pprRound(withDeg, ranks, seedMass, damping).persist()
-        next.count()
-        ranks.unpersist(false)
-        ranks = next
-      }
-      ranks.localCheckpoint(true)
-    } finally {
-      dir.unpersist(false)
-      deg.unpersist(false)
-      withDeg.unpersist(false)
-      seed.unpersist(false)
-      ranks.unpersist(false)
+    Iterate(seed.withColumn("r", lit(1.0)), iterations,
+      Seq(dir, deg, withDeg, seed)) { ranks =>
+      pprRound(withDeg, ranks, seedMass, damping)
     }
   }
 
@@ -423,14 +351,16 @@ object Graph {
     * the edge list is kept as TWO persisted copies — partitioned by
     * src and by dst — and neither half-step re-shuffles edges per
     * round (only the node-sized score tables move, the [[pageRank]]
-    * discipline). Each half-step AGGREGATE is eagerly
-    * localCheckpoint'ed before its max is taken: the broadcast-max
-    * normalize references the aggregate TWICE (once feeding the 1-row
-    * max, once feeding the divide), so un-truncated lineage doubles
-    * per half-step — a 4^k logical-plan blow-up that stalls plan and
-    * plan-string machinery long before the data does. A flat
-    * LogicalRDD per half-step makes every round's plan constant-size
-    * and caps the edge-join aggregation at once per half-step. */
+    * discipline). One [[Iterate]] round is one HALF-step, and its
+    * state is that half-step's unnormalized sums `s`: the
+    * broadcast-max normalize references them TWICE (once feeding the
+    * 1-row max, once feeding the divide), so it runs lazily over the
+    * checkpointed sums in the next half-step. Without a checkpoint per
+    * half-step that duplication compounds into a 4^k logical plan (and
+    * re-runs every edge-join aggregation once per reference). A hub
+    * half-step also carries the authorities it read, as union rows
+    * (v, s = NULL, auth), so the last round holds both scores; one
+    * aggregation by v at the end pairs them up (the FULL OUTER). */
   def hits(edges: DataFrame, iterations: Int = 2): DataFrame = {
     require(iterations >= 1 && iterations <= 8,
       "iterations must be in [1, 8]")
@@ -440,37 +370,29 @@ object Graph {
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val eBySrc = e.repartition(col("src")).persist()
     val eByDst = e.repartition(col("dst")).persist()
-    var hubs = eBySrc.select(col("src").as("v")).distinct()
-      .withColumn("r", lit(1.0)).localCheckpoint(true)
-    var auths: DataFrame = null
-    try {
-      (1 to iterations).foreach { _ =>
-        val a = eBySrc.join(hubs, eBySrc("src") === hubs("v"))
+    def withMax(sums: DataFrame): DataFrame =
+      sums.crossJoin(broadcast(sums.agg(max(col("s")).as("m"))))
+    // the init state reads as a hub half-step's output: hub sums of 1.0
+    // (normalize to exactly 1.0) and no authorities yet
+    val last = Iterate(eBySrc.select(col("src").as("v")).distinct()
+        .select(col("v"), lit(1.0).as("s"), lit(null).cast("double").as("auth")),
+      2 * iterations, Seq(e, eBySrc, eByDst)) { state =>
+      val r = withMax(state.filter(col("s").isNotNull))
+        .select(col("v"), (col("s") / col("m")).as("r"))
+      if (state.columns.contains("auth")) // hub sums in: authority half-step
+        eBySrc.join(r, eBySrc("src") === r("v"))
           .groupBy(eBySrc("dst").as("v")).agg(sum(col("r")).as("s"))
-          .localCheckpoint(true)
-        val aMax = a.agg(max(col("s")).as("m"))
-        // lazy: two scans of the flat checkpointed aggregate + the
-        // broadcast 1-row max — constant-size plan, cheap to re-read
-        auths = a.crossJoin(broadcast(aMax))
-          .select(col("v"), (col("s") / col("m")).as("r"))
-        val h = eByDst.join(auths.withColumnRenamed("v", "_av"),
-            eByDst("dst") === col("_av"))
+      else // authority sums in: hub half-step, carrying the authorities
+        eByDst.join(r.withColumnRenamed("v", "_av"), eByDst("dst") === col("_av"))
           .groupBy(eByDst("src").as("v")).agg(sum(col("r")).as("s"))
-          .localCheckpoint(true)
-        val hMax = h.agg(max(col("s")).as("m"))
-        hubs = h.crossJoin(broadcast(hMax))
-          .select(col("v"), (col("s") / col("m")).as("r"))
-      }
-      // eager materialize so the persisted edge copies can release in
-      // the finally; checkpoint storage is GC-managed (no cache leak)
-      hubs.select(col("v"), col("r").as("hub"))
-        .join(auths.select(col("v"), col("r").as("auth")),
-          Seq("v"), "full_outer")
-        .localCheckpoint(true)
-    } finally {
-      eBySrc.unpersist(false)
-      eByDst.unpersist(false)
+          .withColumn("auth", lit(null).cast("double"))
+          .unionByName(r.select(col("v"), lit(null).cast("double").as("s"),
+            col("r").as("auth")))
     }
+    // each v has at most one hub row and one authority row: max() of a
+    // single non-null value is that value
+    withMax(last).groupBy(col("v"))
+      .agg(max(col("s") / col("m")).as("hub"), max(col("auth")).as("auth"))
   }
 
   /** Two-hop reach / bounded harmonic centrality — "how much of the
@@ -521,42 +443,30 @@ object Graph {
     * (v, core_deg, converged) for surviving nodes.
     *
     * Scale shape: per round one degree aggregation over the
-    * suriving-edge frame + one semi-join back — the edge frame only
+    * surviving-edge frame + one join back — the edge frame only
     * shrinks; the shared [[directedEdges]] prelude partitions it on
-    * src once. */
+    * src once. A round keeps the edges it removes one round longer,
+    * flagged `_ok = false`: their count is the round's [[Iterate]]
+    * convergence value, read from the round's own checkpoint, and the
+    * next round drops them before it counts degrees. */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int = 3): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1 && rounds <= 16, "rounds must be in [1, 16]")
     val dir0 = directedEdges(edges, dedup = true)
-    var cur = dir0
-    var converged = false
-    try {
-      (1 to rounds).foreach { _ =>
-        if (!converged) {
-          val keep = cur.groupBy(col("src")).agg(count(lit(1)).as("d"))
-            .filter(col("d") >= k).select(col("src").as("_kv"))
-          val next = cur
-            .join(keep.withColumnRenamed("_kv", "src"), Seq("src"),
-              "left_semi")
-            .join(keep.withColumnRenamed("_kv", "dst"), Seq("dst"),
-              "left_semi")
-            .select(col("src"), col("dst"))
-            .repartition(col("src"))
-            .persist()
-          val nNext = next.count()
-          val nCur = cur.count() // cached — cheap re-read
-          if (cur ne dir0) cur.unpersist(false)
-          converged = nNext == nCur
-          cur = next
-        }
-      }
-      cur.groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
-        .withColumn("converged", lit(converged))
-        .localCheckpoint(true)
-    } finally {
-      dir0.unpersist(false)
-      if (cur ne dir0) cur.unpersist(false)
+    val (last, removed) = Iterate.untilStable(
+        dir0.withColumn("_ok", lit(true)), rounds, Seq(dir0),
+        changed = sum(when(col("_ok"), 0L).otherwise(1L))) { prev =>
+      val cur = prev.filter(col("_ok")).select(col("src"), col("dst"))
+      val ok = cur.groupBy(col("src")).agg((count(lit(1)) >= k).as("_ok"))
+      cur.join(ok.withColumnRenamed("_ok", "_sok"), Seq("src"))
+        .join(ok.select(col("src").as("dst"), col("_ok").as("_dok")),
+          Seq("dst"))
+        .select(col("src"), col("dst"), (col("_sok") && col("_dok")).as("_ok"))
+        .repartition(col("src"))
     }
+    last.filter(col("_ok"))
+      .groupBy(col("src").as("v")).agg(count(lit(1)).as("core_deg"))
+      .withColumn("converged", lit(removed == 0L))
   }
 
   /** Degree assortativity of an undirected graph (Newman 2002) — "do

@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * ≤ 2^k is fully collapsed, so `ceil(log2(maxDepth)) + 1` self-joins
   * cover any tree within `maxDepth` (the same O(log) discipline as
   * [[Dedup]]'s min-label propagation, vs O(depth) for the naive walk).
-  * Each round's result is eagerly localCheckpoint'ed: lineage would
-  * otherwise DOUBLE per round, and the checkpoint keeps the plan flat
-  * and the retry unit one round (deterministic content — a recompute
-  * is merely wasted work, unlike the layout-dependent ranks in
-  * [[Sampling]]).
+  * Each round runs through [[Iterate]], which eagerly checkpoints it:
+  * lineage would otherwise DOUBLE per round, and the checkpoint keeps
+  * the plan flat and the retry unit one round (deterministic content —
+  * a recompute is merely wasted work, unlike the layout-dependent ranks
+  * in [[Sampling]]).
   *
   * Loud-failure contract: a node that cannot reach a root (a cycle, a
   * chain deeper than `maxDepth`, a parent id absent from the table)
@@ -40,11 +40,10 @@ object Hierarchy {
       "maxDepth must be in [1, 100000]")
     val base = nodes.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("par"))
-    var jump = base.select(col("id"), col("par").as("at"),
-      col("id").cast("string").as("path"),
-      lit(0L).as("depth"))
     val rounds = 64 - java.lang.Long.numberOfLeadingZeros(maxDepth.toLong)
-    (1L to rounds).foreach { _ =>
+    val last = Iterate(base.select(col("id"), col("par").as("at"),
+        col("id").cast("string").as("path"), lit(0L).as("depth")),
+      rounds) { jump =>
       val partner = jump.select(col("id").as("_jid"), col("at").as("_jat"),
         col("path").as("_jpath"), col("depth").as("_jdepth"))
       // a row already past maxDepth is DOOMED (the final clamp marks it
@@ -57,7 +56,7 @@ object Hierarchy {
       // splice before freezing at most triples depth.
       val frozen = col("depth") > maxDepth.toLong
       val noSplice = col("_jid").isNull || frozen
-      jump = jump.join(partner, jump("at") === partner("_jid"), "left")
+      jump.join(partner, jump("at") === partner("_jid"), "left")
         .select(col("id"),
           when(noSplice, col("at"))
             .otherwise(col("_jat")).as("at"),
@@ -68,9 +67,8 @@ object Hierarchy {
             // splicing the partner's segment adds its edge count + the
             // edge from this segment's tail to the partner's head
             .otherwise(col("depth") + col("_jdepth") + 1L).as("depth"))
-        .localCheckpoint(true)
     }
-    jump.select(col("id"),
+    last.select(col("id"),
         when(col("at").isNull,
           expr("CAST(element_at(split(path, '>'), -1) AS LONG)"))
           .as("root"),

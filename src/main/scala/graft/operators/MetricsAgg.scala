@@ -19,33 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object MetricsAgg {
 
-  /** A4: status derivation per execution-log row (ref
-    * `services/rotor/src/lib/metrics.ts:156-182`). */
-  def statusCol(functionType: Column, error: Column, dropped: Column): Column =
-    when(dropped, "dropped")
-      .when(error.isNotNull && functionType.startsWith("builtin"), "builtin_function_error")
-      .when(error.isNotNull, "function_error")
-      .otherwise("success")
-
-  /** A2: the minute-grain 7-dim partial aggregate (`metrics.sql:85-110`).
-    * Input: one row per (event x function) execution. */
-  def metricsRollup(rows: DataFrame): DataFrame =
-    rows.groupBy(
-        date_trunc("minute", col("timestamp")).as("period"),
-        col("workspace_id"), col("stream_id"), col("connection_id"),
-        col("function_id"), col("destination_id"), col("status"))
-      .agg(
-        sum(col("events")).as("events"),
-        approx_count_distinct(col("message_id")).as("uniq_events"))
-
-  /** A1: billing "active events" — hour-grain HLL distinct messageIds per
-    * workspace (`metrics.sql:10-49`). */
-  def activeEventsHll(rows: DataFrame): DataFrame =
-    rows.groupBy(
-        col("workspace_id"),
-        date_trunc("hour", col("timestamp")).as("period"))
-      .agg(approx_count_distinct(col("message_id")).as("count"))
-
   /** A1/A5 exact variant (count distinct) — oracle-checkable form. */
   def activeEventsExact(rows: DataFrame, grain: String = "day"): DataFrame =
     rows.groupBy(

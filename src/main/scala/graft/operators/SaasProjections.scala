@@ -45,15 +45,6 @@ object SaasProjections {
       ClickIds.map(k =>
         parse_url(ctx("page.url"), lit("QUERY"), lit(k)).as(k)): _*)
 
-  /** Mixpanel identify ($set) projection: reserved traits get the `$`
-    * prefix (ref :14-23,127-132). */
-  def mixpanelIdentify(events: DataFrame): DataFrame =
-    events.filter(col("type") === "identify").select(
-      coalesce(col("user_id"), col("anonymous_id")).as("distinct_id"),
-      get_json_object(col("traits"), "$.email").as("$email"),
-      get_json_object(col("traits"), "$.name").as("$name"),
-      ctx("geo.city").as("$city"))
-
   /** GA4 event projection (ref `ga4-destination.ts`): client_id from
     * ga4 clientId else fingerprint, mapped+sanitized event name,
     * session_id, engagement. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed BPE tokenizer training + encoding (training-data
@@ -162,7 +162,7 @@ object Tokenizer {
         sinceCheckpoint += 1
         if (sinceCheckpoint >= 4) { // bounded recompute depth, fewer jobs
           val cp = words.localCheckpoint()
-          lastCheckpoint.unpersist()
+          Iterate.release(lastCheckpoint)
           lastCheckpoint = cp
           words = cp
           sinceCheckpoint = 0
@@ -170,15 +170,8 @@ object Tokenizer {
         rank += 1
       }
     }
-    lastCheckpoint.unpersist()
+    Iterate.release(lastCheckpoint)
     merges.result()
-  }
-
-  /** Merge list as a DataFrame (rank, left, right, pair_count). */
-  def mergesDf(spark: SparkSession, merges: Seq[Merge]): DataFrame = {
-    import spark.implicits._
-    merges.map(m => (m.rank, m.left, m.right, m.count))
-      .toDF("rank", "left", "right", "pair_count")
   }
 
   /** Encode one word with trained merges: repeatedly merge the

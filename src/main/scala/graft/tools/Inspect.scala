@@ -1,7 +1,11 @@
 package graft.tools
 
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession, graftshim}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
@@ -158,37 +162,78 @@ object Inspect {
     staged
   }
 
+  /** One rep of a gate: seconds, Janino compiles (`CodegenMetrics`),
+    * Spark jobs and executed (not skipped) stages. */
+  final case class Rep(sec: Double, compiles: Long, jobs: Long, stages: Long)
+
+  /** Counts the jobs and executed stages of one job group. */
+  private final class GroupCounter(group: String) extends SparkListener {
+    private val stageIds = mutable.Set[Int]()
+    private var jobs, stages = 0L
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+        jobs += 1
+        stageIds ++= e.stageIds
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { if (stageIds.remove(e.stageInfo.stageId)) stages += 1 }
+    def counts: (Long, Long) = synchronized((jobs, stages))
+  }
+
+  /** Runs `body` under job group `group`; returns its result with the
+    * Spark jobs and executed (not skipped) stages it ran. */
+  private[graft] def withJobCount[T](sc: SparkContext, group: String)(
+      body: => T): (T, Long, Long) = {
+    val counter = new GroupCounter(group)
+    sc.addSparkListener(counter)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      graftshim.awaitListeners(sc)
+      val (jobs, stages) = counter.counts
+      (out, jobs, stages)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(counter)
+    }
+  }
+
   /** Min-of-`reps` seconds per gate through the noop sink, which
-    * produces every output row and column, and the Janino compiles of
-    * that fastest rep (`CodegenMetrics`): a work counter that does not
-    * move with host load, and 0 on a warm rep while Spark's class cache
-    * holds the gate's generated code. A gate that throws in any rep is
+    * produces every output row and column, with the work counters of
+    * that fastest rep. Compiles, jobs and stages do not move with host
+    * load; compiles read 0 on a warm rep while Spark's class cache holds
+    * the gate's generated code. Jobs and stages include the gate's
+    * build (its eager work, such as iterative loops) and the write: each
+    * rep runs under its own job group. A gate that throws in any rep is
     * listed in `failed` and never timed. */
   def timeGates(spark: SparkSession, dir: String, gates: Seq[(String, Gate)],
-                reps: Int)
-      : (Seq[(String, Double)], Seq[(String, Long)], Seq[String]) = {
+                reps: Int): (Seq[(String, Rep)], Seq[String]) = {
+    val sc = spark.sparkContext
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = gates.map { case (name, fn) =>
       val runs = (1 to reps).iterator.map { r =>
         spark.catalog.clearCache()
         System.gc()
         val c0 = compiles
-        val t0 = System.nanoTime()
         try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          val t = (System.nanoTime() - t0) / 1e9
+          val (t, jobs, stages) = withJobCount(sc, s"inspect-$name-$r") {
+            val t0 = System.nanoTime()
+            fn(spark, dir).write.format("noop").mode("overwrite").save()
+            (System.nanoTime() - t0) / 1e9
+          }
           val n = compiles - c0
-          System.err.println(f"# $name rep$r $t%.2f compiles=$n")
-          Some((t, n))
+          System.err.println(
+            f"# $name rep$r $t%.2f compiles=$n jobs=$jobs stages=$stages")
+          Some(Rep(t, n, jobs, stages))
         } catch { case e: Throwable =>
           System.err.println(s"# $name FAILED $e")
           None
         }
       }.takeWhile(_.isDefined).flatten.toSeq
-      name -> (if (runs.size == reps) Some(runs.minBy(_._1)) else None)
+      name -> (if (runs.size == reps) Some(runs.minBy(_.sec)) else None)
     }
-    (results.collect { case (n, Some((t, _))) => n -> t },
-      results.collect { case (n, Some((_, c))) => n -> c },
+    (results.collect { case (n, Some(rep)) => n -> rep },
       results.collect { case (n, None) => n })
   }
 
@@ -212,16 +257,17 @@ object Inspect {
         val staged = stage(spark, a.sf, a.scale)
         println(s"# staged ${a.scale}x tables under $staged")
         val calib = Bench.calibrate(spark)
-        val (times, compiles, failed) =
+        val (timed, failed) =
           timeGates(spark, staged, names.map(n => n -> gate(n)), a.reps)
         def r2(v: Double) = math.rint(v * 100) / 100
-        val json = times.map { case (n, t) => s""""$n":${r2(t)}""" }.mkString("{", ",", "}")
-        val compilesJson = compiles.map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
+        def obj(f: Rep => Any) =
+          timed.map { case (n, rep) => s""""$n":${f(rep)}""" }.mkString("{", ",", "}")
         val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
         val line = s"""{"copies":${a.scale},"cpus":$cpus,""" +
           s""""calib_sec":${r2(calib)},"reps":${a.reps},""" +
-          s""""timed_action":"noop","gates":$json,"compiles":$compilesJson,""" +
-          s""""failed":$failedJson,"src":"${a.sf}"}"""
+          s""""timed_action":"noop","gates":${obj(r => r2(r.sec))},""" +
+          s""""compiles":${obj(_.compiles)},"jobs":${obj(_.jobs)},""" +
+          s""""stages":${obj(_.stages)},"failed":$failedJson,"src":"${a.sf}"}"""
         val out = a.out.getOrElse(s"SCALE${a.scale}X_c$cpus.json")
         java.nio.file.Files.write(java.nio.file.Paths.get(out), (line + "\n").getBytes("UTF-8"))
         println(line)

@@ -18,6 +18,9 @@ package object graftshim {
     * expression comes out of a FunctionRegistry builder. */
   def expressionTree(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter.apply(c.node)
+  /** Block until every event posted so far has reached the listeners. */
+  def awaitListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
   def ofRows(spark: SparkSession,
              plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

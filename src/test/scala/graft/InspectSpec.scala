@@ -6,7 +6,7 @@ import graft.tools.Inspect
 
 /** `Inspect`'s subcommands on one cheap gate, so the tool cannot rot
   * unseen: the census line format, the per-gate plan files, the timing
-  * loop's failed-gate rule and compile counter, and the shared argument
+  * loop's failed-gate rule and work counters, and the shared argument
   * parser. */
 class InspectSpec extends GraftSpec {
   test("census: one CENSUS line in the join-census format") {
@@ -28,14 +28,19 @@ class InspectSpec extends GraftSpec {
     val buildThrows: Inspect.Gate = (_, _) => throw new IllegalStateException("boom")
     val writeThrows: Inspect.Gate =
       (s, _) => s.range(3).selectExpr("raise_error('boom') AS x")
-    val (times, compiles, failed) = Inspect.timeGates(spark, sf, Seq(
+    val (timed, failed) = Inspect.timeGates(spark, sf, Seq(
       "ok" -> ok, "build_throws" -> buildThrows, "write_throws" -> writeThrows),
       reps = 2)
+    val times = timed.map { case (n, r) => n -> r.sec }
+    val compiles = timed.map { case (n, r) => n -> r.compiles }
     assert(times.map(_._1) == Seq("ok") && times.head._2 > 0)
     assert(failed == Seq("build_throws", "write_throws"))
     // rep 2 reuses rep 1's generated classes from Spark's class cache;
     // the faster rep is the counted one
     assert(compiles == Seq("ok" -> 0L))
+    // the noop write is one job of one stage; the counters see it
+    val rep = timed.head._2
+    assert(rep.jobs >= 1 && rep.stages >= 1, rep)
   }
 
   test("parse: gates positional or comma-separated; bad input rejected") {

@@ -316,4 +316,41 @@ class PlanShapeSpec extends GraftSpec {
     val n = e.count()
     assert(operators.Graph.doubled(e).count() == 2 * n)
   }
+
+  test("Iterate: every round plans over one checkpoint leaf, and the plan is as big in round 10 as in round 1") {
+    // persist + count() per round caches a round but keeps its lineage:
+    // round N's analyzed plan then carries rounds 1..N-1. Iterate's one
+    // eager checkpoint per round must hand the body a single LogicalRDD
+    // leaf every round, so the round plan cannot grow with N.
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val edges = (0 until 40).flatMap(i => Seq((i, (i + 1) % 40), (i, (i * 7 + 3) % 40)))
+      .distinct.toDF("src", "dst")
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val withDeg = edges.join(deg, "src").persist()
+    val init = deg.select(col("src").as("v"), lit(1.0).as("r")).localCheckpoint(true)
+    val inputs, rounds = scala.collection.mutable.ArrayBuffer[Int]()
+    def nodes(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect { case p => p }.size
+    val out = operators.Iterate(init, 10, Seq(withDeg)) { ranks =>
+      assert(ranks.queryExecution.analyzed.isInstanceOf[LogicalRDD],
+        ranks.queryExecution.analyzed.treeString)
+      inputs += nodes(ranks)
+      val next = withDeg
+        .join(ranks, withDeg("src") === ranks("v"))
+        .select(col("dst"), (col("r") / col("deg")).as("m"))
+        .groupBy(col("dst"))
+        .agg((lit(0.15) + lit(0.85) * sum(col("m"))).as("r"))
+        .select(col("dst").as("v"), col("r"))
+      rounds += nodes(next)
+      next
+    }
+    assert(inputs == Seq.fill(10)(1), inputs)
+    assert(rounds.size == 10 && rounds.last == rounds.head, rounds)
+    // same arithmetic as an unchecked loop: rank mass stays at N
+    assert(math.abs(out.agg(sum(col("r"))).head().getDouble(0) - 40.0) < 1e-9)
+    operators.Iterate.release(out)
+    operators.Iterate.release(init)
+  }
 }

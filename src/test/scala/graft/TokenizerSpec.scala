@@ -75,9 +75,14 @@ class TokenizerSpec extends GraftSpec {
     val df = corpus.zipWithIndex.map(_.swap).toDF("doc_id", "text")
       .repartition(3)
     val local = Tokenizer.trainBpe(df, "text", numMerges = 10)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val dist = Tokenizer.trainBpe(df, "text", numMerges = 10,
       driverMaxWords = 0) // force the distributed loop
     assert(local.nonEmpty && local == dist)
+    // every checkpoint the loop took (the initial one and one per four
+    // merges) is released before it returns
+    val kept = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(kept.isEmpty, s"distributed BPE kept persistent RDDs $kept")
   }
 
   test("trainBpe stops when no pair reaches minPairCount") {
